@@ -210,48 +210,6 @@ HEADLINE = [
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "50000"))
 BENCH_CYCLES = int(os.environ.get("SPARK_GRAFT_BENCH_CYCLES", "3"))
 
-# ---------------------------------------------------------------------------
-# FROZEN cross-round anchor (r04 VERDICT item 5) — DO NOT OPTIMIZE OR EDIT.
-#
-# The headline docs/sec showed a 1.6x same-code spread across sessions
-# (26.7k..42.4k in r04) because this sandbox is a shared-host VM: steal
-# context makes a single round's number adjudicable, but cross-ROUND
-# comparisons still conflated host speed with engine speed. This anchor is
-# a pure-Spark job that touches no engine code (range -> md5 -> 997-key
-# shuffle agg), so its wall time moves ONLY with host conditions. The
-# normalized throughput
-#
-#     docs_per_sec_norm = docs_per_sec * (anchor_sec / ANCHOR_NOMINAL_SEC)
-#
-# cancels host speed to first order: on a 2x-slower host the anchor takes
-# 2x longer and docs/sec halves, so the product recovers the quiet-host
-# figure. ANCHOR_NOMINAL_SEC is the anchor's quiet-host median measured IN
-# BENCH POSITION (after the full headline sweep, JVM warm — a fresh
-# session runs it ~2.5x slower, so standalone probes do NOT calibrate it):
-# first full run 2026-08-21 gave quiet cycles [0.744, 0.805] (the third
-# hit a logged 5927-jiffy steal burst, 11.5s — exactly the noise the
-# median exists to drop). Frozen at 0.8; docs_per_sec_norm reads in
-# quiet-host units. Compare docs_per_sec_norm across rounds; the raw
-# docs_per_sec stays on record.
-ANCHOR_NOMINAL_SEC = 0.8
-
-
-def _anchor_df(spark):
-    from pyspark.sql import functions as F
-
-    return (
-        spark.range(0, 8_000_000)
-        .select(
-            (F.col("id") % 997).alias("k"),
-            F.md5(F.col("id").cast("string")).alias("h"),
-        )
-        .groupBy("k")
-        .agg(F.count("*").alias("n"), F.min("h").alias("lo"),
-             F.max("h").alias("hi"))
-    )
-# ---------------------------------------------------------------------------
-
-
 def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -451,17 +409,6 @@ def main() -> None:
         finally:
             shutil.rmtree(e2e_dir, ignore_errors=True)
 
-        # frozen anchor LAST (same protocol), so its steal context reflects
-        # the same session the query timings were taken in; 5 cycles (it is
-        # sub-second) so one steal burst cannot drag the median
-        _materialize(_anchor_df(spark))  # warm-up
-        tm.time(
-            "anchor_frozen",
-            lambda: _materialize(_anchor_df(spark)),
-            cycles=max(BENCH_CYCLES, 5),
-        )
-        anchor_sec = tm.med.pop("anchor_frozen")  # not a headline query
-
         total = round(sum(tm.med.values()), 3)
         result = {
             "metric": f"headline query wall time ({len(HEADLINE)} registry "
@@ -480,16 +427,6 @@ def main() -> None:
             "docs_per_sec": round(BENCH_DOCS / extract_sec, 1),
             "docs_per_sec_best": round(
                 BENCH_DOCS / tm.best["extract_synthetic_pages"], 1
-            ),
-            # host-normalized trend signal (see ANCHOR_NOMINAL_SEC note):
-            # compare THIS across rounds, not the raw docs_per_sec
-            "anchor_sec": anchor_sec,
-            "anchor_runs": tm.runs["anchor_frozen"],
-            "anchor_steal_jiffies": tm.steal["anchor_frozen"],
-            "anchor_nominal_sec": ANCHOR_NOMINAL_SEC,
-            "docs_per_sec_norm": round(
-                (BENCH_DOCS / extract_sec)
-                * (anchor_sec / ANCHOR_NOMINAL_SEC), 1
             ),
             "cpus": int(cpus),
             "e2e_stage_sec": e2e_stages,

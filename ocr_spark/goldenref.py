@@ -478,6 +478,24 @@ def _pdf_reading_order(obj: dict) -> list[tuple]:
     return ordered[:MAX_BLOCKS]
 
 
+def _assemble(blocks: list[dict], finals: list[str]):
+    content = [b for b, f in zip(blocks, finals) if f == "content"]
+    extracted_text = SEP.join(b["text"] for b in content)
+    spans = []
+    pos = 0
+    for b in content:
+        spans.append(
+            {
+                "block_id": b["block_id"],
+                "start": pos,
+                "end": pos + b["text_len"],
+                "label": "content",
+            }
+        )
+        pos += b["text_len"] + len(SEP)
+    return content, extracted_text, spans
+
+
 def extract_document(url: str, html: bytes | None, lang: str | None) -> dict:
     """Extract one document per SPEC.md; returns the full `extracted` row."""
     stops = stopword_set(lang)
@@ -538,20 +556,7 @@ def extract_document(url: str, html: bytes | None, lang: str | None) -> dict:
     else:
         finals = _smooth([_classify(b) for b in blocks])
 
-    content = [b for b, f in zip(blocks, finals) if f == "content"]
-    extracted_text = SEP.join(b["text"] for b in content)
-    spans = []
-    pos = 0
-    for b in content:
-        spans.append(
-            {
-                "block_id": b["block_id"],
-                "start": pos,
-                "end": pos + b["text_len"],
-                "label": "content",
-            }
-        )
-        pos += b["text_len"] + len(SEP)
+    content, extracted_text, spans = _assemble(blocks, finals)
     return {
         "url": url,
         "lang": lang,

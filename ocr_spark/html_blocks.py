@@ -1,9 +1,12 @@
-"""Batch HTML/PDF-payload → block-array parser (engine side, SPEC.md §1–3).
+"""Batch HTML/PDF-payload → blocks → extracted text (SPEC.md §0–3).
 
 This is the hot Python path of the whole engine: it runs inside
 ``mapInArrow`` / scalar-iter ``pandas_udf`` workers over Arrow batches
-(SURVEY.md §2 ops 11, 57, 60). Everything downstream of it (classification,
-smoothing, span offsets, assembly) is pure JVM-side Spark SQL.
+(SURVEY.md §2 ops 11, 57, 60). The extraction tail — classification,
+smoothing, span offsets, assembly and the text hash (ops 13-17) — runs in
+the same per-document pass that parses the blocks (``extract_batch``), so
+the flagship extraction crosses into Python once and comes back with
+finished rows.
 
 It is one of TWO independent implementations of SPEC.md — the other is the
 frozen single-threaded ``ocr_spark.goldenref`` used to produce golden
@@ -19,13 +22,12 @@ pathological documents so a single page can never blow up a task.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
 from html.parser import HTMLParser
 
 from ocr_spark import spec
-
-_EDGE = ("good", "bad")  # classification edge labels (SPEC.md §2)
 
 # --- charset sniffing (SPEC.md §0 step 2, v2) --------------------------------
 # Real crawls carry a long legacy-encoded tail; decoding everything as UTF-8
@@ -419,19 +421,8 @@ _STOP_MEMOS: dict[int, dict[str, bool]] = {}
 _STOP_MEMO_MAX = 1_000_000
 
 
-def _make_block(
-    block_id: int,
-    tag: str,
-    depth: int,
-    text: str,
-    link_chars: int,
-    bbox: dict | None,
-    stopset: frozenset[str],
-) -> dict:
-    """Compute SPEC.md §2 features for one normalized text block."""
-    text_len = len(text)
-    words = text.split(" ")
-    n_words = len(words)
+def _n_stops(words: list[str], stopset: frozenset[str]) -> int:
+    """Count the tokens that are stopwords after SPEC.md §2 cleanup."""
     punct = spec.PUNCT
     sid = id(stopset)
     memo = _STOP_MEMOS.get(sid)
@@ -447,6 +438,22 @@ def _make_block(
                 memo[w] = hit
         if hit:
             n_stop += 1
+    return n_stop
+
+
+def _make_block(
+    block_id: int,
+    tag: str,
+    depth: int,
+    text: str,
+    link_chars: int,
+    bbox: dict | None,
+    stopset: frozenset[str],
+) -> dict:
+    """Compute SPEC.md §2 features for one normalized text block."""
+    text_len = len(text)
+    words = text.split(" ")
+    n_words = len(words)
     ld = link_chars / text_len
     return {
         "block_id": block_id,
@@ -458,7 +465,7 @@ def _make_block(
         "n_link_chars": link_chars,
         "link_density": ld if ld < 1.0 else 1.0,
         "char_density": text_len / n_words,
-        "stopword_density": n_stop / n_words,
+        "stopword_density": _n_stops(words, stopset) / n_words,
         "bbox": bbox,
     }
 
@@ -728,29 +735,6 @@ def parse_payload(
     )
 
 
-def parse_batch(
-    htmls: list[bytes | None], langs: list[str | None]
-) -> tuple[
-    list[str], list[list[dict]], list[list[dict]], list[dict],
-    list[list[dict]],
-]:
-    """Parse an Arrow batch of payloads; reuses one parser instance."""
-    parser = _BlockParser()
-    kinds: list[str] = []
-    blocks: list[list[dict]] = []
-    links: list[list[dict]] = []
-    metas: list[dict] = []
-    tables: list[list[dict]] = []
-    for html, lang in zip(htmls, langs):
-        k, b, ln, m, tb = parse_payload(html, lang, parser)
-        kinds.append(k)
-        blocks.append(b)
-        links.append(ln)
-        metas.append(m)
-        tables.append(tb)
-    return kinds, blocks, links, metas, tables
-
-
 _BLOCK_FIELDS = (
     "block_id", "tag", "depth", "text", "text_len", "n_words",
     "n_link_chars", "link_density", "char_density", "stopword_density",
@@ -787,9 +771,7 @@ def parse_batch_columnar(
     link_offsets: list[int] = [0]
     hrefs: list[str] = []
     anchors: list[str] = []
-    meta_cols: dict[str, list] = {
-        f: [] for f in ("title", "description", "canonical", "og_title")
-    }
+    meta_cols: dict[str, list] = {f: [] for f in _EMPTY_META}
     table_offsets: list[int] = [0]
     table_cols: dict[str, list] = {
         f: [] for f in ("table_id", "row_id", "cell_id", "header", "text")
@@ -801,20 +783,13 @@ def parse_batch_columnar(
     )
     bna = bbox_null.append
     n = 0
-    nl = 0
     nt = 0
     for html, lang in zip(htmls, langs):
         kind, blocks, links, meta, tabs = parse_payload(html, lang, parser)
         kinds.append(kind)
         n += len(blocks)
         offsets.append(n)
-        nl += len(links)
-        link_offsets.append(nl)
-        for lk in links:
-            hrefs.append(lk["href"])
-            anchors.append(lk["anchor"])
-        for f, vals in meta_cols.items():
-            vals.append(meta[f])
+        _add_links_meta(links, meta, link_offsets, hrefs, anchors, meta_cols)
         nt += len(tabs)
         table_offsets.append(nt)
         for tc in tabs:
@@ -835,3 +810,126 @@ def parse_batch_columnar(
         kinds, offsets, cols, bbox_null, link_offsets, hrefs, anchors,
         meta_cols, table_offsets, table_cols,
     )
+
+
+def _add_links_meta(links, meta, link_offsets, hrefs, anchors, meta_cols):
+    """Append one document's §5 outlinks and §6 metadata to flat columns."""
+    for lk in links:
+        hrefs.append(lk["href"])
+        anchors.append(lk["anchor"])
+    link_offsets.append(len(hrefs))
+    for f, vals in meta_cols.items():
+        vals.append(meta[f])
+
+
+# --- extraction tail (SPEC.md §2: classify, smooth, assemble) --------------
+
+
+def classify(b: dict) -> str:
+    """Context-free jusText label of one block (op 13)."""
+    if b["link_density"] > spec.MAX_LINK_DENSITY:
+        return "bad"
+    if b["text_len"] < spec.LEN_SHORT:
+        return "short"
+    if b["stopword_density"] >= spec.STOP_GOOD:
+        return "good"
+    if b["stopword_density"] >= spec.STOP_NEAR:
+        return "near"
+    return "bad"
+
+
+def smooth_labels(kind: str, blocks: list[dict]) -> list[str]:
+    """Final 'content'/'boilerplate' label per block (op 14).
+
+    An edge block ('good'/'bad') keeps its verdict; any other block is
+    content iff its nearest preceding or following edge is 'good'. One
+    forward and one backward pass, O(n) even for a MAX_BLOCKS page. PDF
+    payloads keep every block.
+    """
+    if kind == "pdf":
+        return ["content"] * len(blocks)
+    labs = [classify(b) for b in blocks]
+    keep = []
+    good = False  # the nearest edge so far is 'good' (no edge: not good)
+    for lab in labs:
+        if lab == "good":
+            good = True
+        elif lab == "bad":
+            good = False
+        keep.append(good)
+    good = False
+    for i in range(len(labs) - 1, -1, -1):
+        if labs[i] == "good":
+            good = True
+        elif labs[i] == "bad":
+            good = False
+        elif good:
+            keep[i] = True
+    return ["content" if k else "boilerplate" for k in keep]
+
+
+def assemble_doc(blocks: list[dict], labels: list[str]):
+    """Ops 15+17: ``(extracted_text, text_sha256, spans)`` — content blocks
+    joined by ``spec.SEP``, the hex SHA-256 of its UTF-8 bytes, and one
+    ``(block_id, start, end)`` character span per content block."""
+    parts = []
+    spans = []
+    pos = 0
+    for b, lab in zip(blocks, labels):
+        if lab == "content":
+            end = pos + b["text_len"]
+            spans.append((b["block_id"], pos, end))
+            parts.append(b["text"])
+            pos = end + len(spec.SEP)
+    text = spec.SEP.join(parts)
+    return text, hashlib.sha256(text.encode("utf-8")).hexdigest(), spans
+
+
+def recover_lang(blocks: list[dict]) -> str:
+    """Language of an untagged page: the ``spec.STOPWORDS`` list with the
+    most hits among the space-split tokens of ALL its blocks (a token hits
+    when its lowercase form is listed); ties, no hits included, go to the
+    first list in ``spec.STOPWORDS`` order."""
+    hits = dict.fromkeys(spec.STOPWORDS, 0)
+    for b in blocks:
+        for w in b["text"].split(" "):
+            lw = w.lower()
+            for lg, ws in spec.STOPWORDS.items():
+                if lw in ws:
+                    hits[lg] += 1
+    return max(hits, key=hits.__getitem__)
+
+
+def extract_batch(
+    htmls: list[bytes | None], langs: list[str | None], langid: bool = False
+):
+    """Parse AND finish a batch of payloads in one pass (SURVEY §3.2).
+
+    Returns ``(langs, n_blocks, tails, link_offsets, hrefs, anchors,
+    meta_cols)``: per document its output lang, block count and
+    :func:`assemble_doc` result, then outlinks and metadata as flat
+    columns like :func:`parse_batch_columnar`'s. ``langid=True`` gives an
+    untagged page :func:`recover_lang`'s language and re-scores its blocks'
+    stopword densities against that list before classification.
+    """
+    parser = _BlockParser()
+    out_langs = []
+    n_blocks = []
+    tails = []
+    link_offsets = [0]
+    hrefs: list[str] = []
+    anchors: list[str] = []
+    meta_cols: dict[str, list] = {f: [] for f in _EMPTY_META}
+    for html, lang in zip(htmls, langs):
+        kind, blocks, links, meta, _ = parse_payload(html, lang, parser)
+        if langid and lang is None:
+            lang = recover_lang(blocks)
+            stopset = spec.stopword_set(lang)
+            for b in blocks:
+                n_stop = _n_stops(b["text"].split(" "), stopset)
+                b["stopword_density"] = n_stop / b["n_words"]
+        out_langs.append(lang)
+        n_blocks.append(len(blocks))
+        tails.append(assemble_doc(blocks, smooth_labels(kind, blocks)))
+        _add_links_meta(links, meta, link_offsets, hrefs, anchors, meta_cols)
+    return out_langs, n_blocks, tails, link_offsets, hrefs, anchors, meta_cols

@@ -1,9 +1,9 @@
 """Exploded (op-by-op) formulation of the extraction pipeline.
 
-The production path (:mod:`ocr_spark.operators.extract`) fuses ops 12-17 into
-per-document array expressions — no shuffle. This module is the same SPEC.md
-semantics written as the individual SURVEY.md §2 operators over one-row-per-
-block DataFrames:
+The production path (:mod:`ocr_spark.operators.extract`) runs ops 13-17 per
+document in Python, inside its single parse hop — no shuffle. This module is
+the same SPEC.md semantics written in JVM column expressions, as the
+individual SURVEY.md §2 operators over one-row-per-block DataFrames:
 
     op 12 posexplode_outer -> op 13 classify (column exprs) ->
     op 14 smoothing via url-window last/first(ignorenulls) ->
@@ -13,7 +13,8 @@ block DataFrames:
 It exists (a) as the reference shape for users who need block-level rows
 (e.g. to join per-block features), and (b) as an independent implementation
 whose output must be byte-identical to the fused path — tests/test_exploded.py
-asserts equality on the full fixture corpus. It costs two shuffles (the
+asserts equality on the full fixture corpus, which cross-checks the Python
+tail against a JVM formulation. It costs two shuffles (the
 window and the groupBy), which is exactly why the fused form is the default.
 
 Document identity is (url, warc_ts): recrawls of a url are distinct docs.
@@ -21,19 +22,25 @@ Document identity is (url, warc_ts): recrawls of a url are distinct docs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_spark import spec
-from ocr_spark.operators.extract import (
-    SPANS_DDL,
-    classify_expr,
-    parse_pages,
-    with_part_id,
-)
+from ocr_spark.operators.extract import SPANS_DDL, parse_pages, with_part_id
 
 _EDGE = ("good", "bad")
 _SEP_LEN = len(spec.SEP)
+
+
+def classify_expr(block: Column) -> Column:
+    """SURVEY §2 op 13: context-free jusText labels — pure column exprs."""
+    return (
+        F.when(block["link_density"] > F.lit(spec.MAX_LINK_DENSITY), "bad")
+        .when(block["text_len"] < F.lit(spec.LEN_SHORT), "short")
+        .when(block["stopword_density"] >= F.lit(spec.STOP_GOOD), "good")
+        .when(block["stopword_density"] >= F.lit(spec.STOP_NEAR), "near")
+        .otherwise("bad")
+    )
 
 
 def explode_blocks(parsed: DataFrame) -> DataFrame:
@@ -57,7 +64,8 @@ def smooth_exploded(rows: DataFrame) -> DataFrame:
 
     A short/near block becomes content iff the nearest preceding OR nearest
     following edge-labelled (good/bad) block is good — same rule as the
-    fused ``_SMOOTH_SQL``. PDF payloads are all content.
+    fused path's ``html_blocks.smooth_labels``. PDF payloads are all
+    content.
     """
     doc = Window.partitionBy("url", "warc_ts")
     before = doc.orderBy("pos").rowsBetween(Window.unboundedPreceding, -1)

@@ -2,38 +2,50 @@
 
 Pipeline shape (design point: 100 TB / 10^12 docs on 1000 executors):
 
-    pages ──mapInArrow(parse)──► blocks array ──JVM array HOFs──► extracted
+    pages ──mapInArrow(parse + tail)──► extracted rows ──Project──► product
 
-The single JVM→Python Arrow hop is the parse (SURVEY §2 op 11 / op 60);
-classification (op 13), jusText smoothing (op 14), span offsets (op 15) and
-assembly (op 17) are pure Spark SQL **higher-order functions over the
-per-document block array** — they evaluate JVM-side (array HOFs are
-interpreted expressions, not codegen'd, but never cross into Python), need
-NO shuffle, and make the whole extraction embarrassingly parallel: the plan has
-no wide dependency, so scaling efficiency N→4N executors is bounded only by
-input-split balance, not by shuffle or skew. (An equivalent
-explode→window→groupBy formulation of ops 12–17 lives in
-``ocr_spark.operators.exploded`` and is property-tested to produce identical
-bytes; this fused form is the production path.)
+The single JVM→Python Arrow hop does the whole per-document job: the parse
+(SURVEY §2 op 11 / op 60), classification (op 13), jusText smoothing
+(op 14), span offsets (op 15), assembly and the text hash (op 17), all in
+the Python loop that already visits every block
+(``html_blocks.extract_batch``). It comes back with finished rows plus the
+outlinks and metadata, so every text, link and meta sink can be fed from one
+pass. The plan needs NO shuffle and makes the whole extraction
+embarrassingly parallel: scaling efficiency N→4N executors is bounded only
+by input-split balance, not by shuffle or skew. (An equivalent
+explode→window→groupBy formulation of ops 12–17 in JVM column expressions
+lives in ``ocr_spark.operators.exploded`` and is tested to produce
+identical bytes.)
 
-Per-document work is near-linear in n_blocks: classification is one
-transform, smoothing is segment-wise (O(#edges) lambda evals + O(n) output
-construction), and span offsets use log-doubling prefix sums — the round-1
-O(n_blocks²) slice-scan forms were rewritten after a MAX_BLOCKS link-farm
-corpus measured them dominating the stage (see bench.py
-extract_maxblocks_256).
+The tail is O(n_blocks) per document (one forward and one backward
+smoothing pass, a running span offset), so a MAX_BLOCKS link farm costs no
+more per block than a short page.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark import spec
+from ocr_spark.html_blocks import (
+    assemble_doc,
+    extract_batch,
+    parse_batch_columnar,
+    smooth_labels,
+)
 from ocr_spark.schemas import block_pa_type
+
+_LINKS_DDL = "array<struct<href: string, anchor: string>>"
+_META_DDL = (
+    "struct<title: string, description: string, canonical: string,"
+    " og_title: string>"
+)
+_META_FIELDS = ("title", "description", "canonical", "og_title")
 
 PARSED_DDL = (
     "url string, warc_ts timestamp, lang string, part_id int,"
@@ -43,10 +55,9 @@ PARSED_DDL = (
     " link_density: double, char_density: double, stopword_density: double,"
     " bbox: struct<x0: double, y0: double, x1: double, y1: double>>>,"
     # SPEC.md §5 outlinks; link_id is the array position (posexplode emits it)
-    " links array<struct<href: string, anchor: string>>,"
+    f" links {_LINKS_DDL},"
     # SPEC.md §6 page metadata (WAT-record head fields; empty string = unset)
-    " meta struct<title: string, description: string, canonical: string,"
-    " og_title: string>,"
+    f" meta {_META_DDL},"
     # SPEC.md §7 table-cell fragments, document order within each page
     " tables array<struct<table_id: int, row_id: int, cell_id: int,"
     " header: boolean, text: string>>"
@@ -56,13 +67,28 @@ SPANS_DDL = (
     "array<struct<block_id: int, start: bigint, `end`: bigint, label: string>>"
 )
 
+# the fused hop's output: the EXTRACTED_SCHEMA columns plus the per-row
+# input size (lineage) and the §5/§6 side products; no blocks array
+EXTRACT_DDL = (
+    "url string, warc_ts timestamp, lang string, part_id int,"
+    " bytes_in bigint, extracted_text string,"
+    f" spans {SPANS_DDL}, text_sha256 string, n_blocks int,"
+    f" n_content_blocks int, links {_LINKS_DDL}, meta {_META_DDL}"
+)
+_EXTRACT_COLS = [
+    "url", "warc_ts", "lang", "part_id", "bytes_in", "extracted_text",
+    "spans", "text_sha256", "n_blocks", "n_content_blocks", "links", "meta",
+]
+
 DEFAULT_NUM_PARTS = 64  # resume/lineage granularity (part_id space)
 DEFAULT_SALT_N = 16  # salt fan-out for hot hosts when repartitioning
 
 
-def _make_arrow_parser(input_counter=None):
-    """Build the mapInArrow worker fn; ``input_counter`` (optional) is a
-    dict-valued Spark accumulator incremented at the parse boundary with
+def _arrow_task(one_batch, input_counter=None):
+    """Build a mapInArrow worker fn applying ``one_batch`` to every batch.
+
+    ``input_counter`` (optional) is a dict-valued Spark accumulator
+    incremented at the parse boundary with
     ``{(stage_id, partition_id, attempt): {part_id: n_docs}}`` — an
     input-side document count that is independent of the output read-back,
     so lineage can record input_rows separately from output_rows.
@@ -72,13 +98,7 @@ def _make_arrow_parser(input_counter=None):
     attempt makes the count exact on a real cluster (the round-2 version
     summed raw contributions and could over-count under retries)."""
 
-    def _parse_arrow_batches(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        from ocr_spark.html_blocks import parse_batch_columnar
-
-        block_type = block_pa_type()
-        bbox_type = block_type.field("bbox").type
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         task_key = None
         if input_counter is not None:
             from pyspark import TaskContext
@@ -91,8 +111,6 @@ def _make_arrow_parser(input_counter=None):
             )
         for batch in batches:
             if input_counter is not None:
-                import pyarrow.compute as pc
-
                 vc = pc.value_counts(batch.column("part_id"))
                 input_counter.add(
                     {
@@ -102,33 +120,110 @@ def _make_arrow_parser(input_counter=None):
                         }
                     }
                 )
-            yield _parse_one_batch(batch, block_type, bbox_type)
+            yield one_batch(batch)
 
-    return _parse_arrow_batches
+    return _run
 
 
-def _parse_one_batch(batch, block_type, bbox_type) -> pa.RecordBatch:
-    """html bytes → block structs for one Arrow batch.
+def _bytes_in(batch: pa.RecordBatch) -> pa.Array:
+    return pc.coalesce(
+        pc.cast(pc.binary_length(batch.column("html")), pa.int64()),
+        pa.scalar(0, type=pa.int64()),
+    )
 
-    Runs on executors; imports resolved via --py-files/driver-shipped package.
+
+def _links_meta_arrays(link_offsets, hrefs, anchors, meta_cols) -> list:
+    """Flat §5/§6 columns → the ``links`` and ``meta`` Arrow arrays."""
+    links_struct = pa.StructArray.from_arrays(
+        [
+            pa.array(hrefs, type=pa.string()),
+            pa.array(anchors, type=pa.string()),
+        ],
+        names=["href", "anchor"],
+    )
+    return [
+        pa.ListArray.from_arrays(
+            pa.array(link_offsets, type=pa.int32()), links_struct
+        ),
+        pa.StructArray.from_arrays(
+            [pa.array(meta_cols[f], type=pa.string()) for f in _META_FIELDS],
+            names=list(_META_FIELDS),
+        ),
+    ]
+
+
+def _text_arrays(tails, n_blocks) -> list:
+    """Per-document ``assemble_doc`` results → the ``extracted_text``,
+    ``spans``, ``text_sha256``, ``n_blocks`` and ``n_content_blocks``
+    Arrow arrays."""
+    offsets = [0]
+    ids: list[int] = []
+    starts: list[int] = []
+    ends: list[int] = []
+    for _, _, spans in tails:
+        for block_id, start, end in spans:
+            ids.append(block_id)
+            starts.append(start)
+            ends.append(end)
+        offsets.append(len(ids))
+    spans_struct = pa.StructArray.from_arrays(
+        [
+            pa.array(ids, type=pa.int32()),
+            pa.array(starts, type=pa.int64()),
+            pa.array(ends, type=pa.int64()),
+            pa.repeat(pa.scalar("content"), len(ids)),
+        ],
+        names=["block_id", "start", "end", "label"],
+    )
+    return [
+        pa.array([t[0] for t in tails], type=pa.string()),
+        pa.ListArray.from_arrays(
+            pa.array(offsets, type=pa.int32()), spans_struct
+        ),
+        pa.array([t[1] for t in tails], type=pa.string()),
+        pa.array(n_blocks, type=pa.int32()),
+        pa.array([len(t[2]) for t in tails], type=pa.int32()),
+    ]
+
+
+def _extract_one_batch(batch: pa.RecordBatch, langid: bool) -> pa.RecordBatch:
+    """html bytes → finished extraction rows for one Arrow batch.
+
     Output arrays are built columnar (flat primitive columns → StructArray →
     ListArray) — pa.array over list-of-dicts walks Python objects per value
     and measured ~2x slower for the whole stage.
     """
-    import pyarrow.compute as pc
+    langs, n_blocks, tails, link_offsets, hrefs, anchors, meta_cols = (
+        extract_batch(
+            batch.column("html").to_pylist(),
+            batch.column("lang").to_pylist(),
+            langid,
+        )
+    )
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("url"),
+            batch.column("warc_ts"),
+            pa.array(langs, type=pa.string()),
+            batch.column("part_id"),
+            _bytes_in(batch),
+            *_text_arrays(tails, n_blocks),
+            *_links_meta_arrays(link_offsets, hrefs, anchors, meta_cols),
+        ],
+        names=_EXTRACT_COLS,
+    )
 
-    from ocr_spark.html_blocks import parse_batch_columnar
 
-    htmls = batch.column("html").to_pylist()
-    langs = batch.column("lang").to_pylist()
+def _parse_one_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """html bytes → block structs (plus links, meta, tables) for one Arrow
+    batch, built columnar like :func:`_extract_one_batch`."""
+    block_type = block_pa_type()
+    bbox_type = block_type.field("bbox").type
     (
         kinds, offsets, cols, bbox_null, link_offsets, hrefs, anchors,
         meta_cols, table_offsets, table_cols,
-    ) = parse_batch_columnar(htmls, langs)
-
-    bytes_in = pc.coalesce(
-        pc.cast(pc.binary_length(batch.column("html")), pa.int64()),
-        pa.scalar(0, type=pa.int64()),
+    ) = parse_batch_columnar(
+        batch.column("html").to_pylist(), batch.column("lang").to_pylist()
     )
     bbox_arr = pa.StructArray.from_arrays(
         [
@@ -149,23 +244,6 @@ def _parse_one_batch(batch, block_type, bbox_type) -> pa.RecordBatch:
     blocks_arr = pa.ListArray.from_arrays(
         pa.array(offsets, type=pa.int32()), struct_arr
     )
-    links_struct = pa.StructArray.from_arrays(
-        [
-            pa.array(hrefs, type=pa.string()),
-            pa.array(anchors, type=pa.string()),
-        ],
-        names=["href", "anchor"],
-    )
-    links_arr = pa.ListArray.from_arrays(
-        pa.array(link_offsets, type=pa.int32()), links_struct
-    )
-    meta_arr = pa.StructArray.from_arrays(
-        [
-            pa.array(meta_cols[f], type=pa.string())
-            for f in ("title", "description", "canonical", "og_title")
-        ],
-        names=["title", "description", "canonical", "og_title"],
-    )
     cells_struct = pa.StructArray.from_arrays(
         [
             pa.array(table_cols["table_id"], type=pa.int32()),
@@ -185,11 +263,10 @@ def _parse_one_batch(batch, block_type, bbox_type) -> pa.RecordBatch:
             batch.column("warc_ts"),
             batch.column("lang"),
             batch.column("part_id"),
-            bytes_in,
+            _bytes_in(batch),
             pa.array(kinds, type=pa.string()),
             blocks_arr,
-            links_arr,
-            meta_arr,
+            *_links_meta_arrays(link_offsets, hrefs, anchors, meta_cols),
             tables_arr,
         ],
         names=[
@@ -226,163 +303,51 @@ def salted(df: DataFrame, partitions: int, salt_n: int = DEFAULT_SALT_N) -> Data
     )
 
 
-def parse_pages(
-    df: DataFrame,
-    num_parts: int = DEFAULT_NUM_PARTS,
-    input_counter=None,
+def _parse_input(
+    df: DataFrame, num_parts: int, repartition: int | None = None
 ) -> DataFrame:
-    """SURVEY §2 op 11 (+60): pages → (url, warc_ts, lang, part_id, kind, blocks)."""
+    """The columns the Python hop reads, with part_id derived if absent and
+    the optional salted exchange in front."""
     if "part_id" not in df.columns:
         df = with_part_id(df, num_parts)
-    narrow = df.select("url", "warc_ts", "lang", "part_id", "html")
-    return narrow.mapInArrow(_make_arrow_parser(input_counter), PARSED_DDL)
+    if repartition:
+        df = salted(df, repartition)
+    return df.select("url", "warc_ts", "lang", "part_id", "html")
 
 
-def classify_expr(block: Column) -> Column:
-    """SURVEY §2 op 13: context-free jusText labels — pure column exprs."""
-    return (
-        F.when(block["link_density"] > F.lit(spec.MAX_LINK_DENSITY), "bad")
-        .when(block["text_len"] < F.lit(spec.LEN_SHORT), "short")
-        .when(block["stopword_density"] >= F.lit(spec.STOP_GOOD), "good")
-        .when(block["stopword_density"] >= F.lit(spec.STOP_NEAR), "near")
-        .otherwise("bad")
+def parse_pages(df: DataFrame, num_parts: int = DEFAULT_NUM_PARTS) -> DataFrame:
+    """SURVEY §2 op 11 (+60): pages → (url, warc_ts, lang, part_id,
+    bytes_in, kind, blocks, links, meta, tables) — the block-level product
+    for consumers that need blocks, cells or links rather than text."""
+    return _parse_input(df, num_parts).mapInArrow(
+        _arrow_task(_parse_one_batch), PARSED_DDL
     )
 
 
-# Smoothing pass (op 14) over a labels array `labs`: each non-edge block
-# inherits 'content' iff its nearest preceding OR following edge label
-# ('good'/'bad') is 'good'. Equivalently, BETWEEN two consecutive edges every
-# non-edge block gets the same verdict — so instead of a per-element
-# nearest-edge lookup (the round-1 slice+filter+reverse was O(n²) interpreted
-# lambda evals per document; a MAX_BLOCKS link-farm page cost 2000² HOF evals
-# and could drag a whole stage), the output is assembled SEGMENT-WISE:
-# extract the edge positions/labels (one O(n) pass each), then emit
-# [gap-fill, edge, gap-fill, edge, ..., tail-fill] via array_repeat + flatten
-# — O(#edges) lambda evaluations and O(n) output construction. (An
-# aggregate() running-state scan was tried first and measured far SLOWER
-# than even the quadratic form: per-step array append inside aggregate
-# re-copies the accumulator array through the interpreted-projection path.)
-#
-# Boundary semantics (same as round 1): before the first edge the preceding
-# label is NULL, after the last the following is NULL; three-valued OR makes
-# NULL = 'good' count as false, ELSE = 'boilerplate'. No edges -> all
-# 'boilerplate'. PDF payloads keep every block.
-_SMOOTH_SQL = """
-CASE WHEN kind = 'pdf' THEN transform(labs, l -> 'content')
-WHEN size(_eidx) = 0 THEN transform(labs, l -> 'boilerplate')
-ELSE concat(
-  flatten(transform(sequence(0, size(_eidx) - 1), j ->
-    concat(
-      array_repeat(
-        IF(IF(j = 0, CAST(NULL AS STRING), element_at(_elab, j)) = 'good'
-           OR element_at(_elab, j + 1) = 'good',
-           'content', 'boilerplate'),
-        element_at(_eidx, j + 1) - IF(j = 0, 0, element_at(_eidx, j) + 1)),
-      array(IF(element_at(_elab, j + 1) = 'good', 'content', 'boilerplate'))
-    ))),
-  array_repeat(
-    IF(element_at(_elab, size(_elab)) = 'good', 'content', 'boilerplate'),
-    size(labs) - 1 - element_at(_eidx, size(_eidx))))
-END
-"""
-
-_EDGE_IDX_SQL = (
-    "filter(transform(labs, (l, i) -> IF(l IN ('good', 'bad'), i, -1)),"
-    " x -> x >= 0)"
-)
-_EDGE_LAB_SQL = "filter(labs, l -> l IN ('good', 'bad'))"
-
-
-def label_blocks(parsed: DataFrame) -> DataFrame:
-    """Ops 13+14 fused: adds `labels: array<string>` aligned with `blocks`."""
-    return (
-        parsed.withColumn("labs", F.transform("blocks", classify_expr))
-        .withColumn("_eidx", F.expr(_EDGE_IDX_SQL))
-        .withColumn("_elab", F.expr(_EDGE_LAB_SQL))
-        .withColumn("labels", F.expr(_SMOOTH_SQL))
-        .drop("labs", "_eidx", "_elab")
-    )
-
-
-def assemble(
-    labeled: DataFrame, stats: bool = False, keep_meta: bool = False
+def extract_rows(
+    df: DataFrame,
+    num_parts: int = DEFAULT_NUM_PARTS,
+    repartition: int | None = None,
+    input_counter=None,
+    langid: bool = False,
 ) -> DataFrame:
-    """Ops 15+17: span offsets + byte-identical assembly, all JVM-side.
-
-    Span start offsets are a prefix sum of content-block strides
-    (text_len + separator). An aggregate() building the spans array by
-    appending per element re-copies the growing accumulator array through
-    the interpreted projection every step — O(n²) work that made a
-    MAX_BLOCKS (2000-block) page cost ~35 ms in this stage alone. The
-    prefix sum is instead computed with ceil(log2(MAX_BLOCKS)) Hillis-Steele
-    doubling passes (p[i] += p[i - 2^k]), each one O(n) element_at lookups,
-    then the spans array is a single zip_with over (content, prefix).
-
-    ``stats=True`` keeps the per-row ``bytes_in`` column (input payload size)
-    for the lineage aggregation in :mod:`ocr_spark.operators.runner`.
-    """
-    import math
-
-    sep_len = len(spec.SEP)
-    content = F.transform(
-        F.filter(
-            F.arrays_zip("blocks", "labels"),
-            lambda z: z["labels"] == F.lit("content"),
-        ),
-        lambda z: z["blocks"],
-    )
-    df = labeled.withColumn("content", content)
-    # per-block stride; the IF(size=0, ...) guards Spark's descending
-    # sequence(1, 0) under ANSI mode (same pitfall as the shingle expr)
-    df = df.withColumn(
-        "_st",
-        F.expr(
-            f"transform(content, b -> CAST(b.text_len + {sep_len} AS BIGINT))"
-        ),
-    )
-    col = "_st"
-    for k in range(max(1, math.ceil(math.log2(spec.MAX_BLOCKS)))):
-        shift = 1 << k
-        nxt = f"_p{k}"
-        df = df.withColumn(
-            nxt,
-            F.expr(
-                f"IF(size({col}) = 0, {col},"
-                f" transform(sequence(1, size({col})),"
-                f" i -> element_at({col}, i)"
-                f" + IF(i > {shift}, element_at({col}, i - {shift}), 0L)))"
-            ),
-        )
-        col = nxt
-    # inclusive prefix P[i] = sum of strides 1..i;
-    # start_i = P[i] - stride_i, end_i = start_i + text_len = P[i] - sep
-    spans = F.expr(
-        f"""zip_with(content, {col}, (b, p) -> named_struct(
-  'block_id', b.block_id,
-  'start', p - CAST(b.text_len + {sep_len} AS BIGINT),
-  'end', p - {sep_len}L,
-  'label', 'content'))"""
+    """pages → finished rows (``EXTRACT_DDL``) in ONE mapInArrow hop: the
+    parse, the extraction tail, the outlinks and the metadata of each page.
+    ``langid=True`` recovers the language of untagged pages in the same
+    pass (see :func:`extract_pages_langid`)."""
+    task = functools.partial(_extract_one_batch, langid=langid)
+    return _parse_input(df, num_parts, repartition).mapInArrow(
+        _arrow_task(task, input_counter), EXTRACT_DDL
     )
 
-    # two-step projection: text is materialized once and the sha reuses the
-    # column (CollapseProject keeps multi-referenced non-cheap aliases
-    # un-inlined, so the interpreted array_join/transform runs once per row,
-    # not twice)
-    joined = df.select(
-        "url",
-        "warc_ts",
-        "lang",
-        *(["bytes_in"] if stats else []),
-        *(["meta"] if keep_meta else []),
-        F.array_join(
-            F.transform("content", lambda b: b["text"]), spec.SEP
-        ).alias("extracted_text"),
-        spans.alias("spans"),
-        F.size("blocks").alias("n_blocks"),
-        F.size("content").alias("n_content_blocks"),
-        "part_id",
-    )
-    return joined.select(
+
+def select_extracted(
+    rows: DataFrame, stats: bool = False, keep_meta: bool = False
+) -> DataFrame:
+    """The extracted product (EXTRACTED_SCHEMA column order) from
+    :func:`extract_rows` output; ``stats`` keeps ``bytes_in`` and
+    ``keep_meta`` keeps the §6 ``meta`` struct."""
+    return rows.select(
         "url",
         "warc_ts",
         "lang",
@@ -390,12 +355,99 @@ def assemble(
         *(["meta"] if keep_meta else []),
         "extracted_text",
         "spans",
-        F.sha2(F.coalesce(F.col("extracted_text"), F.lit("")), 256).alias(
-            "text_sha256"
-        ),
+        "text_sha256",
         "n_blocks",
         "n_content_blocks",
         "part_id",
+    )
+
+
+def _label_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        labels = [
+            smooth_labels(kind, blocks)
+            for kind, blocks in zip(
+                batch.column("kind").to_pylist(),
+                batch.column("blocks").to_pylist(),
+            )
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [*batch.columns, pa.array(labels, type=pa.list_(pa.string()))],
+            names=[*batch.schema.names, "labels"],
+        )
+
+
+def label_blocks(parsed: DataFrame) -> DataFrame:
+    """Ops 13+14 alone over a :func:`parse_pages` frame: adds
+    ``labels: array<string>`` aligned with ``blocks``. The same Python tail
+    as the fused extraction, which runs it inside the parse pass; this
+    separate hop exists to time and inspect the step by itself."""
+    return parsed.mapInArrow(
+        _label_batches, PARSED_DDL + ", labels array<string>"
+    )
+
+
+def _assemble_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        blocks = batch.column("blocks").to_pylist()
+        tails = [
+            assemble_doc(b, labels)
+            for b, labels in zip(blocks, batch.column("labels").to_pylist())
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [
+                *(batch.column(c) for c in _EXTRACT_COLS[:5]),
+                *_text_arrays(tails, [len(b) for b in blocks]),
+                batch.column("links"),
+                batch.column("meta"),
+            ],
+            names=_EXTRACT_COLS,
+        )
+
+
+def assemble(
+    labeled: DataFrame, stats: bool = False, keep_meta: bool = False
+) -> DataFrame:
+    """Ops 15+17 alone over a :func:`label_blocks` frame: span offsets,
+    byte-identical assembly and the text hash, by the same Python tail as
+    the fused extraction (see :func:`label_blocks`). ``stats``/``keep_meta``
+    as in :func:`select_extracted`."""
+    return select_extracted(
+        labeled.mapInArrow(_assemble_batches, EXTRACT_DDL),
+        stats=stats, keep_meta=keep_meta,
+    )
+
+
+def outlink_rows(frame: DataFrame) -> DataFrame:
+    """SPEC.md §5 rows (url, warc_ts, part_id, link_id, href, anchor) from
+    any frame carrying a ``links`` array (parse or fused extraction)."""
+    return frame.select(
+        "url",
+        "warc_ts",
+        "part_id",
+        F.posexplode("links").alias("link_id", "_l"),
+    ).select(
+        "url",
+        "warc_ts",
+        "part_id",
+        "link_id",
+        F.col("_l.href").alias("href"),
+        F.col("_l.anchor").alias("anchor"),
+    )
+
+
+def metadata_rows(frame: DataFrame) -> DataFrame:
+    """SPEC.md §6 rows (url, warc_ts, part_id + the four meta fields) from
+    any frame carrying the ``meta`` struct."""
+    return frame.select(
+        "url",
+        "warc_ts",
+        "part_id",
+        *(F.col(f"meta.{f}").alias(f) for f in _META_FIELDS),
     )
 
 
@@ -411,20 +463,7 @@ def extract_outlinks(
     extraction: one mapInArrow hop, then a JVM-side posexplode — narrow
     end-to-end, no shuffle.
     """
-    parsed = parse_pages(df, num_parts)
-    return parsed.select(
-        "url",
-        "warc_ts",
-        "part_id",
-        F.posexplode("links").alias("link_id", "_l"),
-    ).select(
-        "url",
-        "warc_ts",
-        "part_id",
-        "link_id",
-        F.col("_l.href").alias("href"),
-        F.col("_l.anchor").alias("anchor"),
-    )
+    return outlink_rows(parse_pages(df, num_parts))
 
 
 def extract_tables(
@@ -466,56 +505,7 @@ def extract_metadata(
     og:title — empty string = unset). Same plan shape as extraction: one
     mapInArrow hop then a JVM projection — narrow end-to-end, no shuffle.
     """
-    parsed = parse_pages(df, num_parts)
-    return parsed.select(
-        "url",
-        "warc_ts",
-        "part_id",
-        F.col("meta.title").alias("title"),
-        F.col("meta.description").alias("description"),
-        F.col("meta.canonical").alias("canonical"),
-        F.col("meta.og_title").alias("og_title"),
-    )
-
-
-# --- language-recovering extraction (untagged crawls) -------------------------------
-# WARC archives carry no language tag, but SPEC §2's stopword features are
-# language-keyed: parsing a NULL-lang page scores its blocks against the
-# DEFAULT_LANG list, so a German page's perfectly good paragraphs classify
-# as boilerplate and the page extracts empty. The production answer (the
-# same move CCNet makes before its stoplist-dependent stages) is ONE parse,
-# then: (1) predict the language from the FULL block text (content and
-# boilerplate alike — langid needs all the evidence), (2) re-score each
-# block's stopword_density against the recovered language's frozen list —
-# a pure JVM array HOF over the already-parsed block structs, no second
-# Python crossing — and (3) classify/smooth/assemble exactly as before.
-# Pages that arrived with a tag are untouched (density already right).
-
-_SD_PUNCT_SQL = spec.PUNCT.replace("'", "''")
-_STOPMAP_EXPR = "map(" + ", ".join(
-    "'{lg}', array({ws})".format(
-        lg=lg, ws=", ".join(f"'{w}'" for w in sorted(ws))
-    )
-    for lg, ws in spec.STOPWORDS.items()
-) + ")"
-_EN_STOPS_EXPR = "array(" + ", ".join(
-    f"'{w}'" for w in sorted(spec.STOPWORDS["en"])
-) + ")"
-# rewrite the blocks array with densities re-scored against the (possibly
-# recovered) lang column; all other fields carried through verbatim
-_RESCORE_BLOCKS_SQL = f"""
-transform(blocks, b -> named_struct(
-  'block_id', b.block_id, 'tag', b.tag, 'depth', b.depth, 'text', b.text,
-  'text_len', b.text_len, 'n_words', b.n_words,
-  'n_link_chars', b.n_link_chars, 'link_density', b.link_density,
-  'char_density', b.char_density,
-  'stopword_density',
-    CAST(size(filter(split(b.text, ' '), w_ -> array_contains(
-      coalesce(element_at({_STOPMAP_EXPR}, lang), {_EN_STOPS_EXPR}),
-      trim(BOTH '{_SD_PUNCT_SQL}' FROM lower(w_))))) AS DOUBLE)
-    / b.n_words,
-  'bbox', b.bbox))
-"""
+    return metadata_rows(parse_pages(df, num_parts))
 
 
 def extract_pages_langid(
@@ -524,32 +514,23 @@ def extract_pages_langid(
     stats: bool = False,
     input_counter=None,
 ) -> DataFrame:
-    """Extraction for untagged crawls: recover ``lang`` (stopword-argmax
-    over the full block text), re-score block stopword densities against
-    the recovered list, then classify/smooth/assemble. One mapInArrow hop,
-    still shuffle-free; rows that arrived with a lang keep their original
-    densities and tag. The output ``lang`` column is the recovered one."""
-    from ocr_spark.queries_textml import with_langid
+    """Extraction for untagged crawls (WARC archives carry no language tag).
 
-    if "part_id" not in df.columns:
-        df = with_part_id(df, num_parts)
-    parsed = parse_pages(df, num_parts, input_counter)
-    parsed = parsed.withColumn("_had_lang", F.col("lang").isNotNull())
-    parsed = parsed.withColumn(
-        "_alltext",
-        F.expr("array_join(transform(blocks, b -> b.text), ' ')"),
+    SPEC §2's stopword features are language-keyed, so a NULL-lang page
+    parsed against the DEFAULT_LANG list would classify a German page's
+    good paragraphs as boilerplate and extract it empty. The production
+    answer (the same move CCNet makes before its stoplist-dependent stages)
+    runs inside the one Python pass: predict the language from the FULL
+    block text (``html_blocks.recover_lang``), re-score each block's
+    stopword density against the recovered list, then classify, smooth and
+    assemble as usual. Rows that arrived with a lang keep their densities
+    and tag. The output ``lang`` column is the recovered one. One
+    mapInArrow hop, shuffle-free.
+    """
+    return select_extracted(
+        extract_rows(df, num_parts, input_counter=input_counter, langid=True),
+        stats=stats,
     )
-    parsed = with_langid(parsed, "_alltext", "_lang_rec")
-    parsed = parsed.withColumn(
-        "lang", F.coalesce(F.col("lang"), F.col("_lang_rec"))
-    )
-    parsed = parsed.withColumn(
-        "blocks",
-        F.when(F.col("_had_lang"), F.col("blocks")).otherwise(
-            F.expr(_RESCORE_BLOCKS_SQL)
-        ),
-    ).drop("_had_lang", "_alltext", "_lang_rec")
-    return assemble(label_blocks(parsed), stats=stats)
 
 
 def extract_pages(
@@ -570,11 +551,7 @@ def extract_pages(
     one-product consumers — e.g. the streaming flagship — get metadata
     without a second parse or a second sink).
     """
-    if "part_id" not in df.columns:
-        df = with_part_id(df, num_parts)
-    if repartition:
-        df = salted(df, repartition)
-    return assemble(
-        label_blocks(parse_pages(df, num_parts, input_counter)),
+    return select_extracted(
+        extract_rows(df, num_parts, repartition, input_counter),
         stats=stats, keep_meta=keep_meta,
     )

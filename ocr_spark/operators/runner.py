@@ -65,11 +65,11 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.extract import (
     DEFAULT_NUM_PARTS,
-    assemble,
-    extract_pages,
-    label_blocks,
-    parse_pages,
+    extract_rows,
+    metadata_rows,
+    outlink_rows,
     salted,
+    select_extracted,
     with_part_id,
 )
 from ocr_spark.schemas import LINEAGE_SCHEMA, PAGES_SCHEMA
@@ -281,15 +281,16 @@ def run_extract(
 
     ``links_location`` (optional) ALSO writes the SPEC §5 outlink product
     (url, warc_ts, part_id, link_id, href, anchor) per batch, from the SAME
-    parse: the parsed relation is persisted for the batch and consumed by
-    all requesting sinks, so requesting side products never re-runs the
-    Python parse (the dominant cost at 100 TB — verified by the lineage
-    input counts, which would double on a second parse). Side products
+    pass: the extraction's finished rows (which carry links and meta) are
+    persisted for the batch and consumed by all requesting sinks, so
+    requesting side products never re-runs the Python parse (the dominant
+    cost at 100 TB — verified by the lineage input counts, which would
+    double on a second parse). Side products
     commit under the same manifest: a crash between the writes leaves the
     batch uncommitted and the rerun dynamically overwrites every sink's
     part_id set — idempotent. ``meta_location`` (optional) likewise writes
     the SPEC §6 page-metadata product (url, warc_ts, part_id, title,
-    description, canonical, og_title) from the same cached parse.
+    description, canonical, og_title) from the same cached rows.
 
     Returns ``{"run_id", "parts_done_before", "parts_done_now", "batches",
     "stage_sec"}`` — ``stage_sec`` holds wall seconds summed over batches for
@@ -343,7 +344,7 @@ def run_extract(
             started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
             t0 = time.perf_counter()
             input_counts = spark.sparkContext.accumulator({}, _PartCountParam())
-            parsed = None
+            rows = None
             try:
                 if multi_batch or len(todo) < num_parts:
                     # partition pruning on staged data; on the raw input this
@@ -351,23 +352,19 @@ def run_extract(
                     sub = pages.where(F.col("part_id").isin(batch))
                 else:
                     sub = pages  # full run, single batch: no filter at all
-                if links_location is None and meta_location is None:
-                    ex = extract_pages(sub, num_parts=num_parts,
-                                       repartition=repartition, stats=True,
-                                       input_counter=input_counts)
-                else:
-                    # all products from ONE parse: persist the parsed
-                    # relation for the batch (bounded by batch size) and
-                    # feed the text sink and the side sinks from the cache
-                    sub2 = sub
-                    if "part_id" not in sub2.columns:
-                        sub2 = with_part_id(sub2, num_parts)
-                    if repartition:
-                        sub2 = salted(sub2, repartition)
-                    parsed = parse_pages(
-                        sub2, num_parts, input_counter=input_counts
-                    ).persist()
-                    ex = assemble(label_blocks(parsed), stats=True)
+                rows = extract_rows(sub, num_parts=num_parts,
+                                    repartition=repartition,
+                                    input_counter=input_counts)
+                if links_location is not None or meta_location is not None:
+                    # all products from ONE parse: persist the finished rows
+                    # for the batch (bounded by batch size) and feed the
+                    # text sink and the side sinks from the cache
+                    rows.persist()
+                sinks = [(data_dir, select_extracted(rows, stats=True))]
+                if links_location is not None:
+                    sinks.append((links_location, outlink_rows(rows)))
+                if meta_location is not None:
+                    sinks.append((meta_location, metadata_rows(rows)))
                 # cluster output by part_id before the partitioned write:
                 # without it every task writes a file into every part dir
                 # (tasks x parts small files — measured 7x slower and 32x
@@ -377,48 +374,17 @@ def run_extract(
                 # location is iceberg:): replaces exactly the part_id=N
                 # dirs in this batch — idempotent re-run after a crash, no
                 # duplicate rows
-                write_table(
-                    ex.repartition(len(batch), "part_id"),
-                    data_dir,
-                    mode="overwrite_partitions",
-                    partition_by=("part_id",),
-                )
-                if parsed is not None:
-                    if links_location is not None:
-                        links = parsed.select(
-                            "url",
-                            "warc_ts",
-                            "part_id",
-                            F.posexplode("links").alias("link_id", "_l"),
-                        ).select(
-                            "url", "warc_ts", "part_id", "link_id",
-                            F.col("_l.href").alias("href"),
-                            F.col("_l.anchor").alias("anchor"),
-                        )
-                        write_table(
-                            links.repartition(len(batch), "part_id"),
-                            links_location,
-                            mode="overwrite_partitions",
-                            partition_by=("part_id",),
-                        )
-                    if meta_location is not None:
-                        meta = parsed.select(
-                            "url", "warc_ts", "part_id",
-                            F.col("meta.title").alias("title"),
-                            F.col("meta.description").alias("description"),
-                            F.col("meta.canonical").alias("canonical"),
-                            F.col("meta.og_title").alias("og_title"),
-                        )
-                        write_table(
-                            meta.repartition(len(batch), "part_id"),
-                            meta_location,
-                            mode="overwrite_partitions",
-                            partition_by=("part_id",),
-                        )
-                    parsed.unpersist()
+                for loc, product in sinks:
+                    write_table(
+                        product.repartition(len(batch), "part_id"),
+                        loc,
+                        mode="overwrite_partitions",
+                        partition_by=("part_id",),
+                    )
+                rows.unpersist()
             except Exception:
-                if parsed is not None:
-                    parsed.unpersist()
+                if rows is not None:
+                    rows.unpersist()
                 # record the failure in the metrics table, then surface it;
                 # the partitions stay uncommitted so a rerun redoes them
                 ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)

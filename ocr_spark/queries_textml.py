@@ -1104,27 +1104,6 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def with_langid(
-    df: DataFrame, text_col: str = "text", out_col: str = "lang_pred"
-) -> DataFrame:
-    """Add the stopword-hit-argmax language prediction as ``out_col``.
-
-    The production lang-recovery move for un-tagged crawl data (WARC
-    archives carry no language tag): same frozen per-language hit counting
-    as the ``text_langid`` registry row, pure JVM column exprs, no
-    shuffle. Docs matching no list at all predict 'und'.
-    """
-    d = df.withColumn("_liw", F.split(F.col(text_col), " "))
-    for lg in _LANGS:
-        d = d.withColumn(
-            f"_lih_{lg}", F.expr(_hits_spark(lg).replace("w,", "_liw,"))
-        )
-    argmax = _argmax_case(lambda lg: f"_lih_{lg}")
-    return d.withColumn(out_col, F.expr(argmax)).drop(
-        "_liw", *(f"_lih_{lg}" for lg in _LANGS)
-    )
-
-
 @register(
     "text_quality",
     f"""

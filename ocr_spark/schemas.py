@@ -20,46 +20,6 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-# --- per-block struct (SPEC.md §2) -----------------------------------------
-BBOX_STRUCT = T.StructType(
-    [
-        T.StructField("x0", T.DoubleType(), True),
-        T.StructField("y0", T.DoubleType(), True),
-        T.StructField("x1", T.DoubleType(), True),
-        T.StructField("y1", T.DoubleType(), True),
-    ]
-)
-
-BLOCK_STRUCT = T.StructType(
-    [
-        T.StructField("block_id", T.IntegerType(), False),
-        T.StructField("tag", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("text_len", T.IntegerType(), False),
-        T.StructField("n_words", T.IntegerType(), False),
-        T.StructField("n_link_chars", T.IntegerType(), False),
-        T.StructField("link_density", T.DoubleType(), False),
-        T.StructField("char_density", T.DoubleType(), False),
-        T.StructField("stopword_density", T.DoubleType(), False),
-        T.StructField("bbox", BBOX_STRUCT, True),
-    ]
-)
-
-BLOCKS_ARRAY = T.ArrayType(BLOCK_STRUCT, containsNull=False)
-
-# parse output: pages → (url, warc_ts, lang, part_id, kind, blocks)
-PARSED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("blocks", BLOCKS_ARRAY, False),
-    ]
-)
-
 # --- extracted output table (SURVEY.md §1.2) -------------------------------
 SPAN_STRUCT = T.StructType(
     [
@@ -112,7 +72,8 @@ def _bbox_pa() -> pa.DataType:
 
 
 def block_pa_type() -> pa.DataType:
-    """Arrow type mirroring BLOCK_STRUCT (used by the mapInArrow parser)."""
+    """Arrow type of one parsed block (SPEC.md §2; the ``blocks`` element
+    of ``operators.extract.PARSED_DDL``)."""
     return pa.struct(
         [
             pa.field("block_id", pa.int32(), nullable=False),
@@ -128,14 +89,3 @@ def block_pa_type() -> pa.DataType:
             pa.field("bbox", _bbox_pa()),
         ]
     )
-
-
-# DDL string for the blocks array — used in SQL `transform`/`aggregate`
-# expressions and by the scalar pandas UDF return type.
-BLOCK_DDL = (
-    "block_id int, tag string, depth int, text string, text_len int,"
-    " n_words int, n_link_chars int, link_density double,"
-    " char_density double, stopword_density double,"
-    " bbox struct<x0: double, y0: double, x1: double, y1: double>"
-)
-BLOCKS_ARRAY_DDL = f"array<struct<{BLOCK_DDL}>>"

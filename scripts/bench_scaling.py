@@ -210,8 +210,8 @@ def main() -> None:
         f"""# BENCH — N vs 4N executor scaling evidence (sandbox protocol)
 
 Measured {dt.datetime.now(dt.timezone.utc).isoformat(timespec='seconds')} on the 32-core/125 GB sandbox.
-Job: full extraction pipeline (`extract_pages`: mapInArrow parse → JVM-side
-classify/smooth/assemble, shuffle-free — see PLANS.md) over a deterministic
+Job: full extraction pipeline (`extract_pages`: one mapInArrow hop that parses
+and classifies/smooths/assembles, shuffle-free — see PLANS.md) over a deterministic
 synthetic pages table (`ocr_spark.gen.bench_pages`, seed-fixed, Zipf-skewed
 hosts, ~2% PDF payloads, ~1% null/invalid html), launched with
 `spark-submit --py-files engine.zip` per the north_rule.

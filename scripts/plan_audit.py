@@ -62,12 +62,13 @@ def main() -> None:
 
     sections.append((
         "Flagship extraction (fused, production path)",
-        "No `Exchange` anywhere: part_id derivation, the single `MapInArrow` "
-        "parse hop, and the classify/smooth/assemble array expressions are "
-        "all narrow — throughput scales with input splits, which is what the "
-        "N→4N executor measurements in BENCH/BASELINE.md reflect. "
-        "Exactly one JVM→Python boundary; everything downstream is JVM-side "
-        "Project nodes.",
+        "No `Exchange` anywhere: the codegen'd scan + part_id `Project`, "
+        "then ONE `MapInArrow` that parses each page and runs the whole "
+        "extraction tail (classify, smooth, spans, assembly, sha256) in the "
+        "same Python pass, then one column-selecting `Project`. Everything "
+        "is narrow — throughput scales with input splits, which is what the "
+        "N→4N executor measurements in BENCH/BASELINE.md reflect. Exactly "
+        "one JVM→Python boundary and no Python eval node after it.",
         tree_of(extract_pages(fixtures)),
     ))
 

@@ -4,9 +4,9 @@ Probe result 2026-08-21: /opt/spark/jars ships the avro-1.12.1 CORE jars
 and — less obviously — spark-sql_2.13-4.1.2.jar bundles the
 org.apache.spark.sql.avro classes themselves; only the spark-avro
 module's META-INF DataSourceRegister entry (the ``format("avro")`` short
-name) is absent. textfmt.write_avro/read_avro therefore resolve the
-format name at call time (short name when registered, full class name
-otherwise) and Avro IO runs FOR REAL in this sandbox — the registry entry
+name) is absent. textfmt.write_avro/read_avro therefore always use the
+full class name, and Avro IO runs for real without the connector — the
+registry entry
 scan_avro_roundtrip grades it under the DuckDB value hash beside the
 JSONL/CSV/ORC/XML round-trips.
 """

@@ -45,6 +45,35 @@ def test_goldenref_is_stable(golden_records):
         assert g["tables"] == rec["tables"], rec["url"]
 
 
+# sha256 over (url, NUL, html, NUL) of every seed-42 fixture page, in order
+_SEED42_PAYLOADS_SHA = (
+    "4c2ee8cb5a24524b36017d513ab720f97ac4673847b976f27ad8f90eca657cc3"
+)
+
+
+def test_fixture_pages_every_seed_builds():
+    """Every seed builds (a French salad holding "œ" once made 49 of seeds
+    0-59 raise UnicodeEncodeError), the undeclared legacy page still takes
+    the latin-1 fallback arm, and the default seed's payloads — the ones
+    the goldens were made from — do not move."""
+    import hashlib
+
+    from ocr_spark.gen import fixture_pages
+    from ocr_spark.html_blocks import sniff_decode
+
+    for seed in range(60):
+        pages = fixture_pages(seed)
+        legacy = next(
+            p["html"] for p in pages
+            if p["url"].endswith("/charset-undeclared-fallback")
+        )
+        assert sniff_decode(legacy) == legacy.decode("latin-1"), seed
+    h = hashlib.sha256()
+    for p in fixture_pages(42):
+        h.update(p["url"].encode() + b"\0" + (p["html"] or b"") + b"\0")
+    assert h.hexdigest() == _SEED42_PAYLOADS_SHA
+
+
 def test_links_exact(spark, fixture_df, golden_records):
     """SPEC §5 gate: pipeline outlinks == golden reference, per url, exact
     (href bytes, anchor bytes, link_id order)."""

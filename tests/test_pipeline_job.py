@@ -85,8 +85,8 @@ def test_pipeline_job_end_to_end(spark, tmp_path):
 
 
 def test_langid_extraction_stays_shuffle_free(spark, fixture_df):
-    """Recovery + re-score are JVM column exprs over the parsed frame: the
-    langid extraction plan must stay narrow (no Exchange) with exactly one
+    """Recovery + re-score run inside the parse's Python pass: the langid
+    extraction plan must stay narrow (no Exchange) with exactly one
     MapInArrow hop, like the plain flagship."""
     import re
 

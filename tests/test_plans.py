@@ -35,8 +35,8 @@ def test_extraction_plan_has_no_shuffle(spark, fixture_df):
 
 
 def test_extraction_single_python_boundary(spark, fixture_df):
-    """Exactly one JVM->Python hop (the parse); classify/smooth/assemble
-    stay JVM-side."""
+    """Exactly one JVM->Python hop: the parse and the whole extraction
+    tail (classify/smooth/assemble) share it."""
     from ocr_spark.operators.extract import extract_pages
 
     plan = _plan(extract_pages(fixture_df))
@@ -118,9 +118,9 @@ def test_agg_partial_final(spark):
 
 
 def test_classify_stays_jvm_side(spark, fixture_df):
-    """Ops 13-17 are Project nodes over array expressions — JVM-side
-    evaluation (array HOFs don't codegen, but they never leave the JVM),
-    and the pre-parse stage is whole-stage codegen'd."""
+    """Ops 13-17 run inside the single MapInArrow, so nothing after it
+    is a Python eval node (only a column-selecting Project), and the
+    pre-parse stage is whole-stage codegen'd."""
     from ocr_spark.operators.extract import extract_pages
 
     plan = _plan(extract_pages(fixture_df))
