@@ -409,17 +409,11 @@ def _assemble_batches(
         )
 
 
-def assemble(
-    labeled: DataFrame, stats: bool = False, keep_meta: bool = False
-) -> DataFrame:
+def assemble(labeled: DataFrame) -> DataFrame:
     """Ops 15+17 alone over a :func:`label_blocks` frame: span offsets,
     byte-identical assembly and the text hash, by the same Python tail as
-    the fused extraction (see :func:`label_blocks`). ``stats``/``keep_meta``
-    as in :func:`select_extracted`."""
-    return select_extracted(
-        labeled.mapInArrow(_assemble_batches, EXTRACT_DDL),
-        stats=stats, keep_meta=keep_meta,
-    )
+    the fused extraction (see :func:`label_blocks`)."""
+    return select_extracted(labeled.mapInArrow(_assemble_batches, EXTRACT_DDL))
 
 
 def outlink_rows(frame: DataFrame) -> DataFrame:
@@ -509,10 +503,7 @@ def extract_metadata(
 
 
 def extract_pages_langid(
-    df: DataFrame,
-    num_parts: int = DEFAULT_NUM_PARTS,
-    stats: bool = False,
-    input_counter=None,
+    df: DataFrame, num_parts: int = DEFAULT_NUM_PARTS
 ) -> DataFrame:
     """Extraction for untagged crawls (WARC archives carry no language tag).
 
@@ -527,31 +518,24 @@ def extract_pages_langid(
     and tag. The output ``lang`` column is the recovered one. One
     mapInArrow hop, shuffle-free.
     """
-    return select_extracted(
-        extract_rows(df, num_parts, input_counter=input_counter, langid=True),
-        stats=stats,
-    )
+    return select_extracted(extract_rows(df, num_parts, langid=True))
 
 
 def extract_pages(
     df: DataFrame,
     num_parts: int = DEFAULT_NUM_PARTS,
     repartition: int | None = None,
-    stats: bool = False,
-    input_counter=None,
     keep_meta: bool = False,
 ) -> DataFrame:
     """Full fused extraction: pages → extracted (SURVEY §3.2).
 
     ``repartition`` (optional) forces a salted exchange before the parse —
     used when input splits are unbalanced or to bound output file counts;
-    the default (None) keeps the plan shuffle-free. ``stats=True`` adds a
-    per-row ``bytes_in`` column for lineage accounting. ``keep_meta=True``
+    the default (None) keeps the plan shuffle-free. ``keep_meta=True``
     carries the SPEC §6 ``meta`` struct through to the output rows (the
     one-product consumers — e.g. the streaming flagship — get metadata
     without a second parse or a second sink).
     """
     return select_extracted(
-        extract_rows(df, num_parts, repartition, input_counter),
-        stats=stats, keep_meta=keep_meta,
+        extract_rows(df, num_parts, repartition), keep_meta=keep_meta
     )

@@ -9,16 +9,22 @@ Layout of an output table directory::
     <out_dir>/_lineage/*.parquet             -- lineage rows (op 5, LINEAGE_SCHEMA)
     <out_dir>/_staged/pages/part_id=<N>/...  -- staged input (multi-batch runs)
 
-Crash-safety contract:
+Crash-safety contract — the one commit protocol of the engine, shared by
+this runner (a unit = a part_id) and the streaming committers
+(``streaming/incremental._BatchCommitter``, a unit = a micro-batch id):
 
-- a partition is COMMITTED iff its manifest file exists;
-- batches are written with Spark's dynamic partition overwrite, so re-running
-  an uncommitted partition replaces any half-written files from a killed
-  attempt instead of appending duplicates (idempotent per-partition commit);
-- the manifest file is written tmp-then-``os.replace`` (atomic on POSIX), so
-  readers never observe a torn commit record;
-- resume = anti-join of committed part_ids (a ``part_id NOT IN`` filter —
-  pure partition pruning on the part_id-partitioned layout, no data shuffle).
+- a unit is COMMITTED iff its :class:`Manifest` record exists;
+- its data is written first, to a location scoped to the unit and replaced
+  on rewrite (dynamic partition overwrite here, a ``batch_id=N`` directory
+  overwrite there), so redoing an uncommitted unit replaces a killed
+  attempt's files instead of appending duplicates;
+- the record's row count is read back from the written files; a read-back
+  error propagates and leaves the unit uncommitted, so the redo runs again
+  instead of committing a wrong count;
+- the record is written LAST, through ``tables_snapshot._atomic_write``
+  (temp file + ``os.replace``), so readers never observe a torn record;
+- resume skips the committed units (here a ``part_id NOT IN`` filter — pure
+  partition pruning on the part_id-partitioned layout, no data shuffle).
 
 part_id = pmod(xxhash64(url), num_parts) is independent of cluster size and
 task layout, so a manifest written at N executors resumes correctly at 4N.
@@ -73,6 +79,7 @@ from ocr_spark.operators.extract import (
     with_part_id,
 )
 from ocr_spark.schemas import LINEAGE_SCHEMA, PAGES_SCHEMA
+from ocr_spark.tables_snapshot import _atomic_write
 
 
 class _PartCountParam(AccumulatorParam):
@@ -110,30 +117,35 @@ def _dedup_input_counts(acc_value: dict) -> dict[int, int]:
 
 
 class Manifest:
-    """Checkpoint manifest: one JSON commit record per completed partition."""
+    """Checkpoint manifest: one JSON commit record per committed unit, named
+    ``<prefix>-<unit>.json`` (the runner's ``_manifest/part-NNNNN.json``,
+    a stream's ``_stream_manifest/batch-NNNNNNNNNN.json``)."""
 
-    def __init__(self, out_dir: str | os.PathLike) -> None:
-        self.dir = pathlib.Path(out_dir) / "_manifest"
+    def __init__(
+        self,
+        out_dir: str | os.PathLike,
+        subdir: str = "_manifest",
+        prefix: str = "part",
+        width: int = 5,
+    ) -> None:
+        self.dir = pathlib.Path(out_dir) / subdir
+        self._prefix = prefix
+        self._width = width
+
+    def path(self, unit: int) -> pathlib.Path:
+        return self.dir / f"{self._prefix}-{unit:0{self._width}d}.json"
 
     def completed_parts(self) -> dict[int, dict]:
-        out: dict[int, dict] = {}
-        if not self.dir.is_dir():
-            return out
-        for p in sorted(self.dir.glob("part-*.json")):
-            try:
-                rec = json.loads(p.read_text())
-                out[int(rec["part_id"])] = rec
-            except (ValueError, KeyError):
-                continue  # torn/foreign file: treated as not committed
-        return out
+        """``{unit: record}`` of every committed unit."""
+        return {
+            int(p.stem.split("-")[1]): json.loads(p.read_text())
+            for p in sorted(self.dir.glob(f"{self._prefix}-*.json"))
+        }
 
-    def commit(self, rec: dict) -> None:
-        """Atomically record one partition as committed (op 6)."""
+    def commit(self, unit: int, rec: dict) -> None:
+        """Atomically record one unit as committed (op 6)."""
         self.dir.mkdir(parents=True, exist_ok=True)
-        final = self.dir / f"part-{int(rec['part_id']):05d}.json"
-        tmp = final.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(rec, sort_keys=True))
-        os.replace(tmp, final)  # atomic on POSIX
+        _atomic_write(self.path(unit), json.dumps(rec, sort_keys=True))
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
@@ -169,6 +181,10 @@ def _chunks(seq: Sequence[int], size: int) -> list[list[int]]:
     return [list(seq[i : i + size]) for i in range(0, len(seq), size)]
 
 
+def _utcnow() -> dt.datetime:
+    return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+
+
 def _write_lineage(spark: SparkSession, rows: list[tuple], lineage_dir: str) -> None:
     """Append lineage rows as one parquet file.
 
@@ -185,12 +201,25 @@ def _write_lineage(spark: SparkSession, rows: list[tuple], lineage_dir: str) -> 
     ).parquet(lineage_dir)
 
 
+def _write_failed(
+    spark: SparkSession, parts: list[int], run_id: str,
+    started: dt.datetime, lineage_dir: str,
+) -> None:
+    """Record ``parts`` as failed in lineage. They stay uncommitted, so the
+    rerun redoes them."""
+    ts = _utcnow()
+    _write_lineage(
+        spark,
+        [(p, run_id, 0, 0, 0, started, ts, "failed", 0.0) for p in parts],
+        lineage_dir,
+    )
+
+
 def stage_input(
     spark: SparkSession,
     pages: DataFrame,
     out: pathlib.Path,
     num_parts: int,
-    stage_partitions: int | None = None,
 ) -> DataFrame:
     """One-pass staging of the raw input, partitioned by part_id.
 
@@ -217,42 +246,37 @@ def stage_input(
         # a resumed run MUST be resuming the same job: a different
         # num_parts silently remaps every part_id and a different input
         # violates the immutable-input contract — both corrupt the resume,
-        # so they raise instead of reusing or silently re-staging
-        try:
-            rec = json.loads(marker.read_text())
-        except ValueError:
-            rec = {}  # legacy "ok" marker (pre-validation): accept as-is
-        if rec:
-            if rec.get("num_parts") != num_parts:
-                raise ValueError(
-                    f"staged layout at {staged} was built with num_parts="
-                    f"{rec.get('num_parts')}, run requested {num_parts}; "
-                    "use a fresh out_dir (part_ids are not comparable)"
-                )
-            if fp and rec.get("fingerprint") and rec["fingerprint"] != fp:
-                raise ValueError(
-                    f"input fingerprint changed since staging at {staged} "
-                    "(the input must be immutable for the lifetime of one "
-                    "out_dir); use a fresh out_dir"
-                )
+        # so they raise instead of reusing or silently re-staging (and so
+        # does a marker that does not parse)
+        rec = json.loads(marker.read_text())
+        if rec.get("num_parts") != num_parts:
+            raise ValueError(
+                f"staged layout at {staged} was built with num_parts="
+                f"{rec.get('num_parts')}, run requested {num_parts}; "
+                "use a fresh out_dir (part_ids are not comparable)"
+            )
+        if fp and rec.get("fingerprint") and rec["fingerprint"] != fp:
+            raise ValueError(
+                f"input fingerprint changed since staging at {staged} "
+                "(the input must be immutable for the lifetime of one "
+                "out_dir); use a fresh out_dir"
+            )
     else:
         stg = with_part_id(pages, num_parts).select(
             "url", "warc_ts", "html", "lang", "part_id"
         )
-        stg = salted(stg, stage_partitions or num_parts)
+        stg = salted(stg, num_parts)
         stg.write.mode("overwrite").partitionBy("part_id").parquet(pages_dir)
-        marker.parent.mkdir(parents=True, exist_ok=True)
-        tmp = marker.with_suffix(".tmp")
-        tmp.write_text(
+        _atomic_write(  # staging committed atomically
+            marker,
             json.dumps(
                 {
                     "num_parts": num_parts,
                     "fingerprint": fp,
                     "n_input_files": len(in_files),
                 }
-            )
+            ),
         )
-        os.replace(tmp, marker)  # staging committed atomically
     return spark.read.parquet(pages_dir)
 
 
@@ -263,10 +287,7 @@ def run_extract(
     run_id: str,
     num_parts: int = DEFAULT_NUM_PARTS,
     parts_per_batch: int = 16,
-    repartition: int | None = None,
     after_batch: Callable[[list[int]], None] | None = None,
-    stage_partitions: int | None = None,
-    keep_staged: bool = False,
     data_location: str | None = None,
     links_location: str | None = None,
     meta_location: str | None = None,
@@ -300,7 +321,7 @@ def run_extract(
     ``after_batch`` is a test hook called after each batch commit (used by the
     kill/resume tests to abort mid-run). The input must be immutable for the
     lifetime of one ``out_dir`` (standard for crawl snapshots); staged data
-    is removed once every partition has committed unless ``keep_staged``.
+    is removed once every partition has committed.
     """
     from ocr_spark.tables import read_table, write_table
 
@@ -322,16 +343,10 @@ def run_extract(
     if multi_batch:
         # single-scan path: stage once, then every batch filter prunes
         try:
-            pages = stage_input(spark, pages, out, num_parts, stage_partitions)
+            pages = stage_input(spark, pages, out, num_parts)
         except Exception:
-            # staging died: record failed rows for every todo part (none are
-            # committed; the rerun re-stages and redoes them all)
-            ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-            failed = [
-                (part, run_id, 0, 0, 0, ts, ts, "failed", 0.0)
-                for part in todo
-            ]
-            _write_lineage(spark, failed, lineage_dir)
+            # staging died: every todo part fails (the rerun re-stages)
+            _write_failed(spark, todo, run_id, _utcnow(), lineage_dir)
             raise
     else:
         pages = with_part_id(pages, num_parts)
@@ -341,7 +356,7 @@ def run_extract(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         for batch in batches:
-            started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+            started = _utcnow()
             t0 = time.perf_counter()
             input_counts = spark.sparkContext.accumulator({}, _PartCountParam())
             rows = None
@@ -353,7 +368,6 @@ def run_extract(
                 else:
                     sub = pages  # full run, single batch: no filter at all
                 rows = extract_rows(sub, num_parts=num_parts,
-                                    repartition=repartition,
                                     input_counter=input_counts)
                 if links_location is not None or meta_location is not None:
                     # all products from ONE parse: persist the finished rows
@@ -385,18 +399,12 @@ def run_extract(
             except Exception:
                 if rows is not None:
                     rows.unpersist()
-                # record the failure in the metrics table, then surface it;
-                # the partitions stay uncommitted so a rerun redoes them
-                ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-                failed = [
-                    (part, run_id, 0, 0, 0, started, ts, "failed", 0.0)
-                    for part in batch
-                ]
-                _write_lineage(spark, failed, lineage_dir)
+                # record the failure in the metrics table, then surface it
+                _write_failed(spark, batch, run_id, started, lineage_dir)
                 raise
             elapsed = time.perf_counter() - t0
             stage_sec["parse_write"] += elapsed
-            finished = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+            finished = _utcnow()
 
             _ts = time.perf_counter()
             # column-pruned read-back of the freshly written batch
@@ -434,13 +442,14 @@ def run_extract(
             # partition uncommitted and the next run redoes it idempotently
             for part, row in zip(batch, lineage_rows):
                 manifest.commit(
+                    part,
                     {
                         "part_id": part,
                         "run_id": run_id,
                         "output_rows": row[3],
                         "bytes_in": row[4],
                         "committed_ts": finished.isoformat(),
-                    }
+                    },
                 )
             stage_sec["manifest"] += time.perf_counter() - _ts
             if after_batch is not None:
@@ -448,14 +457,13 @@ def run_extract(
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
 
-    if multi_batch and not keep_staged:
-        if len(manifest.completed_parts()) == num_parts:
-            shutil.rmtree(out / "_staged", ignore_errors=True)
+    if multi_batch and len(manifest.completed_parts()) == num_parts:
+        shutil.rmtree(out / "_staged", ignore_errors=True)
 
     return {
         "run_id": run_id,
         "parts_done_before": done_before,
         "parts_done_now": todo,
-        "batches": len(_chunks(todo, parts_per_batch)),
+        "batches": len(batches),
         "stage_sec": {k: round(v, 3) for k, v in stage_sec.items()},
     }

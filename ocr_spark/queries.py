@@ -348,19 +348,8 @@ def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, os.path.join(work, "out"), os.path.join(work, "ckpt")
     )
     writer.trigger(availableNow=True).start().awaitTermination()
-    recs = [
-        (seq, bid)
-        for seq, bid in enumerate(sorted(committer.committed()))
-    ]
-    import json as _json
-
-    rows = [
-        (
-            seq,
-            _json.loads(committer._record(bid).read_text())["rows"],
-        )
-        for seq, bid in recs
-    ]
+    recs = committer.manifest.completed_parts()
+    rows = [(seq, recs[bid]["rows"]) for seq, bid in enumerate(sorted(recs))]
     return spark.createDataFrame(rows, "batch_seq int, rows_kept long")
 
 
@@ -444,15 +433,8 @@ def q_stream_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         full_cc=True,
     )
     writer.trigger(availableNow=True).start().awaitTermination()
-    import json as _json
-
-    rows = [
-        (
-            seq,
-            _json.loads(committer._record(bid).read_text())["rows"],
-        )
-        for seq, bid in enumerate(sorted(committer.committed()))
-    ]
+    recs = committer.manifest.completed_parts()
+    rows = [(seq, recs[bid]["rows"]) for seq, bid in enumerate(sorted(recs))]
     return spark.createDataFrame(rows, "batch_seq int, rows_kept long")
 
 

@@ -648,7 +648,7 @@ UNION ALL SELECT 'text', 'n_null', count(*) - count(text) FROM documents
 UNION ALL SELECT 'text', 'n_distinct', count(DISTINCT text) FROM documents
 UNION ALL SELECT 'text', 'min_len', min(CAST(length(text) AS BIGINT)) FROM documents
 UNION ALL SELECT 'text', 'max_len', max(CAST(length(text) AS BIGINT)) FROM documents
-UNION ALL SELECT 'text', 'sum_len', sum(CAST(length(text) AS BIGINT)) FROM documents
+UNION ALL SELECT 'text', 'sum_len', CAST(sum(length(text)) AS BIGINT) FROM documents
 UNION ALL SELECT 'lang', 'n_null', count(*) - count(lang) FROM documents
 UNION ALL SELECT 'lang', 'n_distinct', count(DISTINCT lang) FROM documents
 UNION ALL SELECT 'source', 'n_null', count(*) - count(source) FROM documents
@@ -656,7 +656,7 @@ UNION ALL SELECT 'source', 'n_distinct', count(DISTINCT source) FROM documents
 UNION ALL SELECT 'n_chars', 'n_null', count(*) - count(n_chars) FROM documents
 UNION ALL SELECT 'n_chars', 'min', min(n_chars) FROM documents
 UNION ALL SELECT 'n_chars', 'max', max(n_chars) FROM documents
-UNION ALL SELECT 'n_chars', 'sum', sum(n_chars) FROM documents
+UNION ALL SELECT 'n_chars', 'sum', CAST(sum(n_chars) AS BIGINT) FROM documents
 UNION ALL SELECT '*', 'n_rows', count(*) FROM documents
 """
 
@@ -750,7 +750,7 @@ def q_join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ROLLUP_SQL = """
 SELECT lang, source,
   CAST(grouping(lang) * 2 + grouping(source) AS BIGINT) AS gid,
-  count(*) AS n, sum(n_chars) AS sum_chars
+  count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
 FROM documents
 GROUP BY ROLLUP (lang, source)
 ORDER BY gid, lang, source

@@ -238,20 +238,20 @@ WITH p AS (
 )
 SELECT doc_id, true AS ok, 'P6' AS fmt,
   CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-  w * list_sum(list_transform(range(0, h), r -> (br + r) % 256))
-    AS sum_r,
-  h * list_sum(list_transform(range(0, w), c -> (bg + c) % 256))
-    AS sum_g,
-  list_sum(list_transform(range(0, h), r ->
+  CAST(w * list_sum(list_transform(range(0, h), r -> (br + r) % 256))
+    AS BIGINT) AS sum_r,
+  CAST(h * list_sum(list_transform(range(0, w), c -> (bg + c) % 256))
+    AS BIGINT) AS sum_g,
+  CAST(list_sum(list_transform(range(0, h), r ->
     list_sum(list_transform(range(0, w), c -> (bb + r + c) % 256))))
-    AS sum_b
+    AS BIGINT) AS sum_b
 FROM p WHERE doc_id % 2 = 0
 UNION ALL
 SELECT doc_id, true AS ok, 'P5' AS fmt,
   CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-  list_sum(list_transform(range(0, h), r ->
+  CAST(list_sum(list_transform(range(0, h), r ->
     list_sum(list_transform(range(0, w), c -> (bg + 2*r + 3*c) % 256))))
-    AS sum_r,
+    AS BIGINT) AS sum_r,
   NULL AS sum_g, NULL AS sum_b
 FROM p WHERE doc_id % 2 = 1
 """
@@ -983,13 +983,13 @@ g AS (
 SELECT doc_id, true AS ok,
   CAST(ti AS INT) AS tile_r, CAST(tj AS INT) AS tile_c,
   CAST(r1 - r0 AS INT) AS th, CAST(c1 - c0 AS INT) AS tw,
-  (c1 - c0) * list_sum(list_transform(range(r0, r1), r ->
-    (br + r) % 256)) AS sum_r,
-  (r1 - r0) * list_sum(list_transform(range(c0, c1), c ->
-    (bg + c) % 256)) AS sum_g,
-  list_sum(list_transform(range(r0, r1), r ->
+  CAST((c1 - c0) * list_sum(list_transform(range(r0, r1), r ->
+    (br + r) % 256)) AS BIGINT) AS sum_r,
+  CAST((r1 - r0) * list_sum(list_transform(range(c0, c1), c ->
+    (bg + c) % 256)) AS BIGINT) AS sum_g,
+  CAST(list_sum(list_transform(range(r0, r1), r ->
     list_sum(list_transform(range(c0, c1), c ->
-      (bb + r + c) % 256)))) AS sum_b
+      (bb + r + c) % 256)))) AS BIGINT) AS sum_b
 FROM g
 """
 

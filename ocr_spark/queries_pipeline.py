@@ -603,10 +603,10 @@ _SYS_SQL = f"""
 SELECT doc_id, n_chars, bucket, cum
 FROM (
   SELECT doc_id, n_chars, bucket,
-    sum(n_chars) OVER (
+    CAST(sum(n_chars) OVER (
       PARTITION BY bucket ORDER BY h
       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-    ) AS cum
+    ) AS BIGINT) AS cum
   FROM (
     SELECT doc_id, n_chars, {_SYS_KEY_SQL} AS h, {_SYS_BKT_SQL} AS bucket
     FROM documents
@@ -780,10 +780,10 @@ _RES_DRAW_SPARK = (
 )
 # 13-hex-digit md5 prefix as a BIGINT, digit-summed (DuckDB has no conv)
 _RES_DRAW_SQL = (
-    "list_aggregate(list_transform(generate_series(1, 13), k ->"
+    "CAST(list_aggregate(list_transform(generate_series(1, 13), k ->"
     " CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)"
     " || '#' || CAST(j AS VARCHAR)), k, 1)) - 1 AS BIGINT)"
-    " * (1 << (4 * (13 - k)))), 'sum')"
+    " * (1 << (4 * (13 - k)))), 'sum') AS BIGINT)"
 )
 
 _RES_SQL = f"""

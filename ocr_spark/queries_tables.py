@@ -256,7 +256,7 @@ WITH _final AS (
 )
 SELECT doc_id % 10 AS grp,
        count(*) AS n_rows,
-       sum(CAST(n AS BIGINT)) AS sum_len
+       CAST(sum(n) AS BIGINT) AS sum_len
 FROM _final GROUP BY 1
 """,
 )

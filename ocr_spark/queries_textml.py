@@ -1612,9 +1612,9 @@ _READ_Y = (
     "regexp_count(w, '[aeiouy]+') AS BIGINT), 1L))"
 )
 _READ_Y_SQL = (
-    "list_aggregate(list_transform(list_filter(string_split(lower(text),"
+    "CAST(list_aggregate(list_transform(list_filter(string_split(lower(text),"
     " ' '), x -> x != ''), w -> greatest(CAST(len(regexp_extract_all(w,"
-    " '[aeiouy]+')) AS BIGINT), 1)), 'sum')"
+    " '[aeiouy]+')) AS BIGINT), 1)), 'sum') AS BIGINT)"
 )
 
 _READ_SCORE = (

@@ -496,7 +496,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q11 = """
 SELECT l_partkey, value_e4
 FROM (
-  SELECT l.l_partkey AS l_partkey, sum({rev}) AS value_e4
+  SELECT l.l_partkey AS l_partkey, CAST(sum({rev}) AS BIGINT) AS value_e4
   FROM lineitem l
   JOIN supplier s ON l.l_suppkey = s.s_suppkey
   JOIN nation n ON s.s_nationkey = n.n_nationkey

@@ -15,6 +15,21 @@ from pyspark.sql import SparkSession
 ARROW_BATCH = 1024  # records per Arrow batch crossing the JVM↔Python boundary
 
 
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else about 60% of the host's
+    ``MemAvailable``: a heap sized past the host's memory lets the kernel
+    kill the JVM before the collector ever runs."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        kb = next(
+            int(line.split()[1]) for line in f
+            if line.startswith("MemAvailable:")
+        )
+    return f"{kb * 6 // 10 // 1024}m"
+
+
 def build_session(
     master: str | None = None,
     app_name: str = "ocr-spark",
@@ -43,7 +58,7 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

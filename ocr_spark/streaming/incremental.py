@@ -32,7 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ocr_spark.operators.extract import extract_pages
+from ocr_spark.operators.runner import Manifest
 from ocr_spark.schemas import PAGES_SCHEMA
+from ocr_spark.tables_snapshot import _atomic_write
 
 DEFAULT_WATERMARK = "1 hour"
 
@@ -160,65 +162,77 @@ def host_running_counts(df: DataFrame) -> DataFrame:
 # --- op 56: idempotent sink ---------------------------------------------------
 
 class _BatchCommitter:
-    """foreachBatch function: write each micro-batch to its own
-    ``data/batch_id=<N>`` location, then commit the batch manifest record.
+    """foreachBatch function: the engine's one commit protocol (see
+    ``operators/runner``) with the micro-batch as the unit. Every stream
+    sink here is this class or a subclass of it.
 
-    Exactly-once under at-least-once micro-batch replay, in BOTH crash
-    windows:
+    Per batch: return at once if its record exists (a replay of a
+    committed batch); else write the batch to ``data/batch_id=<N>`` with
+    ``mode("overwrite")``, read the row count back from the written files,
+    and commit ``_stream_manifest/batch-<N>.json`` through the shared
+    :class:`~ocr_spark.operators.runner.Manifest`. Exactly-once under
+    at-least-once micro-batch replay, in every crash window:
 
-    - crash after the manifest commit → the replayed batch_id returns early;
-    - crash between the data write and the manifest commit → the replay
-      re-writes the same batch-scoped directory with ``mode("overwrite")``,
-      replacing the earlier attempt's files instead of appending duplicates.
-      (A blind append into a shared directory — the round-1 version — turns
-      exactly this window into duplicated rows.)
+    - crash after the commit → the replayed batch_id returns early;
+    - crash between the write and the commit → the replay re-writes the
+      same batch-scoped directory, replacing the earlier attempt's files
+      instead of appending duplicates;
+    - the read-back fails → the error propagates, no record is written,
+      and the replay redoes the batch (a swallowed error would commit a
+      wrong row count for data that was written).
 
     Single evaluation: the batch plan (mapInArrow parse included) executes
-    once, for the write; the manifest row count comes from a column-pruned
-    read-back of the just-written files, never a second ``count()`` of the
-    plan. The batch_id=N layout doubles as a partition column when reading
-    ``out/data``, which downstream consumers can prune on.
+    once, for the write; the record's row count comes from the read-back,
+    never a second ``count()`` of the plan. An empty batch writes a
+    readable zero-row file, so its count is 0. The batch_id=N layout
+    doubles as a partition column when reading ``out/data``, which
+    downstream consumers can prune on.
+
+    Subclasses either reduce the batch and call ``super().__call__`` with
+    the result, or override :meth:`_write` when they write more than the
+    data directory.
     """
 
     def __init__(self, out_dir: str, run_id: str) -> None:
         self.out = pathlib.Path(out_dir)
         self.run_id = run_id
-
-    def _record(self, batch_id: int) -> pathlib.Path:
-        return self.out / "_stream_manifest" / f"batch-{batch_id:010d}.json"
+        self.manifest = Manifest(out_dir, "_stream_manifest", "batch", 10)
 
     def committed(self) -> list[int]:
-        d = self.out / "_stream_manifest"
-        if not d.is_dir():
-            return []
-        return sorted(
-            int(p.stem.split("-")[1]) for p in d.glob("batch-*.json")
-        )
+        return sorted(self.manifest.completed_parts())
+
+    def _write(self, batch_df: DataFrame, batch_id: int, data_dir: str) -> None:
+        batch_df.write.mode("overwrite").parquet(data_dir)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        rec_path = self._record(batch_id)
-        if rec_path.exists():
+        if self.manifest.path(batch_id).exists():
             return  # replayed micro-batch: already committed
-        batch_dir = self.out / "data" / f"batch_id={batch_id}"
-        batch_df.write.mode("overwrite").parquet(str(batch_dir))
-        try:
-            n = batch_df.sparkSession.read.parquet(str(batch_dir)).count()
-        except Exception:
-            n = 0  # empty micro-batch: no part files were produced
-        rec_path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = rec_path.with_suffix(".json.tmp")
-        tmp.write_text(
-            json.dumps(
-                {"batch_id": batch_id, "run_id": self.run_id, "rows": n}
-            )
+        data_dir = str(self.out / "data" / f"batch_id={batch_id}")
+        self._write(batch_df, batch_id, data_dir)
+        n = batch_df.sparkSession.read.parquet(data_dir).count()
+        self.manifest.commit(
+            batch_id, {"batch_id": batch_id, "run_id": self.run_id, "rows": n}
         )
-        os.replace(tmp, rec_path)
+
+
+def _committed_sink(
+    df: DataFrame, committer: _BatchCommitter, checkpoint_dir: str
+) -> tuple[DataStreamWriter, _BatchCommitter]:
+    """The append-mode stream writer that hands every micro-batch of ``df``
+    to ``committer``, checkpointed at ``checkpoint_dir``; the caller picks
+    the trigger."""
+    writer = (
+        df.writeStream.foreachBatch(committer)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    return writer, committer
 
 
 # Compaction state machine (crash-safe; every transition is a single
 # os.rename, recovery rolls an interrupted run forward):
 #   _compact_next  — the fully-written NEW generation; complete iff it holds
-#                    a _COMPACT_META.json (written tmp+replace) recording the
+#                    a _COMPACT_META.json (an _atomic_write) recording the
 #                    batch_ids it folded in. Underscore-prefixed files are
 #                    invisible to Spark scans, so the meta can live inside
 #                    the generation dir itself.
@@ -250,11 +264,6 @@ def _recover_compaction(out: pathlib.Path) -> None:
     target = data / "batch_id=-1"
     nxt = out / _COMPACT_NEXT
     old = out / _COMPACT_OLD
-    # legacy staging dirs from the pre-meta protocol: never committed
-    for leg in ("_compact_tmp", "_compact_merge"):
-        p = out / leg
-        if p.exists():
-            shutil.rmtree(p)
     if nxt.exists():
         if _compact_meta(nxt) is None:
             shutil.rmtree(nxt)  # crashed mid-write; nothing was committed
@@ -330,11 +339,10 @@ def compact_stream_output(
     merged.repartition(partitions).write.mode("overwrite").parquet(str(nxt))
     rows_total = spark.read.parquet(str(nxt)).count()
     covered = [int(p.name.split("=", 1)[1]) for p in batch_dirs]
-    meta_tmp = nxt / (_COMPACT_META + ".tmp")
-    meta_tmp.write_text(
-        json.dumps({"covered": covered, "rows": rows, "rows_total": rows_total})
+    _atomic_write(  # the stage is now complete
+        nxt / _COMPACT_META,
+        json.dumps({"covered": covered, "rows": rows, "rows_total": rows_total}),
     )
-    os.replace(meta_tmp, nxt / _COMPACT_META)  # stage is now complete
     if target.exists():
         os.rename(target, out / _COMPACT_OLD)
     os.rename(nxt, target)  # commit point
@@ -375,13 +383,9 @@ def incremental_extract(
     if dedup:
         src = dedup_recrawls(src, watermark)
     extracted = extract_pages(src, keep_meta=meta)
-    committer = _BatchCommitter(out_dir, run_id)
-    writer = (
-        extracted.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _committed_sink(
+        extracted, _BatchCommitter(out_dir, run_id), checkpoint_dir
     )
-    return writer, committer
 
 
 def incremental_tables(
@@ -404,18 +408,14 @@ def incremental_tables(
     if dedup:
         src = dedup_recrawls(src, watermark)
     cells = extract_tables(src)
-    committer = _BatchCommitter(out_dir, run_id)
-    writer = (
-        cells.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _committed_sink(
+        cells, _BatchCommitter(out_dir, run_id), checkpoint_dir
     )
-    return writer, committer
 
 
 # --- incremental near-dup suppression (streaming MinHash LSH) ----------------
 
-class _MinhashDedupCommitter:
+class _MinhashDedupCommitter(_BatchCommitter):
     """foreachBatch function: per-micro-batch MinHash near-dup suppression
     against the accumulated band-key store.
 
@@ -445,11 +445,11 @@ class _MinhashDedupCommitter:
     test pins). Store size becomes bands×docs-seen instead of
     bands×docs-kept — still linear, same scan pattern.
 
-    Exactly-once: both writes are batch-scoped ``mode("overwrite")`` and
-    the manifest record commits last (same contract as
-    :class:`_BatchCommitter`); the store read excludes the current
-    batch_id, so a replayed batch sees exactly the store state of its
-    first attempt and recomputes the identical kept set.
+    Exactly-once: :class:`_BatchCommitter`'s protocol, with a second
+    batch-scoped ``mode("overwrite")`` write (the sigstore) before the
+    commit; the store read excludes the current batch_id, so a replayed
+    batch sees exactly the store state of its first attempt and recomputes
+    the identical kept set.
 
     Scale: the cross-batch check is one linear pass over the store with
     BROADCAST-only joins of the (small) batch side — the store is never
@@ -471,22 +471,10 @@ class _MinhashDedupCommitter:
     ) -> None:
         from ocr_spark.queries_textml import BANDS, NUM_PERMS
 
-        self.out = pathlib.Path(out_dir)
-        self.run_id = run_id
+        super().__init__(out_dir, run_id)
         self.num_perms = num_perms or NUM_PERMS
         self.bands = bands or BANDS
         self.full_cc = full_cc
-
-    def _record(self, batch_id: int) -> pathlib.Path:
-        return self.out / "_stream_manifest" / f"batch-{batch_id:010d}.json"
-
-    def committed(self) -> list[int]:
-        d = self.out / "_stream_manifest"
-        if not d.is_dir():
-            return []
-        return sorted(
-            int(p.stem.split("-")[1]) for p in d.glob("batch-*.json")
-        )
 
     def _band_keys(self, docs: DataFrame) -> DataFrame:
         from ocr_spark.queries_textml import (
@@ -500,12 +488,9 @@ class _MinhashDedupCommitter:
             self.num_perms // self.bands,
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _write(self, batch_df: DataFrame, batch_id: int, data_dir: str) -> None:
         from ocr_spark.queries_textml import minhash_group_reps
 
-        rec_path = self._record(batch_id)
-        if rec_path.exists():
-            return  # replayed micro-batch: already committed
         spark = batch_df.sparkSession
         cc_labels = None  # persisted by the fixpoint; released at the end
         if self.full_cc:
@@ -513,8 +498,8 @@ class _MinhashDedupCommitter:
 
             # within-batch TRUE connected components (fixpoint, eager) —
             # keep the handle so the persisted labels are unpersisted once
-            # the batch commits (a long-running stream must not accumulate
-            # one cached frame per micro-batch)
+            # the batch is written (a long-running stream must not
+            # accumulate one cached frame per micro-batch)
             cc_labels = bucket_connected_components(
                 self._band_keys(batch_df.select("doc_id", "text"))
             )
@@ -556,9 +541,8 @@ class _MinhashDedupCommitter:
                 .distinct()
             )
             kept = kept.join(F.broadcast(dup_ids), "doc_id", "left_anti")
-        kept = kept.persist()  # consumed by both writes + the row count
-        data_dir = self.out / "data" / f"batch_id={batch_id}"
-        kept.write.mode("overwrite").parquet(str(data_dir))
+        kept = kept.persist()  # consumed by both writes
+        kept.write.mode("overwrite").parquet(data_dir)
         sig_dir = self.out / "sigstore" / f"batch_id={batch_id}"
         # full_cc: record EVERY doc's band keys (kept and dropped) so later
         # docs chaining to this component only through a dropped doc still
@@ -568,21 +552,9 @@ class _MinhashDedupCommitter:
         self._band_keys(store_side).write.mode("overwrite").parquet(
             str(sig_dir)
         )
-        try:
-            n = spark.read.parquet(str(data_dir)).count()
-        except Exception:
-            n = 0  # empty micro-batch: no part files were produced
         kept.unpersist()
         if cc_labels is not None:
             cc_labels.unpersist()
-        rec_path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = rec_path.with_suffix(".json.tmp")
-        tmp.write_text(
-            json.dumps(
-                {"batch_id": batch_id, "run_id": self.run_id, "rows": n}
-            )
-        )
-        os.replace(tmp, rec_path)
 
 
 def incremental_dedup_minhash(
@@ -613,12 +585,7 @@ def incremental_dedup_minhash(
     committer = _MinhashDedupCommitter(
         out_dir, run_id, num_perms, bands, full_cc=full_cc
     )
-    writer = (
-        docs_stream.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    return writer, committer
+    return _committed_sink(docs_stream, committer, checkpoint_dir)
 
 
 # --- incremental link-graph maintenance (SPEC §5 over the stream) -------------
@@ -673,13 +640,9 @@ def incremental_hostlinks(
     from ocr_spark.operators.extract import extract_outlinks
 
     links = extract_outlinks(stream_pages(spark, pages_dir))
-    committer = _EdgeDeltaCommitter(out_dir, run_id)
-    writer = (
-        links.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _committed_sink(
+        links, _EdgeDeltaCommitter(out_dir, run_id), checkpoint_dir
     )
-    return writer, committer
 
 
 def hostlinks_totals(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -750,13 +713,9 @@ def incremental_warc_ingest(
     each archive file exactly once."""
     src = stream_warc(spark, archive_dir, max_files_per_trigger)
     df = extract_pages(src) if extract else src
-    committer = _BatchCommitter(out_dir, run_id)
-    writer = (
-        df.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _committed_sink(
+        df, _BatchCommitter(out_dir, run_id), checkpoint_dir
     )
-    return writer, committer
 
 
 # --- streaming HLL maintenance (distinct-count registers over a stream) ------
@@ -807,13 +766,9 @@ def incremental_hll(
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    committer = _HLLRegisterCommitter(out_dir, run_id, key_expr)
-    writer = (
-        src.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _committed_sink(
+        src, _HLLRegisterCommitter(out_dir, run_id, key_expr), checkpoint_dir
     )
-    return writer, committer
 
 
 def hll_totals(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -925,13 +880,9 @@ def incremental_dq(
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    committer = _DQCounterCommitter(out_dir, run_id, constraints)
-    writer = (
-        src.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _committed_sink(
+        src, _DQCounterCommitter(out_dir, run_id, constraints), checkpoint_dir
     )
-    return writer, committer
 
 
 def dq_stream_verdicts(
@@ -982,13 +933,9 @@ def incremental_scd2(
     purchases = src.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", "value"
     )
-    committer = _BatchCommitter(out_dir, run_id)
-    writer = (
-        purchases.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _committed_sink(
+        purchases, _BatchCommitter(out_dir, run_id), checkpoint_dir
     )
-    return writer, committer
 
 
 def scd2_intervals(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1115,13 +1062,9 @@ def incremental_reservoir(
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    committer = _ReservoirCommitter(out_dir, run_id, k or _RES_K)
-    writer = (
-        src.writeStream.foreachBatch(committer)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _committed_sink(
+        src, _ReservoirCommitter(out_dir, run_id, k or _RES_K), checkpoint_dir
     )
-    return writer, committer
 
 
 def reservoir_totals(

@@ -99,7 +99,13 @@ def versions(root: str) -> list[int]:
     )
 
 
-def _atomic_write(path: str, text: str) -> None:
+def _atomic_write(path: str | os.PathLike, text: str) -> None:
+    """Write ``text`` to ``path`` through a uniquely named temp file and one
+    ``os.replace``: readers see the old file or the new one, never a torn
+    one, and two writers of one path never share a temp file. Every commit
+    record of the engine goes through here (snapshot and ref pointers, the
+    runner's manifest and staging marker, the stream batch records and the
+    compaction meta)."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         f.write(text)
@@ -698,26 +704,26 @@ def expire(root: str, keep_last: int = 2) -> tuple[int, int]:
     if cur is not None:
         keep.add(cur)
     # ref-pointed snapshots (branch heads, tags) are pinned, AND so is
-    # each head's ancestor chain down to the nearest already-kept
-    # snapshot: publish_branch walks parent pointers to prove CURRENT is
-    # an ancestor of the head, so expiring an intermediate branch (or
-    # branch-point) snapshot would wedge a legal fast-forward publish
-    # with a missing-file walk. Cost is bounded by branch length.
+    # each head's whole ancestor chain: publish_branch walks parent
+    # pointers until it meets CURRENT, so expiring any snapshot between a
+    # head and CURRENT would wedge a legal fast-forward publish with a
+    # missing-file walk. The walk stops at CURRENT or at a chain already
+    # pinned in this pass — NOT at a snapshot kept by recency, whose own
+    # parents are not pinned (the keep_last tail can sit on the branch,
+    # above the branch point). Cost is bounded by history length.
+    chain_pinned: set[int] = set()
     for kind in ("branches", "tags"):
         d = os.path.join(root, "refs", kind)
         if os.path.isdir(d):
             for n in os.listdir(d):
-                head = _read_ref(root, kind, n)
-                keep.add(head)
-                v: int | None = head
-                while True:
+                v: int | None = _read_ref(root, kind, n)
+                while v is not None and v != cur and v not in chain_pinned:
+                    chain_pinned.add(v)
                     try:
                         v = _read_snapshot(root, v).get("parent")
                     except FileNotFoundError:
                         break  # already-expired history: walk ends
-                    if v is None or v in keep:
-                        break  # reached the nearest kept snapshot
-                    keep.add(v)
+    keep |= chain_pinned
     reachable: set[str] = set()
     for v in keep:
         reachable.update(_read_snapshot(root, v)["files"])
@@ -883,8 +889,8 @@ def _ancestors(root: str, version: int) -> set[int]:
     history beyond an expired snapshot is simply unreachable, so callers
     (publish_branch) see an honest ConflictError — 'not an ancestor' —
     instead of a FileNotFoundError crash. expire() pins every ref head's
-    chain down to the nearest kept snapshot precisely so a LEGAL
-    fast-forward never hits this truncation."""
+    chain down to CURRENT precisely so a LEGAL fast-forward never hits
+    this truncation."""
     out = set()
     v: int | None = version
     while v is not None and v not in out:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 import pathlib
 import sys
 
@@ -20,7 +21,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from ocr_spark.session import build_session
 
-    spark = build_session(master="local[8]", app_name="ocr-spark-tests",
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = build_session(master=f"local[{cpus}]", app_name="ocr-spark-tests",
                           shuffle_partitions=8)
     yield spark
     spark.stop()

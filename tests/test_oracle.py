@@ -134,6 +134,28 @@ def test_query_matches_oracle(spark, duck, name):
         )
 
 
+# DuckDB widens sum() over integers to HUGEINT (and over decimals to a
+# wider DECIMAL) where Spark keeps BIGINT, and the correctness gate
+# compares the values as each client returns them: a widened oracle column
+# fails a correct Spark answer. Every integer sum in an oracle carries an
+# outer CAST(... AS BIGINT); a cast inside the sum does not narrow it.
+_WIDE_TYPES = ("HUGEINT", "UHUGEINT", "DECIMAL")
+
+
+def test_oracle_result_types_not_widened(duck):
+    _, o = _pairs()
+    wide = {}
+    for name, sql in sorted(o.items()):
+        res = duck.sql(sql)
+        cols = [
+            f"{c} {t}" for c, t in zip(res.columns, res.types)
+            if str(t).startswith(_WIDE_TYPES)
+        ]
+        if cols:
+            wide[name] = cols
+    assert not wide, f"oracle columns widened by DuckDB: {wide}"
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as entrymod
 

@@ -157,6 +157,33 @@ def test_staging_marker_validates_num_parts_and_input(spark, tmp_path):
     assert len(res["parts_done_now"]) == N_PARTS - 2
 
 
+def test_unparseable_staging_marker_raises(spark, tmp_path):
+    """A staging marker that does not parse says nothing about the staged
+    layout it guards, so a resumed run raises instead of reusing it."""
+    import json
+
+    from ocr_spark.operators.runner import Manifest, run_extract
+
+    src = tmp_path / "pages"
+    out = tmp_path / "out"
+    pages = _write_pages(spark, src, n=120)
+
+    class _Kill(Exception):
+        pass
+
+    def killer(batch):
+        raise _Kill()
+
+    with pytest.raises(_Kill):
+        run_extract(spark, pages, str(out), run_id="r1", num_parts=N_PARTS,
+                    parts_per_batch=2, after_batch=killer)
+    (out / "_staged" / "_STAGING_COMPLETE").write_text("ok")
+    with pytest.raises(json.JSONDecodeError):
+        run_extract(spark, pages, str(out), run_id="r2", num_parts=N_PARTS,
+                    parts_per_batch=2)
+    assert len(Manifest(out).completed_parts()) == 2
+
+
 def test_data_location_override(spark, tmp_path):
     """run_extract(data_location=...) sends the DATA rows through the table
     layer to a separate location (iceberg: the day a jar appears) while

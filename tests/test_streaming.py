@@ -61,7 +61,7 @@ def test_foreachbatch_replay_is_idempotent(spark, fixture_df, tmp_path):
     committer(small, 7)  # replay
     assert spark.read.parquet(f"{out}/data").count() == 5
     assert committer.committed() == [7]
-    rec = json.loads((committer._record(7)).read_text())
+    rec = json.loads(committer.manifest.path(7).read_text())
     assert rec["rows"] == 5
 
 
@@ -77,10 +77,39 @@ def test_crash_between_write_and_commit_does_not_duplicate(spark, fixture_df,
     small = fixture_df.limit(5).select("url", "lang")
     committer(small, 3)
     # simulate the crash: the data landed but the commit record vanished
-    committer._record(3).unlink()
+    committer.manifest.path(3).unlink()
     committer(small, 3)  # replay of the same micro-batch
     assert spark.read.parquet(f"{out}/data").count() == 5
     assert committer.committed() == [3]
+
+
+def test_readback_failure_leaves_batch_uncommitted(spark, fixture_df,
+                                                   tmp_path, monkeypatch):
+    """A read-back error after the batch write must surface and leave the
+    batch uncommitted; committing it anyway records a wrong row count for
+    data that was written. The replay then commits the true count once."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from ocr_spark.streaming.incremental import _BatchCommitter
+
+    out = str(tmp_path / "out")
+    committer = _BatchCommitter(out, run_id="r1")
+    small = fixture_df.limit(5).select("url", "lang")
+
+    def failing_read(self, *paths, **options):
+        raise OSError("injected read-back failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", failing_read)
+        with pytest.raises(OSError, match="injected"):
+            committer(small, 4)
+    assert committer.committed() == []
+
+    committer(small, 4)  # the replay of the failed micro-batch
+    committer(small, 4)  # a replay of the committed one
+    assert committer.committed() == [4]
+    assert json.loads(committer.manifest.path(4).read_text())["rows"] == 5
+    assert spark.read.parquet(f"{out}/data").count() == 5
 
 
 def test_committer_evaluates_batch_once(spark, tmp_path):
@@ -102,7 +131,7 @@ def test_committer_evaluates_batch_once(spark, tmp_path):
     committer = _BatchCommitter(str(tmp_path / "out"), run_id="r1")
     committer(instrumented, 0)
     assert acc.value == 100  # not 200: plan ran once
-    rec = json.loads(committer._record(0).read_text())
+    rec = json.loads(committer.manifest.path(0).read_text())
     assert rec["rows"] == 100
 
 
@@ -449,7 +478,7 @@ def test_incremental_minhash_dedup(spark, tmp_path):
 
     # crash window: record lost after the writes -> recommit recomputes the
     # identical kept set (store read excludes the current batch_id)
-    committer._record(last).unlink()
+    committer.manifest.path(last).unlink()
     committer(docs_b2, last)
     assert {
         r.doc_id for r in spark.read.parquet(f"{out}/data").collect()

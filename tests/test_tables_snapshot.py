@@ -678,7 +678,7 @@ def test_expire_pins_branch_ancestors_for_publish(spark, tmp_path):
     expiring an intermediate branch snapshot made a legal fast-forward
     publish crash walking parent pointers (FileNotFoundError) and wedged
     the branch forever. expire now pins each head's ancestor chain down
-    to the nearest kept snapshot, so publish still proves ancestry."""
+    to CURRENT, so publish still proves ancestry."""
     from ocr_spark import tables_snapshot as ts
 
     root = str(tmp_path / "t")
@@ -695,6 +695,28 @@ def test_expire_pins_branch_ancestors_for_publish(spark, tmp_path):
     head = ts.publish_branch(root, "b")  # legal fast-forward: must work
     assert ts.current_version(root) == head
     assert ts.read(spark, root).count() == 10
+
+
+def test_expire_pins_branch_chain_below_the_kept_tail(spark, tmp_path):
+    """With keep_last=2 the recency tail is the top of the branch itself.
+    A pin walk that stopped at the first kept snapshot left the branch
+    commits below the tail unpinned, expire dropped them, and the branch
+    could never publish again. The walk now runs down to CURRENT."""
+    from ocr_spark import tables_snapshot as ts
+
+    root = str(tmp_path / "t")
+    ts.create(spark.range(0, 4).selectExpr("id AS doc_id"), root)  # v1
+    ts.create_branch(root, "b")
+    for k in range(4):  # v2..v5 on the branch; the tail is v4, v5
+        ts.append_branch(
+            spark.range(10 * k, 10 * k + 2).selectExpr("id AS doc_id"),
+            root, "b",
+        )
+    dropped, deleted = ts.expire(root, keep_last=2)
+    assert (dropped, deleted) == (0, 0)
+    head = ts.publish_branch(root, "b")
+    assert head == 5 and ts.current_version(root) == 5
+    assert ts.read(spark, root).count() == 12
 
 
 def test_ancestors_tolerate_missing_snapshot(tmp_path, spark):
