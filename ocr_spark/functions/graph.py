@@ -493,6 +493,8 @@ def personalized_pagerank(
     )
     n_seeds = nodes.filter(F.col("is_seed") == 1).count()
     if n_seeds == 0:
+        for df in (e, ow, nodes):
+            df.unpersist()
         raise ValueError("personalized_pagerank: empty seed set")
     dangling = nodes.select("node").join(
         ow.select("node"), "node", "left_anti"

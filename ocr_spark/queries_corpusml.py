@@ -842,6 +842,13 @@ def q_text_ppl_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     math, trained and scored distributed). Docs with < 2 words have no
     bigrams and are absent, mirrored by the oracle. Independent pure-Python
     reference in tests/test_corpusml_kn.py."""
+    return _kn_scores(spark, sf_dir)[0]
+
+
+def _kn_scores(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """``text_ppl_kn``'s rows and the persisted bigram table they read."""
     d = t(spark, sf_dir, "documents")
     ws = d.select(
         "doc_id", F.expr(_WORDS_SPARK.format(col="lower(text)")).alias("ws")
@@ -900,7 +907,7 @@ def q_text_ppl_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum("nll_e4").alias("sum_nll_e4"),
         )
-    )
+    ), bg
 
 
 # --- CCNet head/middle/tail perplexity buckets (round 4 late) -------------------------
@@ -952,7 +959,7 @@ def q_pipe_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Thresholds via integer-exact percentile_disc on the distinct-score
     histogram (window over bounded-cardinality rows, not a doc sort);
     docs join the 1-row threshold frame broadcast."""
-    kn = q_text_ppl_kn(spark, sf_dir)
+    kn, bg = _kn_scores(spark, sf_dir)
     # `scored` (doc_id + one int — |docs| rows) feeds THREE consumers
     # (histogram, count, final bucket select); without materialization
     # each re-runs the KN scoring join over the corpus. One eager
@@ -963,6 +970,7 @@ def q_pipe_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = kn.select(
         "doc_id", F.expr("sum_nll_e4 div n_bigrams").alias("avg_nll_e4")
     ).localCheckpoint(eager=True)
+    bg.unpersist()
     hist = scored.groupBy("avg_nll_e4").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("avg_nll_e4").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

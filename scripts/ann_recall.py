@@ -25,11 +25,10 @@ import json
 import pathlib
 import sys
 
-from pyspark.sql import SparkSession
-
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from ocr_spark.functions import ann  # noqa: E402
+from ocr_spark.session import build_session  # noqa: E402
 
 SETTINGS = [
     (8, 1, False, "lsh_8planes"),
@@ -109,14 +108,7 @@ def _table(settings: dict[str, dict]) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     probe_mod = int(sys.argv[2]) if len(sys.argv) > 2 else 20
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .appName("ann_recall")
-        .getOrCreate()
-    )
+    spark = build_session(app_name="ann_recall")
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     iso = measure(e, probe_mod)
     n_vec, n_probes = iso["_meta"]["n_vectors"], iso["_meta"]["n_probes"]

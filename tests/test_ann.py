@@ -16,21 +16,24 @@ from ocr_spark.functions import ann
 def emb(spark):
     e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").cache()
     e.count()
-    return e
+    yield e
+    e.unpersist()
 
 
 @pytest.fixture(scope="module")
 def probes(spark, emb):
     p = ann.default_probes(emb, 20).cache()
     p.count()
-    return p
+    yield p
+    p.unpersist()
 
 
 @pytest.fixture(scope="module")
 def truth(emb, probes):
     t = ann.brute_force_topk(emb, probes, 10).cache()
     t.count()
-    return t
+    yield t
+    t.unpersist()
 
 
 def _recall(emb, probes, truth, **kw) -> float:
@@ -86,6 +89,8 @@ def test_trained_centroids_beat_seeded(emb, probes, truth):
     r_train = ann.recall_at_k(
         ann.ivf_topk(emb, trained, probes, nprobe=2), truth, 10
     )
+    seeded.unpersist()
+    trained.unpersist()
     assert r_train >= r_seed
 
 
@@ -99,6 +104,7 @@ def test_ivf_nprobe_monotone(emb, probes, truth):
         )
         for np in (1, 2, 8)
     ]
+    trained.unpersist()
     assert rs[0] <= rs[1] <= rs[2]
     assert rs[2] == 1.0
 
@@ -107,18 +113,27 @@ def test_ivf_nprobe_monotone(emb, probes, truth):
 def clustered(spark):
     e = ann.clustered_embeddings(spark, n=500).cache()
     e.count()
-    return e
+    yield e
+    e.unpersist()
 
 
-def test_clustered_corpus_lsh_recall(spark, clustered):
+@pytest.fixture
+def clustered_probes_truth(clustered):
+    probes = ann.default_probes(clustered, 20).cache()
+    truth = ann.brute_force_topk(clustered, probes, 10).cache()
+    yield probes, truth
+    truth.unpersist()
+    probes.unpersist()
+
+
+def test_clustered_corpus_lsh_recall(spark, clustered, clustered_probes_truth):
     """On data WITH cluster structure (the geometry real embedding corpora
     have) the same LSH settings that look weak on the isotropic driver
     table reach production recall at a few percent of brute-force cost —
     the BENCH/ANN.md corpus-2 claim, pinned at a 500-vector scale. The
     corpus is deterministic, so these are fixed numbers with margin, not
     flaky thresholds."""
-    probes = ann.default_probes(clustered, 20).cache()
-    truth = ann.brute_force_topk(clustered, probes, 10).cache()
+    probes, truth = clustered_probes_truth
     n_probes = probes.count()
     n_vec = clustered.count()
 
@@ -216,12 +231,11 @@ def test_pq_training_and_rerank_buy_recall(emb, probes, truth):
     assert r_rerank >= r_trained + 0.1
 
 
-def test_pq_clustered_rerank_is_exact(spark, clustered):
+def test_pq_clustered_rerank_is_exact(spark, clustered, clustered_probes_truth):
     """On the clustered corpus the 50-deep ADC shortlist contains the whole
     true top-10: rerank recall 1.0 at a 10% candidate fraction (measured,
     deterministic)."""
-    probes = ann.default_probes(clustered, 20).cache()
-    truth = ann.brute_force_topk(clustered, probes, 10).cache()
+    probes, truth = clustered_probes_truth
     ct = ann.pq_train_codebooks(clustered)
     r = ann.recall_at_k(
         ann.pq_rerank_topk(clustered, ct, probes, 10, shortlist=50),

@@ -15,6 +15,8 @@ import sys
 
 import pytest
 
+from tests.conftest import collect_then_uncache
+
 REPO = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
@@ -73,7 +75,8 @@ def test_near_keepers_full_cc_subset(spark):
     star = {r["doc_id"] for r in near_keepers(d).select("doc_id").collect()}
     cc = {
         r["doc_id"]
-        for r in near_keepers(d, full_cc=True).select("doc_id").collect()
+        for r in collect_then_uncache(
+            near_keepers(d, full_cc=True).select("doc_id"))
     }
     assert cc and cc <= star
 

@@ -16,6 +16,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from ocr_spark.queries import QUERIES
+from tests.conftest import collect_then_uncache
 import ocr_spark.queries_corpusml as cm  # registers; constants
 
 
@@ -866,11 +867,11 @@ def test_lr_calibration_consistency(spark):
 
     sf = "/root/testdata/sf0.01"
     rows = sorted(
-        QUERIES["quality_lr_calibration"](spark, sf).collect(),
+        collect_then_uncache(QUERIES["quality_lr_calibration"](spark, sf)),
         key=lambda r: r["bucket"],
     )
     assert rows
-    n_scored = QUERIES["quality_lr_score"](spark, sf).count()
+    n_scored = len(collect_then_uncache(QUERIES["quality_lr_score"](spark, sf)))
     assert sum(r["n"] for r in rows) == n_scored
     preds = [r["mean_pred_e6"] for r in rows]
     assert preds == sorted(preds)

@@ -9,6 +9,8 @@ from collections import Counter, defaultdict
 
 import pytest
 
+from tests.conftest import collect_then_uncache
+
 DOCS = [
     (0, "the cat sat on the mat"),
     (1, "the cat ate the fish"),
@@ -62,8 +64,11 @@ def kn_rows(spark, tmp_path_factory):
         [(i, s, "en", "test", len(s)) for i, s in DOCS],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(f"{sf}/documents.parquet")
-    q = all_queries()["text_ppl_kn"]
-    return {r.doc_id: (r.n_bigrams, r.sum_nll_e4) for r in q(spark, sf).collect()}
+    kn = all_queries()["text_ppl_kn"](spark, sf)
+    return {
+        r.doc_id: (r.n_bigrams, r.sum_nll_e4)
+        for r in collect_then_uncache(kn)
+    }
 
 
 def test_kn_matches_pure_python_reference(kn_rows):
@@ -131,10 +136,10 @@ def test_ppl_buckets_match_pure_python(spark, kn_rows, tmp_path_factory):
         [(i, s, "en", "test", len(s)) for i, s in DOCS],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(f"{sf}/documents.parquet")
-    q = all_queries()["pipe_ppl_buckets"]
+    buckets = all_queries()["pipe_ppl_buckets"](spark, sf)
     got = {
         r.doc_id: (r.avg_nll_e4, r.ppl_bucket)
-        for r in q(spark, sf).collect()
+        for r in collect_then_uncache(buckets)
     }
     assert got == want
     assert set(b for _, b in got.values()) == {"head", "middle", "tail"}

@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, collect_then_uncache
 from ocr_spark.functions.graph import bucket_connected_components
 from ocr_spark.queries import t
 from ocr_spark.queries_textml import (
@@ -35,7 +35,8 @@ def _chain_buckets(spark):
 def test_chain_fully_merges(spark):
     got = {
         r["doc_id"]: r["rep"]
-        for r in bucket_connected_components(_chain_buckets(spark)).collect()
+        for r in collect_then_uncache(
+            bucket_connected_components(_chain_buckets(spark)))
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 7: 7}
 
@@ -57,11 +58,13 @@ def test_partitioning_invariance(spark):
     b = _chain_buckets(spark)
     one = sorted(
         (r["doc_id"], r["rep"])
-        for r in bucket_connected_components(b.coalesce(1)).collect()
+        for r in collect_then_uncache(
+            bucket_connected_components(b.coalesce(1)))
     )
     many = sorted(
         (r["doc_id"], r["rep"])
-        for r in bucket_connected_components(b.repartition(8)).collect()
+        for r in collect_then_uncache(
+            bucket_connected_components(b.repartition(8)))
     )
     assert one == many
 
@@ -112,7 +115,8 @@ def test_cc_equals_union_find_on_random_graphs(spark):
         df = spark.createDataFrame(rows, "doc_id long, bi int, band string")
         got = {
             r["doc_id"]: r["rep"]
-            for r in bucket_connected_components(df).collect()
+            for r in collect_then_uncache(
+                bucket_connected_components(df))
         }
         assert got == expect, f"seed {seed}"
 
@@ -124,9 +128,8 @@ def test_cc_refines_star_pass_on_documents(spark):
     }
     cc = {
         r["doc_id"]: r["rep"]
-        for r in bucket_connected_components(
-            minhash_band_keys(minhash_signatures(docs))
-        ).collect()
+        for r in collect_then_uncache(bucket_connected_components(
+            minhash_band_keys(minhash_signatures(docs))))
     }
     assert set(cc) == set(star)
     # CC only ever merges further: same star rep => same cc rep, and the cc

@@ -13,7 +13,7 @@ import math
 import duckdb
 import pytest
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, collect_then_uncache
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -46,7 +46,7 @@ def _canon(v):
 
 def _spark_rows(df):
     cols = sorted(df.columns)
-    rows = df.collect()
+    rows = collect_then_uncache(df)
     return cols, sorted(
         tuple(_canon(r[c]) for c in cols) for r in rows
     )

@@ -10,6 +10,8 @@ import time
 
 import pytest
 
+from tests.conftest import collect_then_uncache
+
 
 @pytest.fixture()
 def pages_dir(spark, fixture_df, tmp_path):
@@ -575,9 +577,9 @@ def test_incremental_full_cc_chain_across_batches(spark, tmp_path):
 
     batch_kept = {
         r.doc_id
-        for r in near_keepers(
+        for r in collect_then_uncache(near_keepers(
             _mk_docs(spark, rows), num_perms=NP, bands=NB, full_cc=True
-        ).select("doc_id").collect()
+        ).select("doc_id"))
     }
     assert batch_kept == {1}
     assert run_stream(True, "cc") == batch_kept

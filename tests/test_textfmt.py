@@ -20,7 +20,10 @@ def _rows(df):
 def hostile(spark):
     from ocr_spark.queries_formats import _hostile
 
-    return _hostile(spark, SF_SMALL, nested=True).cache()
+    df = _hostile(spark, SF_SMALL, nested=True).cache()
+    df.count()
+    yield df
+    df.unpersist()
 
 
 def test_jsonl_roundtrip_lossless(spark, hostile, tmp_path):

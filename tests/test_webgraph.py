@@ -16,7 +16,7 @@ import math
 import duckdb
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, collect_then_uncache
 
 from ocr_spark.queries_webgraph import (
     BOILER_DF,
@@ -222,7 +222,7 @@ def test_dsir_matches_python_reference(spark):
     }
     got = {
         r.doc_id: (r.weight_e4, r.n_tokens)
-        for r in q_pipe_dsir(spark, SF_SMALL).collect()
+        for r in collect_then_uncache(q_pipe_dsir(spark, SF_SMALL))
     }
     assert got == expect
 
@@ -236,7 +236,7 @@ def test_dsir_target_docs_score_higher(spark):
     )
     lang = dict(rows)
     per = [(lang[r.doc_id], r.weight_e4 / max(r.n_tokens, 1))
-           for r in df.collect()]
+           for r in collect_then_uncache(df)]
     t = [w for lg, w in per if lg == DSIR_TARGET_LANG]
     o = [w for lg, w in per if lg != DSIR_TARGET_LANG]
     assert sum(t) / len(t) > sum(o) / len(o)
@@ -282,12 +282,12 @@ def test_quality_lr_matches_python_reference(spark):
     w_ref, scores_ref = _lr_reference()
     got_w = {
         r.bucket: r.w_e6
-        for r in q_quality_lr_weights(spark, SF_SMALL).collect()
+        for r in collect_then_uncache(q_quality_lr_weights(spark, SF_SMALL))
     }
     assert got_w == {j: w_ref[j] for j in range(LR_B)}
     got_s = {
         r.doc_id: (r.p_e6, r.pred, r.label)
-        for r in q_quality_lr_score(spark, SF_SMALL).collect()
+        for r in collect_then_uncache(q_quality_lr_score(spark, SF_SMALL))
     }
     assert got_s == scores_ref
 
@@ -295,7 +295,7 @@ def test_quality_lr_matches_python_reference(spark):
 def test_quality_lr_actually_learns(spark):
     # after 3 GD steps the classifier must beat the majority-class baseline
     # on its own training set (sanity that the gradient sign is right)
-    rows = q_quality_lr_score(spark, SF_SMALL).collect()
+    rows = collect_then_uncache(q_quality_lr_score(spark, SF_SMALL))
     acc = sum(1 for r in rows if r.pred == r.label) / len(rows)
     maj = max(
         sum(1 for r in rows if r.label == 1),
@@ -627,7 +627,8 @@ def test_host_components_match_union_find(spark):
 
     sf = "/root/testdata/sf0.001"
     got = {
-        r.host: r.rep for r in q_graph_host_components(spark, sf).collect()
+        r.host: r.rep
+        for r in collect_then_uncache(q_graph_host_components(spark, sf))
     }
 
     import duckdb
