@@ -2,11 +2,22 @@
 
 This is the hot Python path of the whole engine: it runs inside
 ``mapInArrow`` / scalar-iter ``pandas_udf`` workers over Arrow batches
-(SURVEY.md §2 ops 11, 57, 60). The extraction tail — classification,
-smoothing, span offsets, assembly and the text hash (ops 13-17) — runs in
-the same per-document pass that parses the blocks (``extract_batch``), so
-the flagship extraction crosses into Python once and comes back with
-finished rows.
+(SURVEY.md §2 ops 11, 57, 60). Two layers:
+
+- the parser, one document at a time, keeps only ``(tag, depth, text,
+  link_chars)`` per block (plus a bbox on PDF payloads);
+- one batch kernel does the rest over the batch's flat block-text array:
+  the SPEC.md §2 features (:func:`block_features`: Arrow string kernels,
+  the stopword predicate once per distinct token, language recovery of
+  untagged pages), classification and smoothing (:func:`label_mask`) and
+  span offsets, assembly and the text hash (:func:`assemble_batch`), ops
+  13-17 as numpy over whole columns.
+
+``extract_batch`` chains both, so the flagship extraction crosses into
+Python once and comes back with finished rows; ``parse_batch_columnar``
+stops after the features. Every consumer of the tail (the fused
+extraction, the staged ``label_blocks``/``assemble`` hops, language
+recovery) runs these same functions.
 
 It is one of TWO independent implementations of SPEC.md — the other is the
 frozen single-threaded ``ocr_spark.goldenref`` used to produce golden
@@ -26,6 +37,10 @@ import hashlib
 import json
 import re
 from html.parser import HTMLParser
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ocr_spark import spec
 
@@ -143,7 +158,6 @@ class _BlockParser(HTMLParser):
         "ctx_tag",
         "ctx_depth",
         "blocks",
-        "stopset",
         "links",
         "link_href",
         "link_buf",
@@ -160,9 +174,9 @@ class _BlockParser(HTMLParser):
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self._reset_doc(frozenset())
+        self._reset_doc()
 
-    def _reset_doc(self, stopset: frozenset[str]) -> None:
+    def _reset_doc(self) -> None:
         self.stack: list[str] = []
         self.skip_depth = 0
         self.anchor_depth = 0
@@ -170,8 +184,9 @@ class _BlockParser(HTMLParser):
         self.link_chars = 0
         self.ctx_tag: str | None = None
         self.ctx_depth = 0
-        self.blocks: list[dict] = []
-        self.stopset = stopset
+        # (tag, depth, text, link_chars) per block; block_features and the
+        # tail compute everything else per batch
+        self.blocks: list[tuple[str, int, str, int]] = []
         self.links: list[dict] = []
         self.link_href: str | None = None
         self.link_buf: list[str] = []
@@ -371,15 +386,8 @@ class _BlockParser(HTMLParser):
             text = " ".join("".join(self.buf).split())
             if text and len(self.blocks) < spec.MAX_BLOCKS:
                 self.blocks.append(
-                    _make_block(
-                        len(self.blocks),
-                        self.ctx_tag or "body",
-                        self.ctx_depth,
-                        text,
-                        self.link_chars,
-                        None,
-                        self.stopset,
-                    )
+                    (self.ctx_tag or "body", self.ctx_depth, text,
+                     self.link_chars)
                 )
             if text and self.table_stack:
                 # SPEC §7.5: nearest structural tag decides cell membership
@@ -409,69 +417,9 @@ class _BlockParser(HTMLParser):
         self.ctx_depth = 0
 
 
-# word -> is-stopword memo, one plain-string-keyed dict PER stopset (the
-# frozensets in spec.STOPWORDS are stable module-level objects, so id() is a
-# valid per-process key). Web text repeats words heavily, so this turns most
-# lower()/strip()/set-lookup work into one dict get; selecting the sub-dict
-# once per block instead of building a (sid, word) tuple per WORD removes a
-# tuple allocation + tuple hash from the innermost loop — measured ~25% off
-# the whole parse on the bench corpus. Bounded per set to keep long-lived
-# reused Python workers from growing without limit.
-_STOP_MEMOS: dict[int, dict[str, bool]] = {}
-_STOP_MEMO_MAX = 1_000_000
-
-
-def _n_stops(words: list[str], stopset: frozenset[str]) -> int:
-    """Count the tokens that are stopwords after SPEC.md §2 cleanup."""
-    punct = spec.PUNCT
-    sid = id(stopset)
-    memo = _STOP_MEMOS.get(sid)
-    if memo is None:
-        memo = _STOP_MEMOS.setdefault(sid, {})
-    memo_get = memo.get
-    n_stop = 0
-    for w in words:
-        hit = memo_get(w)
-        if hit is None:
-            hit = w.lower().strip(punct) in stopset
-            if len(memo) < _STOP_MEMO_MAX:
-                memo[w] = hit
-        if hit:
-            n_stop += 1
-    return n_stop
-
-
-def _make_block(
-    block_id: int,
-    tag: str,
-    depth: int,
-    text: str,
-    link_chars: int,
-    bbox: dict | None,
-    stopset: frozenset[str],
-) -> dict:
-    """Compute SPEC.md §2 features for one normalized text block."""
-    text_len = len(text)
-    words = text.split(" ")
-    n_words = len(words)
-    ld = link_chars / text_len
-    return {
-        "block_id": block_id,
-        "tag": tag,
-        "depth": depth,
-        "text": text,
-        "text_len": text_len,
-        "n_words": n_words,
-        "n_link_chars": link_chars,
-        "link_density": ld if ld < 1.0 else 1.0,
-        "char_density": text_len / n_words,
-        "stopword_density": _n_stops(words, stopset) / n_words,
-        "bbox": bbox,
-    }
-
-
-def _pdf_blocks(obj: dict, stopset: frozenset[str]) -> list[dict]:
-    """SPEC.md §3: column clustering + reading order for PDF-like payloads."""
+def _pdf_blocks(obj: dict) -> list[tuple]:
+    """SPEC.md §3: column clustering + reading order for PDF-like payloads;
+    one ``("pdfblock", 0, text, 0, (x0, y0, x1, y1))`` per block."""
     cleaned: list[tuple[float, float, float, float, str]] = []
     for b in obj.get("blocks") or []:
         if not isinstance(b, dict):
@@ -501,16 +449,9 @@ def _pdf_blocks(obj: dict, stopset: frozenset[str]) -> list[dict]:
             cur_x1 = t[2]
         cols[t] = col_id
     reading = sorted(cleaned, key=lambda t: (cols[t], t[1], t[0], t[2], t[4]))
-    out = []
-    for i, (x0, y0, x1, y1, text) in enumerate(reading[: spec.MAX_BLOCKS]):
-        out.append(
-            _make_block(
-                i, "pdfblock", 0, text, 0,
-                {"x0": x0, "y0": y0, "x1": x1, "y1": y1},
-                stopset,
-            )
-        )
-    return out
+    return [
+        ("pdfblock", 0, t[4], 0, t[:4]) for t in reading[: spec.MAX_BLOCKS]
+    ]
 
 
 # --- fast-path tokenizer ----------------------------------------------------
@@ -681,17 +622,19 @@ def parse_payload(
     lang: str | None,
     parser: _BlockParser | None = None,
     force_slow: bool = False,
-) -> tuple[str, list[dict], list[dict], dict, list[dict]]:
+) -> tuple[str, list[tuple], list[dict], dict, list[dict]]:
     """Parse one page payload → (kind, blocks, links, meta, tables).
     SPEC.md §0 dispatch; meta per §6, tables per §7 (all-empty for
-    pdf/empty payloads).
+    pdf/empty payloads). A block is ``(tag, depth, text, link_chars)``, plus
+    its ``(x0, y0, x1, y1)`` bbox on a PDF payload; its block_id is its
+    position. The parse does not depend on ``lang``: the language-keyed
+    features are computed per batch by :func:`block_features`.
 
     ``force_slow`` disables the fast-path tokenizer (used by the
     differential tests that prove the two tokenizers agree).
     """
     if not html:
         return "empty", [], [], _EMPTY_META, []
-    stopset = spec.stopword_set(lang)
     decoded = sniff_decode(html)
     stripped = decoded.lstrip()
     if stripped.startswith("{"):
@@ -704,11 +647,11 @@ def parse_payload(
             and obj.get("kind") == "pdf"
             and isinstance(obj.get("blocks"), list)
         ):
-            return "pdf", _pdf_blocks(obj, stopset), [], _EMPTY_META, []
+            return "pdf", _pdf_blocks(obj), [], _EMPTY_META, []
     if parser is None:
         parser = _BlockParser()
     parser.reset()  # HTMLParser internal state
-    parser._reset_doc(stopset)
+    parser._reset_doc()
     if not force_slow and _fast_scan(decoded, parser):
         parser._flush()
         parser._finalize_link()
@@ -718,7 +661,7 @@ def parse_payload(
             parser.tables,
         )
     parser.reset()  # discard any partial fast-path events
-    parser._reset_doc(stopset)
+    parser._reset_doc()
     try:
         parser.feed(decoded)
         parser.close()
@@ -735,169 +678,265 @@ def parse_payload(
     )
 
 
-_BLOCK_FIELDS = (
-    "block_id", "tag", "depth", "text", "text_len", "n_words",
-    "n_link_chars", "link_density", "char_density", "stopword_density",
-)
+class _ParsedBatch:
+    """A batch of payloads parsed into flat per-batch columns.
+
+    ``offsets`` (len(htmls) + 1) delimit each document's blocks in the
+    flat ``texts``/``link_chars``/``tags``/``depths`` columns; ``pdf``
+    marks PDF documents and ``bboxes`` maps a PDF document's first block
+    to its blocks' (x0, y0, x1, y1). Links and table cells are flat the
+    same way (``link_offsets``, ``table_offsets``), ``meta_cols`` holds
+    one value per document.
+    """
+
+    def __init__(self, htmls: list[bytes | None]) -> None:
+        parser = _BlockParser()
+        self.kinds: list[str] = []
+        offsets = [0]
+        self.tags: list[str] = []
+        depths: list[int] = []
+        link_chars: list[int] = []
+        texts: list[str] = []
+        self.bboxes: dict[int, tuple] = {}
+        self.link_offsets = [0]
+        self.hrefs: list[str] = []
+        self.anchors: list[str] = []
+        self.meta_cols: dict[str, list] = {f: [] for f in _EMPTY_META}
+        self.table_offsets = [0]
+        self.table_cols: dict[str, list] = {
+            f: [] for f in ("table_id", "row_id", "cell_id", "header", "text")
+        }
+        for html in htmls:
+            kind, blocks, links, meta, tabs = parse_payload(html, None, parser)
+            self.kinds.append(kind)
+            if blocks:
+                # tag, depth, text, link_chars[, bbox] columns
+                cols = tuple(zip(*blocks))
+                self.tags += cols[0]
+                depths += cols[1]
+                texts += cols[2]
+                link_chars += cols[3]
+                if kind == "pdf":
+                    self.bboxes[offsets[-1]] = cols[4]
+            offsets.append(offsets[-1] + len(blocks))
+            for lk in links:
+                self.hrefs.append(lk["href"])
+                self.anchors.append(lk["anchor"])
+            self.link_offsets.append(len(self.hrefs))
+            for f, vals in self.meta_cols.items():
+                vals.append(meta[f])
+            for tc in tabs:
+                for f, vals in self.table_cols.items():
+                    vals.append(tc[f])
+            self.table_offsets.append(self.table_offsets[-1] + len(tabs))
+        self.offsets = np.array(offsets, dtype=np.int64)
+        self.pdf = np.array([k == "pdf" for k in self.kinds], dtype=bool)
+        self.depths = np.array(depths, dtype=np.int32)
+        self.texts = pa.array(texts, type=pa.string())
+        self.link_chars = np.array(link_chars, dtype=np.int64)
+
+
+def _block_counts(
+    words: list[str], wordset: frozenset[str], token: np.ndarray,
+    starts: np.ndarray,
+) -> np.ndarray:
+    """How many of each block's tokens are in ``wordset``: the membership
+    of each distinct token (``words``, the token dictionary), gathered to
+    the tokens (``token``, their dictionary indices) and summed over each
+    block's tokens (``starts``, every block's first token; a block has at
+    least one)."""
+    if not len(starts):
+        return np.zeros(0, dtype=np.int64)
+    member = np.fromiter((w in wordset for w in words), bool, len(words))
+    return np.add.reduceat(member[token], starts, dtype=np.int64)
+
+
+def block_features(
+    texts: pa.Array,
+    link_chars: np.ndarray,
+    offsets: np.ndarray,
+    langs: list[str | None],
+    langid: bool = False,
+) -> tuple[list[str | None], dict[str, np.ndarray]]:
+    """SPEC.md §2 features of every block of a batch, in one pass.
+
+    ``texts`` is the batch's flat block-text array, ``link_chars`` the
+    blocks' linked-character counts and ``offsets`` (len(langs) + 1) each
+    document's block range. Returns the documents' langs and the numpy
+    columns ``text_len``, ``n_words``, ``link_density``, ``char_density``
+    and ``stopword_density``, one value per block.
+
+    Arrow splits the texts on " " and dictionary-encodes the tokens; the
+    stopword predicate stays Python's ``w.lower().strip(PUNCT) in
+    stopset``, run once per distinct token and stopword list of the batch
+    and gathered back to the tokens. ``langid=True`` gives every untagged
+    (NULL-lang) document the ``spec.STOPWORDS`` list with the most tokens
+    whose lowercase form it lists, across all the document's blocks (ties,
+    no hits included, go to the first list), and scores its stopwords
+    against that list.
+    """
+    langs = list(langs)
+    tokens = pc.split_pattern(texts, " ")
+    word_offsets = tokens.offsets.to_numpy()
+    enc = pc.dictionary_encode(tokens.flatten())
+    del tokens  # hold only the dictionary indices per token from here on
+    token = enc.indices.to_numpy()
+    starts = word_offsets[:-1]
+    lower = [w.lower() for w in enc.dictionary.to_pylist()]
+    if langid and None in langs:
+        hits = []
+        for ws in spec.STOPWORDS.values():
+            run = np.zeros(len(texts) + 1, dtype=np.int64)
+            np.cumsum(_block_counts(lower, ws, token, starts), out=run[1:])
+            hits.append(run[offsets[1:]] - run[offsets[:-1]])
+        names = list(spec.STOPWORDS)
+        for i, best in enumerate(np.argmax(hits, axis=0)):
+            if langs[i] is None:
+                langs[i] = names[best]
+    stopsets = [spec.stopword_set(lg) for lg in langs]
+    distinct = list({id(s): s for s in stopsets}.values())
+    block_set = np.repeat(
+        np.array([distinct.index(s) for s in stopsets], dtype=np.intp),
+        np.diff(offsets),
+    )
+    clean = [w.strip(spec.PUNCT) for w in lower]
+    n_stop = np.zeros(len(texts), dtype=np.int64)
+    for k, s in enumerate(distinct):
+        mine = block_set == k
+        n_stop[mine] = _block_counts(clean, s, token, starts)[mine]
+    text_len = pc.utf8_length(texts).to_numpy()
+    n_words = np.diff(word_offsets)
+    return langs, {
+        "text_len": text_len,
+        "n_words": n_words,
+        "link_density": np.minimum(link_chars / text_len, 1.0),
+        "char_density": text_len / n_words,
+        "stopword_density": n_stop / n_words,
+    }
+
+
+def label_mask(
+    offsets: np.ndarray,
+    pdf: np.ndarray,
+    text_len: np.ndarray,
+    link_density: np.ndarray,
+    stopword_density: np.ndarray,
+) -> np.ndarray:
+    """Ops 13+14 over a batch: True where a block is content.
+
+    Classification is jusText's context-free rule. Smoothing: an edge
+    block ('good'/'bad') keeps its verdict; any other block is content iff
+    its nearest preceding or following edge in the same document is
+    'good', found by a forward and a backward running max/min of edge
+    positions bounded by the document's start and end. Every block of a
+    PDF document (``pdf``, one flag per document) is content.
+    """
+    counts = np.diff(offsets)
+    start = np.repeat(offsets[:-1], counts)
+    end = np.repeat(offsets[1:], counts)
+    long = text_len >= spec.LEN_SHORT
+    linked = link_density > spec.MAX_LINK_DENSITY
+    good = ~linked & long & (stopword_density >= spec.STOP_GOOD)
+    edge = good | linked | (long & (stopword_density < spec.STOP_NEAR))
+    n = len(edge)
+    pos = np.arange(n)
+    prev = np.maximum.accumulate(np.where(edge, pos, -1))
+    nxt = np.minimum.accumulate(np.where(edge, pos, n)[::-1])[::-1]
+    keep = (prev >= start) & good[prev]
+    keep |= ~edge & (nxt < end) & good[np.minimum(nxt, n - 1)]
+    keep |= np.repeat(pdf, counts)
+    return keep
+
+
+def assemble_batch(
+    texts: pa.Array, text_len: np.ndarray, keep: np.ndarray,
+    offsets: np.ndarray,
+) -> list[pa.Array]:
+    """Ops 15+17 over a batch: the ``extracted_text``, ``spans``,
+    ``text_sha256``, ``n_blocks`` and ``n_content_blocks`` arrays.
+
+    A document's text is its content blocks joined by ``spec.SEP``; a
+    span is ``(block_id, start, end, 'content')`` with start the
+    exclusive running sum of ``text_len + len(SEP)`` over the document's
+    content blocks; the hash is the hex SHA-256 of the text's UTF-8 bytes.
+    """
+    n_docs = len(offsets) - 1
+    content = np.flatnonzero(keep)
+    doc = np.repeat(np.arange(n_docs), np.diff(offsets))[content]
+    n_content = np.bincount(doc, minlength=n_docs)
+    content_offsets = np.zeros(n_docs + 1, dtype=np.int64)
+    np.cumsum(n_content, out=content_offsets[1:])
+    lens = text_len[content].astype(np.int64)
+    run = np.zeros(len(content) + 1, dtype=np.int64)
+    np.cumsum(lens + len(spec.SEP), out=run[1:])
+    start = run[:-1] - run[content_offsets[:-1]][doc]
+    spans = pa.StructArray.from_arrays(
+        [
+            pa.array(content - offsets[:-1][doc], type=pa.int32()),
+            pa.array(start, type=pa.int64()),
+            pa.array(start + lens, type=pa.int64()),
+            pa.repeat(pa.scalar("content"), len(content)),
+        ],
+        names=["block_id", "start", "end", "label"],
+    )
+    list_offsets = pa.array(content_offsets, type=pa.int32())
+    text = pc.binary_join(
+        pa.ListArray.from_arrays(list_offsets, texts.take(content)), spec.SEP
+    )
+    return [
+        text,
+        pa.ListArray.from_arrays(list_offsets, spans),
+        pa.array(
+            [
+                hashlib.sha256(b).hexdigest()
+                for b in text.cast(pa.binary()).to_pylist()
+            ],
+            type=pa.string(),
+        ),
+        pa.array(np.diff(offsets), type=pa.int32()),
+        pa.array(n_content, type=pa.int32()),
+    ]
 
 
 def parse_batch_columnar(
     htmls: list[bytes | None], langs: list[str | None]
-) -> tuple[
-    list[str], list[int], dict[str, list], list[bool],
-    list[int], list[str], list[str], dict[str, list],
-    list[int], dict[str, list],
-]:
+) -> tuple:
     """Parse a batch into FLAT columns + list offsets for zero-inference
     Arrow construction.
 
-    ``pa.array`` over list-of-dicts walks Python objects with per-value type
-    dispatch; building primitive columns + ``StructArray.from_arrays`` +
-    ``ListArray.from_arrays`` measured ~2x faster end-to-end in the
-    mapInArrow worker. Returns (kinds, offsets, columns, bbox_is_null,
-    link_offsets, hrefs, anchors, meta_cols) where offsets/link_offsets
-    have len(htmls)+1 entries and each flat column is the concatenation
-    over all documents in order (links per SPEC.md §5; link_id is implicit
-    — the position within a document's slice; meta_cols per SPEC.md §6,
-    one value per document; table cell fragments per SPEC.md §7 as
-    (table_offsets, table_cols), same flat layout as links).
+    Returns (kinds, offsets, cols, bbox_null, link_offsets, hrefs,
+    anchors, meta_cols, table_offsets, table_cols). ``offsets``,
+    ``link_offsets`` and ``table_offsets`` have len(htmls)+1 entries and
+    each flat column is the concatenation over all documents in order:
+    ``cols`` one value per block for every ``schemas.block_pa_type`` field
+    but ``bbox`` (the features from :func:`block_features`) plus the bbox
+    coordinates ``x0``..``y1``, null where ``bbox_null``; links per
+    SPEC.md §5 (link_id is the position within a document's slice);
+    ``meta_cols`` per SPEC.md §6, one value per document; table cell
+    fragments per SPEC.md §7.
     """
-    parser = _BlockParser()
-    kinds: list[str] = []
-    offsets: list[int] = [0]
-    cols: dict[str, list] = {f: [] for f in _BLOCK_FIELDS}
-    cols.update({"x0": [], "y0": [], "x1": [], "y1": []})
-    bbox_null: list[bool] = []
-    link_offsets: list[int] = [0]
-    hrefs: list[str] = []
-    anchors: list[str] = []
-    meta_cols: dict[str, list] = {f: [] for f in _EMPTY_META}
-    table_offsets: list[int] = [0]
-    table_cols: dict[str, list] = {
-        f: [] for f in ("table_id", "row_id", "cell_id", "header", "text")
+    p = _ParsedBatch(htmls)
+    _, feats = block_features(p.texts, p.link_chars, p.offsets, langs)
+    n = len(p.texts)
+    doc_start = np.repeat(p.offsets[:-1], np.diff(p.offsets))
+    coords = np.zeros((n, 4))
+    bbox_null = np.ones(n, dtype=bool)
+    for first, boxes in p.bboxes.items():
+        coords[first:first + len(boxes)] = boxes
+        bbox_null[first:first + len(boxes)] = False
+    cols = {
+        "block_id": np.arange(n) - doc_start,
+        "tag": p.tags,
+        "depth": p.depths,
+        "text": p.texts,
+        "n_link_chars": p.link_chars,
+        **feats,
+        **{f: coords[:, k] for k, f in enumerate(("x0", "y0", "x1", "y1"))},
     }
-    appenders = [(f, cols[f].append) for f in _BLOCK_FIELDS]
-    x0a, y0a, x1a, y1a = (
-        cols["x0"].append, cols["y0"].append, cols["x1"].append,
-        cols["y1"].append,
-    )
-    bna = bbox_null.append
-    n = 0
-    nt = 0
-    for html, lang in zip(htmls, langs):
-        kind, blocks, links, meta, tabs = parse_payload(html, lang, parser)
-        kinds.append(kind)
-        n += len(blocks)
-        offsets.append(n)
-        _add_links_meta(links, meta, link_offsets, hrefs, anchors, meta_cols)
-        nt += len(tabs)
-        table_offsets.append(nt)
-        for tc in tabs:
-            for f, vals in table_cols.items():
-                vals.append(tc[f])
-        for b in blocks:
-            for f, app in appenders:
-                app(b[f])
-            bbox = b["bbox"]
-            if bbox is None:
-                bna(True)
-                x0a(None); y0a(None); x1a(None); y1a(None)
-            else:
-                bna(False)
-                x0a(bbox["x0"]); y0a(bbox["y0"])
-                x1a(bbox["x1"]); y1a(bbox["y1"])
     return (
-        kinds, offsets, cols, bbox_null, link_offsets, hrefs, anchors,
-        meta_cols, table_offsets, table_cols,
+        p.kinds, p.offsets, cols, bbox_null, p.link_offsets, p.hrefs,
+        p.anchors, p.meta_cols, p.table_offsets, p.table_cols,
     )
-
-
-def _add_links_meta(links, meta, link_offsets, hrefs, anchors, meta_cols):
-    """Append one document's §5 outlinks and §6 metadata to flat columns."""
-    for lk in links:
-        hrefs.append(lk["href"])
-        anchors.append(lk["anchor"])
-    link_offsets.append(len(hrefs))
-    for f, vals in meta_cols.items():
-        vals.append(meta[f])
-
-
-# --- extraction tail (SPEC.md §2: classify, smooth, assemble) --------------
-
-
-def classify(b: dict) -> str:
-    """Context-free jusText label of one block (op 13)."""
-    if b["link_density"] > spec.MAX_LINK_DENSITY:
-        return "bad"
-    if b["text_len"] < spec.LEN_SHORT:
-        return "short"
-    if b["stopword_density"] >= spec.STOP_GOOD:
-        return "good"
-    if b["stopword_density"] >= spec.STOP_NEAR:
-        return "near"
-    return "bad"
-
-
-def smooth_labels(kind: str, blocks: list[dict]) -> list[str]:
-    """Final 'content'/'boilerplate' label per block (op 14).
-
-    An edge block ('good'/'bad') keeps its verdict; any other block is
-    content iff its nearest preceding or following edge is 'good'. One
-    forward and one backward pass, O(n) even for a MAX_BLOCKS page. PDF
-    payloads keep every block.
-    """
-    if kind == "pdf":
-        return ["content"] * len(blocks)
-    labs = [classify(b) for b in blocks]
-    keep = []
-    good = False  # the nearest edge so far is 'good' (no edge: not good)
-    for lab in labs:
-        if lab == "good":
-            good = True
-        elif lab == "bad":
-            good = False
-        keep.append(good)
-    good = False
-    for i in range(len(labs) - 1, -1, -1):
-        if labs[i] == "good":
-            good = True
-        elif labs[i] == "bad":
-            good = False
-        elif good:
-            keep[i] = True
-    return ["content" if k else "boilerplate" for k in keep]
-
-
-def assemble_doc(blocks: list[dict], labels: list[str]):
-    """Ops 15+17: ``(extracted_text, text_sha256, spans)`` — content blocks
-    joined by ``spec.SEP``, the hex SHA-256 of its UTF-8 bytes, and one
-    ``(block_id, start, end)`` character span per content block."""
-    parts = []
-    spans = []
-    pos = 0
-    for b, lab in zip(blocks, labels):
-        if lab == "content":
-            end = pos + b["text_len"]
-            spans.append((b["block_id"], pos, end))
-            parts.append(b["text"])
-            pos = end + len(spec.SEP)
-    text = spec.SEP.join(parts)
-    return text, hashlib.sha256(text.encode("utf-8")).hexdigest(), spans
-
-
-def recover_lang(blocks: list[dict]) -> str:
-    """Language of an untagged page: the ``spec.STOPWORDS`` list with the
-    most hits among the space-split tokens of ALL its blocks (a token hits
-    when its lowercase form is listed); ties, no hits included, go to the
-    first list in ``spec.STOPWORDS`` order."""
-    hits = dict.fromkeys(spec.STOPWORDS, 0)
-    for b in blocks:
-        for w in b["text"].split(" "):
-            lw = w.lower()
-            for lg, ws in spec.STOPWORDS.items():
-                if lw in ws:
-                    hits[lg] += 1
-    return max(hits, key=hits.__getitem__)
 
 
 def extract_batch(
@@ -905,31 +944,20 @@ def extract_batch(
 ):
     """Parse AND finish a batch of payloads in one pass (SURVEY §3.2).
 
-    Returns ``(langs, n_blocks, tails, link_offsets, hrefs, anchors,
-    meta_cols)``: per document its output lang, block count and
-    :func:`assemble_doc` result, then outlinks and metadata as flat
-    columns like :func:`parse_batch_columnar`'s. ``langid=True`` gives an
-    untagged page :func:`recover_lang`'s language and re-scores its blocks'
-    stopword densities against that list before classification.
+    Returns ``(langs, text_arrays, link_offsets, hrefs, anchors,
+    meta_cols)``: the documents' output langs (see :func:`block_features`
+    for ``langid``), :func:`assemble_batch`'s arrays, then outlinks and
+    metadata as flat columns like :func:`parse_batch_columnar`'s.
     """
-    parser = _BlockParser()
-    out_langs = []
-    n_blocks = []
-    tails = []
-    link_offsets = [0]
-    hrefs: list[str] = []
-    anchors: list[str] = []
-    meta_cols: dict[str, list] = {f: [] for f in _EMPTY_META}
-    for html, lang in zip(htmls, langs):
-        kind, blocks, links, meta, _ = parse_payload(html, lang, parser)
-        if langid and lang is None:
-            lang = recover_lang(blocks)
-            stopset = spec.stopword_set(lang)
-            for b in blocks:
-                n_stop = _n_stops(b["text"].split(" "), stopset)
-                b["stopword_density"] = n_stop / b["n_words"]
-        out_langs.append(lang)
-        n_blocks.append(len(blocks))
-        tails.append(assemble_doc(blocks, smooth_labels(kind, blocks)))
-        _add_links_meta(links, meta, link_offsets, hrefs, anchors, meta_cols)
-    return out_langs, n_blocks, tails, link_offsets, hrefs, anchors, meta_cols
+    p = _ParsedBatch(htmls)
+    langs, feats = block_features(
+        p.texts, p.link_chars, p.offsets, langs, langid
+    )
+    keep = label_mask(
+        p.offsets, p.pdf, feats["text_len"], feats["link_density"],
+        feats["stopword_density"],
+    )
+    return (
+        langs, assemble_batch(p.texts, feats["text_len"], keep, p.offsets),
+        p.link_offsets, p.hrefs, p.anchors, p.meta_cols,
+    )

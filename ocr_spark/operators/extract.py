@@ -4,22 +4,21 @@ Pipeline shape (design point: 100 TB / 10^12 docs on 1000 executors):
 
     pages ──mapInArrow(parse + tail)──► extracted rows ──Project──► product
 
-The single JVM→Python Arrow hop does the whole per-document job: the parse
-(SURVEY §2 op 11 / op 60), classification (op 13), jusText smoothing
-(op 14), span offsets (op 15), assembly and the text hash (op 17), all in
-the Python loop that already visits every block
-(``html_blocks.extract_batch``). It comes back with finished rows plus the
-outlinks and metadata, so every text, link and meta sink can be fed from one
-pass. The plan needs NO shuffle and makes the whole extraction
-embarrassingly parallel: scaling efficiency N→4N executors is bounded only
-by input-split balance, not by shuffle or skew. (An equivalent
-explode→window→groupBy formulation of ops 12–17 in JVM column expressions
-lives in ``ocr_spark.operators.exploded`` and is tested to produce
-identical bytes.)
+The single JVM→Python Arrow hop does the whole job
+(``html_blocks.extract_batch``): the per-document parse (SURVEY §2 op 11 /
+op 60), then one batch kernel over the batch's flat block columns for the
+block features, classification (op 13), jusText smoothing (op 14), span
+offsets (op 15), assembly and the text hash (op 17). It comes back with
+finished rows plus the outlinks and metadata, so every text, link and meta
+sink can be fed from one pass. The plan needs NO shuffle and makes the
+whole extraction embarrassingly parallel: scaling efficiency N→4N
+executors is bounded only by input-split balance, not by shuffle or skew.
 
-The tail is O(n_blocks) per document (one forward and one backward
-smoothing pass, a running span offset), so a MAX_BLOCKS link farm costs no
-more per block than a short page.
+The kernel is O(tokens) Arrow and numpy work per batch (the stopword
+predicate runs once per distinct token), so a MAX_BLOCKS link farm costs
+no more per block than a short page. ``parse_pages`` takes its block
+features from the same kernel, and ``label_blocks``/``assemble`` run its
+tail over the Arrow ``blocks`` column of a parsed frame.
 """
 
 from __future__ import annotations
@@ -27,16 +26,17 @@ from __future__ import annotations
 import functools
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.html_blocks import (
-    assemble_doc,
+    assemble_batch,
     extract_batch,
+    label_mask,
     parse_batch_columnar,
-    smooth_labels,
 )
 from ocr_spark.schemas import block_pa_type
 
@@ -82,10 +82,32 @@ _EXTRACT_COLS = [
 
 DEFAULT_NUM_PARTS = 64  # resume/lineage granularity (part_id space)
 DEFAULT_SALT_N = 16  # salt fan-out for hot hosts when repartitioning
+# Page bytes per call of the batch function. The batch kernel holds a whole
+# call's block texts, tokens and parse output at once, about in proportion
+# to its html bytes: a 1024-page Arrow batch of MAX_BLOCKS link farms holds
+# ~70k blocks and ~700k tokens. Calls of ~1 MiB kept a Python worker's peak
+# RSS at or below the per-document tail's on extract_mixed, and leave a
+# batch of ordinary pages (~1 KB each) whole, so the kernel's per-call cost
+# stays amortized over the batch.
+SLICE_BYTES = 1 << 20
+
+
+def _slices(batch: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
+    """``batch`` in consecutive row slices, cut where the running html
+    byte count passes each multiple of ``SLICE_BYTES``; a slice exceeds
+    it by less than one page."""
+    ends = np.cumsum(_bytes_in(batch).to_numpy())
+    marks = np.arange(SLICE_BYTES, ends[-1] if len(ends) else 0, SLICE_BYTES)
+    cuts = np.unique(np.concatenate(
+        ([0], np.searchsorted(ends, marks, side="right"), [batch.num_rows])
+    ))
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        yield batch.slice(lo, hi - lo)
 
 
 def _arrow_task(one_batch, input_counter=None):
-    """Build a mapInArrow worker fn applying ``one_batch`` to every batch.
+    """Build a mapInArrow worker fn applying ``one_batch`` to every batch,
+    one :func:`_slices` piece at a time.
 
     ``input_counter`` (optional) is a dict-valued Spark accumulator
     incremented at the parse boundary with
@@ -120,7 +142,8 @@ def _arrow_task(one_batch, input_counter=None):
                         }
                     }
                 )
-            yield one_batch(batch)
+            for piece in _slices(batch):
+                yield one_batch(piece)
 
     return _run
 
@@ -152,40 +175,6 @@ def _links_meta_arrays(link_offsets, hrefs, anchors, meta_cols) -> list:
     ]
 
 
-def _text_arrays(tails, n_blocks) -> list:
-    """Per-document ``assemble_doc`` results → the ``extracted_text``,
-    ``spans``, ``text_sha256``, ``n_blocks`` and ``n_content_blocks``
-    Arrow arrays."""
-    offsets = [0]
-    ids: list[int] = []
-    starts: list[int] = []
-    ends: list[int] = []
-    for _, _, spans in tails:
-        for block_id, start, end in spans:
-            ids.append(block_id)
-            starts.append(start)
-            ends.append(end)
-        offsets.append(len(ids))
-    spans_struct = pa.StructArray.from_arrays(
-        [
-            pa.array(ids, type=pa.int32()),
-            pa.array(starts, type=pa.int64()),
-            pa.array(ends, type=pa.int64()),
-            pa.repeat(pa.scalar("content"), len(ids)),
-        ],
-        names=["block_id", "start", "end", "label"],
-    )
-    return [
-        pa.array([t[0] for t in tails], type=pa.string()),
-        pa.ListArray.from_arrays(
-            pa.array(offsets, type=pa.int32()), spans_struct
-        ),
-        pa.array([t[1] for t in tails], type=pa.string()),
-        pa.array(n_blocks, type=pa.int32()),
-        pa.array([len(t[2]) for t in tails], type=pa.int32()),
-    ]
-
-
 def _extract_one_batch(batch: pa.RecordBatch, langid: bool) -> pa.RecordBatch:
     """html bytes → finished extraction rows for one Arrow batch.
 
@@ -193,7 +182,7 @@ def _extract_one_batch(batch: pa.RecordBatch, langid: bool) -> pa.RecordBatch:
     ListArray) — pa.array over list-of-dicts walks Python objects per value
     and measured ~2x slower for the whole stage.
     """
-    langs, n_blocks, tails, link_offsets, hrefs, anchors, meta_cols = (
+    langs, text_arrays, link_offsets, hrefs, anchors, meta_cols = (
         extract_batch(
             batch.column("html").to_pylist(),
             batch.column("lang").to_pylist(),
@@ -207,7 +196,7 @@ def _extract_one_batch(batch: pa.RecordBatch, langid: bool) -> pa.RecordBatch:
             pa.array(langs, type=pa.string()),
             batch.column("part_id"),
             _bytes_in(batch),
-            *_text_arrays(tails, n_blocks),
+            *text_arrays,
             *_links_meta_arrays(link_offsets, hrefs, anchors, meta_cols),
         ],
         names=_EXTRACT_COLS,
@@ -362,28 +351,43 @@ def select_extracted(
     )
 
 
+def _flat(lists: pa.ListArray) -> tuple[pa.Array, np.ndarray]:
+    """A list column's values and zero-based per-row offsets."""
+    offsets = lists.offsets.to_numpy()
+    values = lists.values.slice(offsets[0], offsets[-1] - offsets[0])
+    return values, offsets - offsets[0]
+
+
 def _label_batches(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
     for batch in batches:
-        labels = [
-            smooth_labels(kind, blocks)
-            for kind, blocks in zip(
-                batch.column("kind").to_pylist(),
-                batch.column("blocks").to_pylist(),
-            )
-        ]
+        flat, offsets = _flat(batch.column("blocks"))
+        keep = label_mask(
+            offsets,
+            pc.equal(batch.column("kind"), "pdf").to_numpy(
+                zero_copy_only=False
+            ),
+            *(
+                flat.field(f).to_numpy()
+                for f in ("text_len", "link_density", "stopword_density")
+            ),
+        )
+        labels = pa.ListArray.from_arrays(
+            pa.array(offsets, type=pa.int32()),
+            pa.array(np.where(keep, "content", "boilerplate")),
+        )
         yield pa.RecordBatch.from_arrays(
-            [*batch.columns, pa.array(labels, type=pa.list_(pa.string()))],
+            [*batch.columns, labels],
             names=[*batch.schema.names, "labels"],
         )
 
 
 def label_blocks(parsed: DataFrame) -> DataFrame:
     """Ops 13+14 alone over a :func:`parse_pages` frame: adds
-    ``labels: array<string>`` aligned with ``blocks``. The same Python tail
-    as the fused extraction, which runs it inside the parse pass; this
-    separate hop exists to time and inspect the step by itself."""
+    ``labels: array<string>`` aligned with ``blocks``. The same batch
+    kernel as the fused extraction, which runs it inside the parse pass;
+    this separate hop exists to time and inspect the step by itself."""
     return parsed.mapInArrow(
         _label_batches, PARSED_DDL + ", labels array<string>"
     )
@@ -393,15 +397,16 @@ def _assemble_batches(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
     for batch in batches:
-        blocks = batch.column("blocks").to_pylist()
-        tails = [
-            assemble_doc(b, labels)
-            for b, labels in zip(blocks, batch.column("labels").to_pylist())
-        ]
+        flat, offsets = _flat(batch.column("blocks"))
+        labels, _ = _flat(batch.column("labels"))
+        keep = pc.equal(labels, "content").to_numpy(zero_copy_only=False)
         yield pa.RecordBatch.from_arrays(
             [
                 *(batch.column(c) for c in _EXTRACT_COLS[:5]),
-                *_text_arrays(tails, [len(b) for b in blocks]),
+                *assemble_batch(
+                    flat.field("text"), flat.field("text_len").to_numpy(),
+                    keep, offsets,
+                ),
                 batch.column("links"),
                 batch.column("meta"),
             ],
@@ -411,8 +416,8 @@ def _assemble_batches(
 
 def assemble(labeled: DataFrame) -> DataFrame:
     """Ops 15+17 alone over a :func:`label_blocks` frame: span offsets,
-    byte-identical assembly and the text hash, by the same Python tail as
-    the fused extraction (see :func:`label_blocks`)."""
+    byte-identical assembly and the text hash, by the same batch kernel
+    as the fused extraction (see :func:`label_blocks`)."""
     return select_extracted(labeled.mapInArrow(_assemble_batches, EXTRACT_DDL))
 
 
@@ -512,9 +517,10 @@ def extract_pages_langid(
     good paragraphs as boilerplate and extract it empty. The production
     answer (the same move CCNet makes before its stoplist-dependent stages)
     runs inside the one Python pass: predict the language from the FULL
-    block text (``html_blocks.recover_lang``), re-score each block's
-    stopword density against the recovered list, then classify, smooth and
-    assemble as usual. Rows that arrived with a lang keep their densities
+    block text (``html_blocks.block_features`` with ``langid=True``, over
+    the batch's token dictionary), score each block's stopword density
+    against the recovered list, then classify, smooth and assemble as
+    usual. Rows that arrived with a lang keep their densities
     and tag. The output ``lang`` column is the recovered one. One
     mapInArrow hop, shuffle-free.
     """

@@ -1259,7 +1259,7 @@ def q_mm_frames_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Grades operators/extract.extract_pages_langid end to end: synthesize
 # UNTAGGED (lang=NULL) pages whose stopword filler is drawn from the TRUE
 # language's frozen list, run the REAL path (parse -> full-block-text
-# langid -> per-block density re-score -> classify -> assemble), and the
+# langid -> per-block density score -> classify -> assemble), and the
 # oracle recomputes everything — the per-language hit counts, the argmax
 # tie order, the density against the PREDICTED language's list, and the
 # content decision — in closed form. A wrong prediction, a wrong re-score

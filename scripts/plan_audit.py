@@ -64,7 +64,8 @@ def main() -> None:
         "Flagship extraction (fused, production path)",
         "No `Exchange` anywhere: the codegen'd scan + part_id `Project`, "
         "then ONE `MapInArrow` that parses each page and runs the whole "
-        "extraction tail (classify, smooth, spans, assembly, sha256) in the "
+        "extraction tail (block features, classify, smooth, spans, "
+        "assembly, sha256) as one Arrow/numpy kernel over each batch in the "
         "same Python pass, then one column-selecting `Project`. Everything "
         "is narrow — throughput scales with input splits, which is what the "
         "N→4N executor measurements in BENCH/BASELINE.md reflect. Exactly "

@@ -60,21 +60,11 @@ TRICKY = [
 
 
 def _sig(html: bytes, lang: str | None):
-    kind, blocks, links, meta, tables = parse_payload(html, lang)
-    return kind, [
-        (b["block_id"], b["tag"], b["depth"], b["text"], b["n_link_chars"],
-         b["stopword_density"]) for b in blocks
-    ], links, meta, tables
+    return parse_payload(html, lang)
 
 
 def _sig_slow(html: bytes, lang: str | None):
-    kind, blocks, links, meta, tables = parse_payload(
-        html, lang, force_slow=True
-    )
-    return kind, [
-        (b["block_id"], b["tag"], b["depth"], b["text"], b["n_link_chars"],
-         b["stopword_density"]) for b in blocks
-    ], links, meta, tables
+    return parse_payload(html, lang, force_slow=True)
 
 
 def test_tricky_constructs_agree():
