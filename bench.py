@@ -39,6 +39,8 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
+from perfbench.hostinfo import steal_jiffies  # noqa: E402
+
 # headline subset: flagship + one representative per SURVEY.md §2 family
 HEADLINE = [
     "extract_wrapped",      # C: full extraction pipeline (ops 11-17)
@@ -214,16 +216,6 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _steal_jiffies() -> int:
-    """Host CPU-steal counter (field 8 of /proc/stat's cpu line) — the
-    contention context every timing is recorded against."""
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
-
-
 class _Timings:
     """median-of-cycles timing store: med (headline), best, raw runs and
     per-run steal-jiffy deltas per entry."""
@@ -239,11 +231,11 @@ class _Timings:
 
         runs, steals = [], []
         for _ in range(cycles):
-            st0 = _steal_jiffies()
+            st0 = steal_jiffies()
             start = time.perf_counter()
             fn()
             runs.append(round(time.perf_counter() - start, 3))
-            steals.append(_steal_jiffies() - st0)
+            steals.append(steal_jiffies() - st0)
         self.med[name] = round(statistics.median(runs), 3)
         self.best[name] = min(runs)
         self.runs[name] = runs
@@ -376,7 +368,8 @@ def main() -> None:
         big.unpersist()
 
         # production-shape end-to-end: parquet in -> extraction -> partitioned
-        # zstd parquet out + lineage + manifest commits (the full runner)
+        # zstd parquet out + manifest commits that carry the lineage (the
+        # full runner)
         import shutil
         import tempfile
 
@@ -399,8 +392,8 @@ def main() -> None:
             tm.time("extract_e2e_runner_20k", _e2e)
             # per-phase wall seconds of the BEST attempt, so a contended
             # driver window is distinguishable from a real regression in
-            # one phase (round-2 lesson: the 4x e2e delta was entirely the
-            # lineage write path)
+            # one phase (round-2 lesson: a 4x e2e delta sat entirely in
+            # one phase, a lineage write)
             e2e_stages = e2e_runs[
                 tm.runs["extract_e2e_runner_20k"].index(
                     tm.best["extract_e2e_runner_20k"]

@@ -292,15 +292,10 @@ def salted(df: DataFrame, partitions: int, salt_n: int = DEFAULT_SALT_N) -> Data
     )
 
 
-def _parse_input(
-    df: DataFrame, num_parts: int, repartition: int | None = None
-) -> DataFrame:
-    """The columns the Python hop reads, with part_id derived if absent and
-    the optional salted exchange in front."""
+def _parse_input(df: DataFrame, num_parts: int) -> DataFrame:
+    """The columns the Python hop reads, with part_id derived if absent."""
     if "part_id" not in df.columns:
         df = with_part_id(df, num_parts)
-    if repartition:
-        df = salted(df, repartition)
     return df.select("url", "warc_ts", "lang", "part_id", "html")
 
 
@@ -316,7 +311,6 @@ def parse_pages(df: DataFrame, num_parts: int = DEFAULT_NUM_PARTS) -> DataFrame:
 def extract_rows(
     df: DataFrame,
     num_parts: int = DEFAULT_NUM_PARTS,
-    repartition: int | None = None,
     input_counter=None,
     langid: bool = False,
 ) -> DataFrame:
@@ -325,7 +319,7 @@ def extract_rows(
     ``langid=True`` recovers the language of untagged pages in the same
     pass (see :func:`extract_pages_langid`)."""
     task = functools.partial(_extract_one_batch, langid=langid)
-    return _parse_input(df, num_parts, repartition).mapInArrow(
+    return _parse_input(df, num_parts).mapInArrow(
         _arrow_task(task, input_counter), EXTRACT_DDL
     )
 
@@ -530,18 +524,13 @@ def extract_pages_langid(
 def extract_pages(
     df: DataFrame,
     num_parts: int = DEFAULT_NUM_PARTS,
-    repartition: int | None = None,
     keep_meta: bool = False,
 ) -> DataFrame:
-    """Full fused extraction: pages → extracted (SURVEY §3.2).
-
-    ``repartition`` (optional) forces a salted exchange before the parse —
-    used when input splits are unbalanced or to bound output file counts;
-    the default (None) keeps the plan shuffle-free. ``keep_meta=True``
-    carries the SPEC §6 ``meta`` struct through to the output rows (the
-    one-product consumers — e.g. the streaming flagship — get metadata
-    without a second parse or a second sink).
+    """Full fused extraction: pages → extracted (SURVEY §3.2), one
+    shuffle-free mapInArrow hop; a caller with unbalanced input salts it
+    first (:func:`salted`). ``keep_meta=True`` carries the SPEC §6 ``meta``
+    struct through to the output rows (the one-product consumers — e.g. the
+    streaming flagship — get metadata without a second parse or a second
+    sink).
     """
-    return select_extracted(
-        extract_rows(df, num_parts, repartition), keep_meta=keep_meta
-    )
+    return select_extracted(extract_rows(df, num_parts), keep_meta=keep_meta)

@@ -5,8 +5,9 @@ checkpoint with per-partition lineage + metrics").
 Layout of an output table directory::
 
     <out_dir>/data/part_id=<N>/*.parquet     -- extracted rows (op 4)
-    <out_dir>/_manifest/part-<N>.json        -- commit record, atomic rename (op 6)
-    <out_dir>/_lineage/*.parquet             -- lineage rows (op 5, LINEAGE_SCHEMA)
+    <out_dir>/_manifest/part-<N>.json        -- commit record = the part's
+                                                lineage row (ops 5, 6)
+    <out_dir>/_manifest/failed-<uuid>.json   -- lineage rows of a failed batch
     <out_dir>/_staged/pages/part_id=<N>/...  -- staged input (multi-batch runs)
 
 Crash-safety contract — the one commit protocol of the engine, shared by
@@ -22,7 +23,8 @@ this runner (a unit = a part_id) and the streaming committers
   error propagates and leaves the unit uncommitted, so the redo runs again
   instead of committing a wrong count;
 - the record is written LAST, through ``tables_snapshot._atomic_write``
-  (temp file + ``os.replace``), so readers never observe a torn record;
+  (temp file + ``os.replace``), so readers never observe a torn record
+  (here the record is the part's one lineage row);
 - resume skips the committed units (here a ``part_id NOT IN`` filter — pure
   partition pruning on the part_id-partitioned layout, no data shuffle).
 
@@ -51,7 +53,10 @@ which case staging is unnecessary; see SURVEY §4 "partition pruning".
 Lineage: ``input_rows`` is counted at the parse boundary by a per-part
 accumulator inside the mapInArrow stage (independent of the output), and
 ``output_rows``/``bytes_in`` come from a column-pruned read-back of the
-just-written parquet — never from a second scan of the raw input.
+just-written parquet — never from a second scan of the raw input. A
+failed batch or staging writes a new ``failed-*.json`` file of its
+``status='failed'`` rows, which ``completed_parts`` ignores: the parts stay
+uncommitted. :func:`read_lineage` reads both kinds of file, no Spark job.
 """
 
 from __future__ import annotations
@@ -63,6 +68,7 @@ import os
 import pathlib
 import shutil
 import time
+import uuid
 from collections.abc import Callable, Sequence
 
 from pyspark.accumulators import AccumulatorParam
@@ -172,46 +178,51 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(
-        str(pathlib.Path(out_dir) / "_lineage")
-    )
+    """Lineage rows (``LINEAGE_SCHEMA``): the committed parts' manifest
+    records and the rows of every failed batch.
+
+    Goes through a pandas frame on purpose: ``createDataFrame(list)`` plans
+    a pickled-RDD scan that needs a Python-worker round trip, while the
+    Arrow/pandas path plans a JVM-side LocalRelation."""
+    import pandas as pd
+
+    manifest = Manifest(out_dir)
+    recs = list(manifest.completed_parts().values())
+    for p in sorted(manifest.dir.glob("failed-*.json")):
+        recs.extend(json.loads(p.read_text()))
+    pdf = pd.DataFrame(recs, columns=LINEAGE_SCHEMA.fieldNames())
+    for col in ("started_ts", "finished_ts"):
+        pdf[col] = pd.to_datetime(pdf[col])
+    return spark.createDataFrame(pdf, schema=LINEAGE_SCHEMA)
 
 
 def _chunks(seq: Sequence[int], size: int) -> list[list[int]]:
     return [list(seq[i : i + size]) for i in range(0, len(seq), size)]
 
 
-def _utcnow() -> dt.datetime:
-    return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+def _utcnow() -> str:
+    return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None).isoformat()
 
 
-def _write_lineage(spark: SparkSession, rows: list[tuple], lineage_dir: str) -> None:
-    """Append lineage rows as one parquet file.
-
-    Goes through a pandas frame on purpose: ``createDataFrame(list)`` plans
-    a pickled-RDD scan whose write needs a Python-worker round trip
-    (measured 4.5-6.5 s for 64 rows on this host — it dominated the e2e
-    runner and was the round-2 bench regression), while the Arrow/pandas
-    path is a JVM-side LocalRelation and the same write is ~0.2 s."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=[f.name for f in LINEAGE_SCHEMA.fields])
-    spark.createDataFrame(pdf, schema=LINEAGE_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(lineage_dir)
+def _lineage_rec(*values) -> dict:
+    """A lineage row, values in ``LINEAGE_SCHEMA`` order, as a record."""
+    return dict(zip(LINEAGE_SCHEMA.fieldNames(), values))
 
 
 def _write_failed(
-    spark: SparkSession, parts: list[int], run_id: str,
-    started: dt.datetime, lineage_dir: str,
+    manifest: Manifest, parts: list[int], run_id: str, started: str
 ) -> None:
-    """Record ``parts`` as failed in lineage. They stay uncommitted, so the
-    rerun redoes them."""
+    """Record ``parts`` as failed: one new, uniquely named file of lineage
+    rows under ``_manifest/``. They stay uncommitted, so the rerun redoes
+    them."""
     ts = _utcnow()
-    _write_lineage(
-        spark,
-        [(p, run_id, 0, 0, 0, started, ts, "failed", 0.0) for p in parts],
-        lineage_dir,
+    manifest.dir.mkdir(parents=True, exist_ok=True)
+    _atomic_write(
+        manifest.dir / f"failed-{uuid.uuid4().hex}.json",
+        json.dumps([
+            _lineage_rec(p, run_id, 0, 0, 0, started, ts, "failed", 0.0)
+            for p in parts
+        ]),
     )
 
 
@@ -315,9 +326,11 @@ def run_extract(
 
     Returns ``{"run_id", "parts_done_before", "parts_done_now", "batches",
     "stage_sec"}`` — ``stage_sec`` holds wall seconds summed over batches for
-    each phase (``stage`` / ``parse_write`` / ``readback`` / ``lineage`` /
-    ``manifest``), so a bench regression is attributable to one phase
-    instead of showing up only as an opaque end-to-end delta.
+    each phase (``stage`` / ``parse_write`` / ``readback`` / ``manifest``),
+    so a bench regression is attributable to one phase instead of showing
+    up only as an opaque end-to-end delta. Lineage is the manifest record,
+    so its cost is in ``manifest``; ``stage_sec["lineage"]`` stays 0.0, kept
+    for callers that read every phase by name (the frozen benchmark).
     ``after_batch`` is a test hook called after each batch commit (used by the
     kill/resume tests to abort mid-run). The input must be immutable for the
     lifetime of one ``out_dir`` (standard for crawl snapshots); staged data
@@ -327,7 +340,6 @@ def run_extract(
 
     out = pathlib.Path(out_dir)
     data_dir = data_location or str(out / "data")
-    lineage_dir = str(out / "_lineage")
     manifest = Manifest(out)
 
     done_before = sorted(manifest.completed_parts())
@@ -346,7 +358,7 @@ def run_extract(
             pages = stage_input(spark, pages, out, num_parts)
         except Exception:
             # staging died: every todo part fails (the rerun re-stages)
-            _write_failed(spark, todo, run_id, _utcnow(), lineage_dir)
+            _write_failed(manifest, todo, run_id, _utcnow())
             raise
     else:
         pages = with_part_id(pages, num_parts)
@@ -367,8 +379,14 @@ def run_extract(
                     sub = pages.where(F.col("part_id").isin(batch))
                 else:
                     sub = pages  # full run, single batch: no filter at all
-                rows = extract_rows(sub, num_parts=num_parts,
-                                    input_counter=input_counts)
+                # ONE exchange per batch clusters the rows by part_id, so
+                # each sink's write is narrow with one file per part (else
+                # every task writes into every part dir: tasks x parts
+                # files, measured 7x slower). Column pruning keeps unused
+                # columns (links, meta for the text sink alone) out of it.
+                rows = extract_rows(
+                    sub, num_parts=num_parts, input_counter=input_counts
+                ).repartition(len(batch), "part_id")
                 if links_location is not None or meta_location is not None:
                     # all products from ONE parse: persist the finished rows
                     # for the batch (bounded by batch size) and feed the
@@ -379,28 +397,19 @@ def run_extract(
                     sinks.append((links_location, outlink_rows(rows)))
                 if meta_location is not None:
                     sinks.append((meta_location, metadata_rows(rows)))
-                # cluster output by part_id before the partitioned write:
-                # without it every task writes a file into every part dir
-                # (tasks x parts small files — measured 7x slower and 32x
-                # the file count). The shuffle moves extracted text, a
-                # fraction of the input bytes.
                 # dynamic overwrite (Iceberg overwritePartitions when the
                 # location is iceberg:): replaces exactly the part_id=N
                 # dirs in this batch — idempotent re-run after a crash, no
                 # duplicate rows
                 for loc, product in sinks:
-                    write_table(
-                        product.repartition(len(batch), "part_id"),
-                        loc,
-                        mode="overwrite_partitions",
-                        partition_by=("part_id",),
-                    )
+                    write_table(product, loc, mode="overwrite_partitions",
+                                partition_by=("part_id",))
                 rows.unpersist()
             except Exception:
                 if rows is not None:
                     rows.unpersist()
-                # record the failure in the metrics table, then surface it
-                _write_failed(spark, batch, run_id, started, lineage_dir)
+                # record the failure in lineage, then surface it
+                _write_failed(manifest, batch, run_id, started)
                 raise
             elapsed = time.perf_counter() - t0
             stage_sec["parse_write"] += elapsed
@@ -422,35 +431,17 @@ def run_extract(
             _ts = time.perf_counter()
             stats = {r["part_id"]: r for r in stats_rows}
             in_counts = _dedup_input_counts(input_counts.value)
-            lineage_rows = []
+            # manifest commit LAST: a crash before this point leaves the
+            # partition uncommitted and the next run redoes it idempotently
             for part in batch:
                 r = stats.get(part)
                 n_rows = int(r["rows"]) if r is not None else 0
-                n_bytes = int(r["bytes_in"]) if r is not None else 0
-                n_in = int(in_counts.get(part, 0))
-                lineage_rows.append(
-                    (
-                        part, run_id, n_in, n_rows, n_bytes, started,
-                        finished, "ok",
-                        round(n_rows / elapsed, 3) if elapsed > 0 else 0.0,
-                    )
-                )
-            _write_lineage(spark, lineage_rows, lineage_dir)
-            stage_sec["lineage"] += time.perf_counter() - _ts
-            _ts = time.perf_counter()
-            # manifest commit LAST: a crash before this point leaves the
-            # partition uncommitted and the next run redoes it idempotently
-            for part, row in zip(batch, lineage_rows):
-                manifest.commit(
-                    part,
-                    {
-                        "part_id": part,
-                        "run_id": run_id,
-                        "output_rows": row[3],
-                        "bytes_in": row[4],
-                        "committed_ts": finished.isoformat(),
-                    },
-                )
+                manifest.commit(part, _lineage_rec(
+                    part, run_id, int(in_counts.get(part, 0)), n_rows,
+                    int(r["bytes_in"]) if r is not None else 0,
+                    started, finished, "ok",
+                    round(n_rows / elapsed, 3) if elapsed > 0 else 0.0,
+                ))
             stage_sec["manifest"] += time.perf_counter() - _ts
             if after_batch is not None:
                 after_batch(batch)

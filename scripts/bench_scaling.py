@@ -35,6 +35,8 @@ sys.path.insert(0, str(REPO))
 
 import os as _env
 
+from perfbench.hostinfo import steal_jiffies  # noqa: E402
+
 # cores per emulated executor: 2 by default; 1 when the host is so contended
 # that even 8 concurrently busy cpus draw steal (SCALING_EXEC_CORES=1 keeps
 # the 4N phase at 4 busy cpus — the executor-width choice is ours, the
@@ -69,11 +71,6 @@ def _parse(out: str) -> dict:
     return json.loads([ln for ln in out.splitlines() if ln.startswith("{")][-1])
 
 
-def _steal_jiffies() -> int:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8])
-
-
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -106,16 +103,16 @@ def main() -> None:
         steal_log = []
         cycle_effs = []
         for _ in range(CYCLES):
-            st0 = _steal_jiffies()
+            st0 = steal_jiffies()
             out = subprocess.run(
                 _cmd(engine_zip, pages_dir, 0, runs, None),
                 capture_output=True, text=True, check=True, cwd=str(REPO),
             ).stdout
-            st_single = _steal_jiffies() - st0
+            st_single = steal_jiffies() - st0
             s = _parse(out)
             s["steal_jiffies"] = st_single
 
-            st0 = _steal_jiffies()
+            st0 = steal_jiffies()
             procs = [
                 subprocess.Popen(
                     _cmd(engine_zip, pages_dir, i * EXEC_CORES, runs, i),
@@ -130,7 +127,7 @@ def main() -> None:
                 if p.returncode != 0:
                     raise RuntimeError(f"executor failed: rc={p.returncode}")
                 cycle_shards.append(_parse(out))
-            st_four = _steal_jiffies() - st0
+            st_four = steal_jiffies() - st0
             steal_log.append({"single": st_single, "four": st_four})
             cycle_rate4 = sum(sh["docs_per_sec"] for sh in cycle_shards)
             cycle_eff = round(cycle_rate4 / (N_EXECS * s["docs_per_sec"]), 3)

@@ -12,17 +12,18 @@ location, or a ``snapshot:<dir>`` versioned table (ocr_spark.tables);
 ``data_location`` (optional) sends the extracted DATA rows somewhere other
 than ``<out_dir>/data`` — e.g. an ``iceberg:`` table or a ``snapshot:``
 table (atomic per-batch commits, time travel, idempotent re-runs via
-overwrite_matching — ocr_spark.tables_snapshot) — while manifests/lineage
-stay in out_dir. The job is
-idempotent per (out_dir): a killed run resumes at partition granularity
-from the checkpoint manifest, and a completed multi-batch run has read the
-raw input exactly once (staging — see ocr_spark.operators.runner). Prints
-one JSON line with run stats (incl. per-phase stage_sec timings) and
-per-partition lineage totals. ``--links`` ALSO writes the SPEC §5 outlink
-product to ``<out_dir>/links`` and ``--meta`` the SPEC §6 page-metadata
-product to ``<out_dir>/meta``, both from the SAME per-batch parse (the
-parsed relation is cached and feeds every requested sink — side products
-do not re-run the Python parse).
+overwrite_matching — ocr_spark.tables_snapshot) — while the manifest (one
+commit record per part, which is also the part's lineage row) stays in
+out_dir. The job is idempotent per (out_dir): a killed run resumes at
+partition granularity from the checkpoint manifest, and a completed
+multi-batch run has read the raw input exactly once (staging — see
+ocr_spark.operators.runner). Prints one JSON line with run stats (incl.
+per-phase stage_sec timings) and the lineage totals of the committed parts
+(``read_lineage``). ``--links`` ALSO writes the SPEC §5 outlink product to
+``<out_dir>/links`` and ``--meta`` the SPEC §6 page-metadata product to
+``<out_dir>/meta``, both from the SAME per-batch parse (the batch's rows are
+shuffled once, by part_id, and cached; every requested sink reads the
+cache — side products do not re-run the Python parse).
 """
 
 from __future__ import annotations

@@ -42,6 +42,8 @@ import tempfile
 REPO = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
+from perfbench.hostinfo import steal_jiffies  # noqa: E402
+
 LO_CORES, HI_CORES = 2, 8  # the "N" and "4N" sides
 SHUFFLE_PARTS = 64
 
@@ -62,19 +64,14 @@ def _parse(out: str) -> dict:
     return json.loads([ln for ln in out.splitlines() if ln.startswith("{")][-1])
 
 
-def _steal_jiffies() -> int:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8])
-
-
 def _run(engine_zip: str, docs_dir: str, cores: int, runs: int) -> dict:
-    st0 = _steal_jiffies()
+    st0 = steal_jiffies()
     out = subprocess.run(
         _cmd(engine_zip, docs_dir, cores, runs),
         capture_output=True, text=True, check=True, cwd=str(REPO),
     ).stdout
     r = _parse(out)
-    r["steal_jiffies"] = _steal_jiffies() - st0
+    r["steal_jiffies"] = steal_jiffies() - st0
     return r
 
 

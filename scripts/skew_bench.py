@@ -155,7 +155,7 @@ pure waste). The salted layout (extract.salted: part_id = hash(url) + a
 a single identical url. AQE cannot fix this stage — its skew handling
 splits join partitions, not repartition+mapInArrow stages (SURVEY §4) —
 so the salting is explicit in the production path
-(operators/extract.extract_pages(repartition=...)).
+(operators/runner.stage_input, through operators/extract.salted).
 
 Reproduce: `python scripts/skew_bench.py {n} {parts} {cpus}`
 """

@@ -30,16 +30,10 @@ import time
 REPO = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
+from perfbench.hostinfo import steal_jiffies  # noqa: E402
+
 EXEC_CORES = 1
 N_EXECS = 4
-
-
-def _steal() -> int:
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
 
 
 def _cmd(engine_zip: str, archive: str, cpu_lo: int, runs: int,
@@ -95,14 +89,14 @@ def main() -> None:
     best_cluster = None
     cycle_rows = []
     for c in range(cycles):
-        st0 = _steal()
+        st0 = steal_jiffies()
         s = _parse(subprocess.run(
             _cmd(engine_zip, archive, 0, runs, None),
             capture_output=True, text=True, check=True, cwd=str(REPO),
         ).stdout)
-        s["steal"] = _steal() - st0
+        s["steal"] = steal_jiffies() - st0
 
-        st0 = _steal()
+        st0 = steal_jiffies()
         procs = [
             subprocess.Popen(
                 _cmd(engine_zip, archive, r * EXEC_CORES, runs, r),
@@ -112,7 +106,7 @@ def main() -> None:
             for r in range(N_EXECS)
         ]
         shards = [_parse(p.communicate()[0]) for p in procs]
-        steal4 = _steal() - st0
+        steal4 = steal_jiffies() - st0
         rate4 = sum(sh["rate"] for sh in shards)
         eff = rate4 / (N_EXECS * s["rate"])
         cycle_rows.append({

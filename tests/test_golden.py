@@ -211,10 +211,12 @@ def test_parallelism_invariance(spark, fixture_df, fused):
 
 def test_salted_path_invariance(spark, fixture_df, fused):
     """Op 21: the skew-salted exchange must not change a single byte."""
-    from ocr_spark.operators.extract import extract_pages
+    from ocr_spark.operators.extract import extract_pages, salted, with_part_id
 
     got = _canon(
-        extract_pages(fixture_df, num_parts=N_PARTS, repartition=16).collect()
+        extract_pages(
+            salted(with_part_id(fixture_df, N_PARTS), 16), num_parts=N_PARTS
+        ).collect()
     )
     assert got == fused
 

@@ -100,7 +100,7 @@ def test_crash_between_write_and_commit_is_idempotent(spark, fixture_df, out_dir
     overwrite semantics)."""
     from ocr_spark.operators.extract import extract_pages
     from ocr_spark.operators.runner import (
-        Manifest, read_extracted, run_extract,
+        Manifest, read_extracted, read_lineage, run_extract,
     )
 
     run_extract(spark, fixture_df, out_dir, run_id="r1",
@@ -116,6 +116,12 @@ def test_crash_between_write_and_commit_is_idempotent(spark, fixture_df, out_dir
     assert _rows_key(read_extracted(spark, out_dir).collect()) == _rows_key(direct)
     rec = json.loads(victim.read_text())
     assert rec["run_id"] == "r2"
+
+    # one ok lineage row per committed part: the redone part's lost
+    # attempt leaves no row behind
+    lin = read_lineage(spark, out_dir).where("status = 'ok'").collect()
+    assert sorted(r.part_id for r in lin) == list(range(N_PARTS))
+    assert [r.run_id for r in lin if r.part_id == 3] == ["r2"]
 
 
 def test_failed_batch_writes_failed_lineage(spark, fixture_df, out_dir):
@@ -151,6 +157,37 @@ def test_failed_batch_writes_failed_lineage(spark, fixture_df, out_dir):
         range(N_PARTS)
     )
     assert sorted(Manifest(out_dir).completed_parts()) == list(range(N_PARTS))
+
+
+def test_failed_runs_keep_every_failed_row(spark, fixture_df, out_dir):
+    """Two failed runs under ONE run_id (a staging failure, then a batch
+    failure) both keep their failed rows: each failure is a new file under
+    ``_manifest/``, never overwritten, and no lineage lives elsewhere."""
+    import collections
+    import pathlib
+
+    from ocr_spark.operators.runner import (
+        Manifest, read_lineage, run_extract,
+    )
+
+    src = pathlib.Path(out_dir + "-input")
+    fixture_df.write.parquet(str(src))
+    broken = spark.read.parquet(str(src))
+    for f in src.glob("*.parquet"):
+        f.unlink()
+    for per_batch in (3, N_PARTS):  # multi-batch stages first; one batch not
+        with pytest.raises(Exception):
+            run_extract(spark, broken, out_dir, run_id="rf",
+                        num_parts=N_PARTS, parts_per_batch=per_batch)
+
+    lin = read_lineage(spark, out_dir).collect()
+    assert all(r.status == "failed" and r.run_id == "rf" for r in lin)
+    assert collections.Counter(r.part_id for r in lin) == {
+        p: 2 for p in range(N_PARTS)
+    }
+    assert all(r.started_ts <= r.finished_ts for r in lin)
+    assert Manifest(out_dir).completed_parts() == {}
+    assert not (pathlib.Path(out_dir) / "_lineage").exists()
 
 
 def test_part_id_independent_of_partitioning(spark, fixture_df):

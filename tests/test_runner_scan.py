@@ -189,7 +189,7 @@ def test_data_location_override(spark, tmp_path):
     layer to a separate location (iceberg: the day a jar appears) while
     manifests/lineage stay under out_dir; resume still works."""
     from ocr_spark.operators.extract import extract_pages
-    from ocr_spark.operators.runner import Manifest, run_extract
+    from ocr_spark.operators.runner import Manifest, read_lineage, run_extract
 
     src = tmp_path / "pages"
     out = tmp_path / "out"
@@ -210,13 +210,67 @@ def test_data_location_override(spark, tmp_path):
     )
     assert got == expected
     # lineage/manifest live under out_dir as before
-    assert (out / "_lineage").exists()
+    lin = read_lineage(spark, str(out)).collect()
+    assert sorted(r.part_id for r in lin) == list(range(N_PARTS))
+    assert sum(r.output_rows for r in lin) == len(expected)
 
     # a rerun over the same out_dir is a no-op resume
     res2 = run_extract(spark, pages, str(out), run_id="loc2",
                        num_parts=N_PARTS, parts_per_batch=3,
                        data_location=str(data))
     assert res2["parts_done_now"] == []
+
+
+def _jobs_of(spark, group, fn) -> int:
+    """Spark jobs that ``fn()`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_batch_shuffles_rows_once(spark, fixture_df, tmp_path):
+    """A batch repartitions its finished rows once, before the persist: the
+    links and meta sinks add one narrow write job each (plus the one job
+    that fills the batch's cache), not an exchange of their own, and no
+    ``_lineage`` directory exists. With the text sink alone, column pruning
+    keeps links and meta out of the exchange."""
+    from ocr_spark.operators.extract import extract_rows, select_extracted
+    from ocr_spark.operators.runner import read_lineage, run_extract
+
+    def run(out, sides):
+        kw = {"links_location": str(out / "links"),
+              "meta_location": str(out / "meta")} if sides else {}
+        return lambda: run_extract(spark, fixture_df, str(out), run_id="j",
+                                   num_parts=4, parts_per_batch=4, **kw)
+
+    text = _jobs_of(spark, "runner-text", run(tmp_path / "t", False))
+    three = _jobs_of(spark, "runner-three", run(tmp_path / "a", True))
+    assert three - text == 3, (text, three)
+    for out in (tmp_path / "t", tmp_path / "a"):
+        assert not (out / "_lineage").exists()
+        assert len(read_lineage(spark, str(out)).collect()) == 4
+    for sink in ("data", "links", "meta"):  # one file per part per sink
+        files = list((tmp_path / "a" / sink).glob("part_id=*/*.parquet"))
+        assert len(files) == 4, (sink, files)
+
+    rows = extract_rows(fixture_df, num_parts=4).repartition(4, "part_id")
+    plan = select_extracted(rows, stats=True)._jdf.queryExecution()
+    found = []
+
+    def walk(node):
+        if node.nodeName() == "RepartitionByExpression":
+            found.append(node.child().output().toString())
+        for i in range(node.children().size()):
+            walk(node.children().apply(i))
+
+    walk(plan.optimizedPlan())
+    assert len(found) == 1 and "part_id" in found[0], found
+    assert "links" not in found[0] and "meta" not in found[0], found
 
 
 def test_input_counts_dedup_attempts():

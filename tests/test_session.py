@@ -1,4 +1,5 @@
-"""Session factory: the master it runs with and the Python worker daemon.
+"""Session factory: the master it runs with, the Python worker daemon and
+the driver's young generation.
 
 ``session.daemon_conf`` sets ``ocr_spark._daemon`` (which keeps zip-importer
 directories across tasks) only where the daemon can import it. The
@@ -89,6 +90,15 @@ def test_session_workers_run_patched_invalidate(spark):
 
     df = spark.range(8, numPartitions=4).mapInArrow(report, "src string")
     assert {r.src for r in df.collect()} == {DAEMON_FILE}
+
+
+def test_session_driver_runs_with_fixed_young_generation(spark):
+    """The builder launched the tests' JVM, so ``YOUNG_GEN`` is among its
+    arguments."""
+    from ocr_spark.session import YOUNG_GEN
+
+    bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    assert YOUNG_GEN in list(bean.getRuntimeMXBean().getInputArguments())
 
 
 # ---- spark-submit -------------------------------------------------------------
