@@ -4,8 +4,17 @@ This is the hot Python path of the whole engine: it runs inside
 ``mapInArrow`` / scalar-iter ``pandas_udf`` workers over Arrow batches
 (SURVEY.md §2 ops 11, 57, 60). Two layers:
 
-- the parser, one document at a time, keeps only ``(tag, depth, text,
-  link_chars)`` per block (plus a bbox on PDF payloads);
+- the parse, one document at a time. One fast tokenizer
+  (:func:`_fast_tokens`) turns simple markup into html.parser's event
+  stream, or bails to html.parser. Its tokens feed one of two consumers,
+  chosen by the product:
+  - the full product (blocks, outlinks, metadata, table cells) runs the
+    ``_BlockParser`` handlers (:func:`_feed`, or html.parser on a bail),
+    keeping ``(tag, depth, text, link_chars)`` per block (plus a bbox on
+    PDF payloads);
+  - the text product runs the stackless text scan
+    (:func:`_text_blocks`), keeping only ``(text, link_chars)`` per block
+    (on a bail, those two fields of :func:`parse_payload`'s blocks);
 - one batch kernel does the rest over the batch's flat block-text array:
   the SPEC.md §2 features (:func:`block_features`: Arrow string kernels,
   the stopword predicate once per distinct token, language recovery of
@@ -13,11 +22,12 @@ This is the hot Python path of the whole engine: it runs inside
   span offsets, assembly and the text hash (:func:`assemble_batch`), ops
   13-17 as numpy over whole columns.
 
-``extract_batch`` chains both, so the flagship extraction crosses into
-Python once and comes back with finished rows; ``parse_batch_columnar``
-stops after the features. Every consumer of the tail (the fused
-extraction, the staged ``label_blocks``/``assemble`` hops, language
-recovery) runs these same functions.
+``extract_text_batch`` (the text scan) and ``extract_batch`` (the
+handlers, plus outlinks and metadata) chain both, so the flagship
+extraction crosses into Python once and comes back with finished rows;
+``parse_batch_columnar`` stops after the features. Every consumer of the
+tail (both extractions, the staged ``label_blocks``/``assemble`` hops,
+language recovery) runs these same functions.
 
 It is one of TWO independent implementations of SPEC.md — the other is the
 frozen single-threaded ``ocr_spark.goldenref`` used to produce golden
@@ -255,7 +265,9 @@ class _BlockParser(HTMLParser):
             # SPEC §7.4: close the innermost open table
             self.table_stack.pop()
         stack = self.stack
-        if tag in stack:
+        if stack and stack[-1] == tag:
+            stack.pop()
+        elif tag in stack:
             # pop up to and including the last occurrence (implicit closes)
             idx = len(stack) - 1 - stack[::-1].index(tag)
             del stack[idx:]
@@ -455,31 +467,38 @@ def _pdf_blocks(obj: dict) -> list[tuple]:
 
 
 # --- fast-path tokenizer ----------------------------------------------------
-# A regex scanner for "simple" markup: no entities, no comments/doctype/PI,
-# every `<` opening a plain tag. Measured ~2x end-to-end vs html.parser on
-# template pages. It feeds the SAME _BlockParser handlers, and BAILS to
-# html.parser on anything it cannot prove it tokenizes identically — the
-# differential tests (fast vs forced-slow over the adversarial corpus and
-# hypothesis-generated soup) hold the two tokenizations together.
+# A regex tokenizer for "simple" markup: no entities, no comments/doctype/PI,
+# every `<` opening a plain tag. It turns a document into the event stream
+# html.parser would produce, or answers None (bail to html.parser) on
+# anything it cannot prove it tokenizes identically — the differential tests
+# (fast vs forced-slow over the adversarial corpus and hypothesis-generated
+# soup) hold the two tokenizations together. Its tokens feed two consumers:
+# the _BlockParser handlers (:func:`_feed`, the full product) and the
+# stackless text scan (:func:`_text_blocks`, the text product).
 
 # The name charset here is NARROWER than html.parser's tagfind_tolerant
 # (`[a-zA-Z][^\t\n\r\f />\x00]*`), so the lookahead is load-bearing: a name
 # that continues with a char outside [a-zA-Z0-9-] (e.g. `<o:p>`, `<div.cls>`
 # — namespaced tags are common in Word-exported HTML) must FAIL the match and
 # bail to html.parser, not be silently split into name + attrs (html.parser
-# would take `o:p` as the whole tag name, changing block boundaries).
+# would take `o:p` as the whole tag name, changing block boundaries). An end
+# tag matches only with nothing but whitespace before its `>`: `</p x>` and
+# `</p/>` are bogus comments to html.parser, so they must not match. No tag
+# match holds a `<` but its first, so a document whose `<` count exceeds its
+# tag count has a `<` the fast path cannot tokenize, and bails.
 _SIMPLE_TAG = re.compile(
-    r"<(/?)([a-zA-Z][a-zA-Z0-9-]*)(?=[\t\n\r\f />])"
-    r"((?:[^<>\"']|\"[^\"<]*\"|'[^'<]*')*?)(/?)>"
+    r"<(/)?([a-zA-Z][a-zA-Z0-9-]*)(?=[\t\n\r\f />])"
+    r"((?(1)\s*|(?:[^<>\"']|\"[^\"<]*\"|'[^'<]*')*?))((?(1)|/?))>"
 )
 
-# Strict attribute item for the fast path, parsed ONLY for <a> tags (the
-# other tags' attributes are semantically ignored). Deliberately a SUBSET of
-# html.parser's attrfind_tolerant: names must start with a letter, values
-# must be cleanly quoted or quote/space/=-free. Anything the subset can't
-# fully consume bails the document to html.parser — the same discipline the
-# rest of the fast path uses for every ambiguity (fast and slow must agree
-# byte-for-byte, so the fast path only handles what it can prove).
+# Strict attribute item for the fast path, parsed ONLY for a/meta/link tags
+# (the other tags' attributes are semantically ignored). Deliberately a
+# SUBSET of html.parser's attrfind_tolerant: names must start with a letter,
+# values must be cleanly quoted or quote/space/=-free. Anything the subset
+# can't fully consume bails the document to html.parser — the same
+# discipline the rest of the fast path uses for every ambiguity (fast and
+# slow must agree byte-for-byte, so the fast path only handles what it can
+# prove).
 _FAST_ATTR = re.compile(
     r"\s+([a-zA-Z][a-zA-Z0-9_:.\-]*)"
     r"(?:\s*=\s*(\"[^\"]*\"|'[^']*'|[^\s\"'=<>`]+))?"
@@ -516,14 +535,19 @@ def _fast_attrs(raw: str) -> list[tuple[str, str | None]] | None:
 # the fast path must parse their attrs instead of dropping them
 _FAST_ATTR_TAGS = frozenset(("a", "meta", "link"))
 
-# html.parser gives only <script>/<style> CDATA treatment
-_CDATA_ELEMS = frozenset(("script", "style"))
+# html.parser gives only <script>/<style> CDATA treatment. A start tag of
+# either, matched exactly as _SIMPLE_TAG would match it there.
+_CDATA_OPEN = re.compile(
+    r"<(script|style)(?=[\t\n\r\f />])"
+    r"(?:[^<>\"']|\"[^\"<]*\"|'[^'<]*')*?(/?)>",
+    re.IGNORECASE,
+)
 _CDATA_CLOSE = {
     name: (
         re.compile(rf"</\s*{name}\s*>", re.IGNORECASE),
         re.compile(rf"</\s*{name}", re.IGNORECASE),
     )
-    for name in _CDATA_ELEMS
+    for name in ("script", "style")
 }
 
 # _CDATA_CLOSE mirrors CPython 3.11's set_cdata_mode pattern (`</\s*name`-
@@ -543,78 +567,177 @@ def _cdata_fast_ok() -> bool:
 _CDATA_FAST = _cdata_fast_ok()
 
 
-def _fast_scan(decoded: str, h: _BlockParser) -> bool:
-    """Tokenize simple markup into handler events; False = use html.parser.
+def _split_tags(segment: str) -> list | None:
+    """``segment`` as ``[data, (closing, name, attrs, selfclose, data)*]``,
+    one ``split`` call; None if a `<` in it opens no simple tag.
 
-    May have emitted events before bailing — the caller must reset the
-    handler before falling back.
+    (``split`` rather than ``findall`` with a leading data group: a search
+    for data-then-tag restarts at every character of a data run that ends
+    in a bogus `<`, quadratic in the run.)"""
+    parts = _SIMPLE_TAG.split(segment)
+    return parts if len(parts) // 5 == segment.count("<") else None
+
+
+def _fast_tokens(decoded: str) -> list | None:
+    """Tokenize simple markup; None = use html.parser.
+
+    The tokens are one flat list, ``[data, (closing, name, attrs,
+    selfclose, data)*]``: the document's leading text, then per tag its
+    end-tag mark (``"/"`` or None), lowercase name, attributes and
+    self-closing mark (``"/"`` or ``""``) and the text that follows it up
+    to the next tag. The attributes of an ``a``/``meta``/``link`` start
+    tag are parsed into ``(name, value)`` pairs, any other tag's are its
+    raw attribute text. A ``<script>``/``<style>`` element's content is the
+    data after its start tag, followed by its end tag. No handler event is
+    emitted here, so a bail leaves nothing to undo.
     """
     if (
         "&" in decoded or "<!" in decoded or "<?" in decoded
         or "\x00" in decoded  # html.parser treats NUL-bearing tags as data
     ):
-        return False
-    pos = 0
-    find = decoded.find
-    match = _SIMPLE_TAG.match
-    n = len(decoded)
+        return None
+    tokens: list = []
+    seg = pos = 0
     while True:
-        lt = find("<", pos)
-        if lt == -1:
-            if pos < n:
-                h.handle_data(decoded[pos:])
-            return True
-        if lt > pos:
-            h.handle_data(decoded[pos:lt])
-        m = match(decoded, lt)
+        m = _CDATA_OPEN.search(decoded, pos)
         if m is None:
-            return False  # bogus `<`: html.parser has bespoke tolerance
-        closing, name, attrs, selfclose = m.groups()
-        name = name.lower()
-        if closing:
-            if attrs.strip() or selfclose:
-                return False  # `</p x>` is a bogus-comment in html.parser
-            h.handle_endtag(name)
-        elif selfclose:
+            break
+        pos = m.end()
+        if m.group(2):
+            continue  # `<script/>` opens no CDATA element in html.parser
+        if not _CDATA_FAST:
+            return None  # html.parser CDATA rules changed: bail
+        name = m.group(1).lower()
+        close_rx, prefix_rx = _CDATA_CLOSE[name]
+        mc = close_rx.search(decoded, pos)
+        mp = prefix_rx.search(decoded, pos)
+        if mc is None or mp is None or mp.start() != mc.start():
+            return None  # unterminated or gnarly (`</script x>`) content
+        parts = _split_tags(decoded[seg:pos])
+        if parts is None:
+            return None
+        tokens += parts
+        # the segment ends at the start tag: its empty trailing data slot
+        # takes the element's content, then the end tag follows
+        tokens[-1] = decoded[pos:mc.start()]
+        tokens += ("/", name, "", "")
+        seg = pos = mc.end()
+    parts = _split_tags(decoded[seg:])
+    if parts is None:
+        return None
+    tokens += parts
+    names = [n.lower() for n in tokens[2::5]]
+    tokens[2::5] = names
+    if "/" in tokens[4::5]:
+        for k in range(3, len(tokens), 5):
             # `<a href=x/>`: html.parser folds the `/` into the unquoted
             # attribute value (NOT self-closing) — bail on that ambiguity
-            if "=" in attrs and attrs.rstrip()[-1:] not in ('"', "'"):
-                return False
-            if name in _FAST_ATTR_TAGS and attrs.strip():
-                parsed = _fast_attrs(attrs)
-                if parsed is None:
-                    return False
-                h.handle_startendtag(name, parsed)
-            else:
-                h.handle_startendtag(name, ())
+            attrs = tokens[k]
+            if (
+                tokens[k + 1] and "=" in attrs
+                and attrs.rstrip()[-1:] not in ('"', "'")
+            ):
+                return None
+    for k, name in enumerate(names):
+        if name in _FAST_ATTR_TAGS and tokens[5 * k + 1] is None:
+            parsed = _fast_attrs(tokens[5 * k + 3])
+            if parsed is None:
+                return None
+            tokens[5 * k + 3] = parsed
+    return tokens
+
+
+def _feed(tokens: list, h: _BlockParser) -> None:
+    """Run the _BlockParser handlers over :func:`_fast_tokens` output."""
+    h.handle_data(tokens[0])
+    it = iter(tokens)
+    next(it)
+    for closing, name, attrs, selfclose, data in zip(it, it, it, it, it):
+        if closing:
+            h.handle_endtag(name)
+        elif selfclose:
+            h.handle_startendtag(
+                name, attrs if name in _FAST_ATTR_TAGS else ()
+            )
         else:
-            if name in _FAST_ATTR_TAGS and attrs.strip():
-                parsed = _fast_attrs(attrs)
-                if parsed is None:
-                    return False
-                h.handle_starttag(name, parsed)
-            else:
-                h.handle_starttag(name, ())
-            if name in _CDATA_ELEMS:
-                if not _CDATA_FAST:
-                    return False  # html.parser CDATA rules changed: bail
-                close_rx, prefix_rx = _CDATA_CLOSE[name]
-                mc = close_rx.search(decoded, m.end())
-                mp = prefix_rx.search(decoded, m.end())
-                if mc is None or mp is None or mp.start() != mc.start():
-                    # unterminated or gnarly (`</script x>`) content
-                    return False
-                if mc.start() > m.end():
-                    h.handle_data(decoded[m.end() : mc.start()])
-                h.handle_endtag(name)
-                pos = mc.end()
-                continue
-        pos = m.end()
+            h.handle_starttag(name, attrs if name in _FAST_ATTR_TAGS else ())
+        if data:
+            h.handle_data(data)
+
+
+def _text_blocks(tokens: list) -> list[tuple[str, int]]:
+    """The ``(text, link_chars)`` of every block of a document, from its
+    :func:`_fast_tokens` — what the _BlockParser handlers would give for
+    those two fields, without the element stack, block tags and depths,
+    outlinks, title, meta or table cells.
+
+    State: the open block's text, its linked characters, the skip-element
+    depth (SPEC §1 SKIP_TAGS) and the anchor depth. A block tag's start or
+    end flushes the open block; the scan stops once MAX_BLOCKS blocks are
+    kept, since none after them can be.
+    """
+    block_tags = spec.BLOCK_TAGS
+    skip_tags = spec.SKIP_TAGS
+    blocks: list[tuple[str, int]] = []
+    buf = [tokens[0]] if tokens[0] else []
+    link_chars = skip = anchor = 0
+    it = iter(tokens)
+    next(it)
+    for closing, name, _, selfclose, data in zip(it, it, it, it, it):
+        if name in block_tags and buf:
+            text = " ".join("".join(buf).split())
+            if text:
+                blocks.append((text, link_chars))
+                if len(blocks) == spec.MAX_BLOCKS:
+                    return blocks
+            buf = []
+            link_chars = 0
+        if closing:
+            if name in skip_tags:
+                if skip:
+                    skip -= 1
+            elif name == "a" and anchor:
+                anchor -= 1
+        elif not selfclose:
+            if name in skip_tags:
+                skip += 1
+            elif name == "a":
+                anchor += 1
+        if data and not skip:
+            buf.append(data)
+            if anchor:
+                link_chars += len(" ".join(data.split()))
+    if buf:
+        text = " ".join("".join(buf).split())
+        if text:
+            blocks.append((text, link_chars))
+    return blocks
 
 
 _EMPTY_META = {
     "title": "", "description": "", "canonical": "", "og_title": "",
 }
+
+
+def _payload(html: bytes | None) -> tuple[str, object]:
+    """SPEC.md §0 dispatch: ``("empty", None)``, ``("pdf", blocks)`` (see
+    :func:`_pdf_blocks`) or ``("html", decoded text)``."""
+    if not html:
+        return "empty", None
+    decoded = sniff_decode(html)
+    stripped = decoded.lstrip()
+    if stripped.startswith("{"):
+        try:
+            obj = json.loads(decoded)
+        except (ValueError, RecursionError):
+            obj = None
+        if (
+            isinstance(obj, dict)
+            and obj.get("kind") == "pdf"
+            and isinstance(obj.get("blocks"), list)
+        ):
+            return "pdf", _pdf_blocks(obj)
+    return "html", decoded
 
 
 def parse_payload(
@@ -633,42 +756,26 @@ def parse_payload(
     ``force_slow`` disables the fast-path tokenizer (used by the
     differential tests that prove the two tokenizers agree).
     """
-    if not html:
+    kind, doc = _payload(html)
+    if kind == "empty":
         return "empty", [], [], _EMPTY_META, []
-    decoded = sniff_decode(html)
-    stripped = decoded.lstrip()
-    if stripped.startswith("{"):
-        try:
-            obj = json.loads(decoded)
-        except (ValueError, RecursionError):
-            obj = None
-        if (
-            isinstance(obj, dict)
-            and obj.get("kind") == "pdf"
-            and isinstance(obj.get("blocks"), list)
-        ):
-            return "pdf", _pdf_blocks(obj), [], _EMPTY_META, []
+    if kind == "pdf":
+        return "pdf", doc, [], _EMPTY_META, []
     if parser is None:
         parser = _BlockParser()
     parser.reset()  # HTMLParser internal state
     parser._reset_doc()
-    if not force_slow and _fast_scan(decoded, parser):
-        parser._flush()
-        parser._finalize_link()
-        parser._finalize_meta()
-        return (
-            "html", parser.blocks, parser.links, parser.meta_result(),
-            parser.tables,
-        )
-    parser.reset()  # discard any partial fast-path events
-    parser._reset_doc()
-    try:
-        parser.feed(decoded)
-        parser.close()
-    except Exception:
-        # html.parser is tolerant, but guard the 100 TB run anyway:
-        # a pathological page yields whatever was flushed so far.
-        pass
+    tokens = None if force_slow else _fast_tokens(doc)
+    if tokens is not None:
+        _feed(tokens, parser)
+    else:
+        try:
+            parser.feed(doc)
+            parser.close()
+        except Exception:
+            # html.parser is tolerant, but guard the 100 TB run anyway:
+            # a pathological page yields whatever was flushed so far.
+            pass
     parser._flush()
     parser._finalize_link()
     parser._finalize_meta()
@@ -939,6 +1046,24 @@ def parse_batch_columnar(
     )
 
 
+def _extract_tail(
+    texts: pa.Array,
+    link_chars: np.ndarray,
+    offsets: np.ndarray,
+    pdf: np.ndarray,
+    langs: list[str | None],
+    langid: bool,
+) -> tuple[list[str | None], list[pa.Array]]:
+    """:func:`block_features` → :func:`label_mask` → :func:`assemble_batch`
+    over a batch's flat block columns."""
+    langs, feats = block_features(texts, link_chars, offsets, langs, langid)
+    keep = label_mask(
+        offsets, pdf, feats["text_len"], feats["link_density"],
+        feats["stopword_density"],
+    )
+    return langs, assemble_batch(texts, feats["text_len"], keep, offsets)
+
+
 def extract_batch(
     htmls: list[bytes | None], langs: list[str | None], langid: bool = False
 ):
@@ -950,14 +1075,51 @@ def extract_batch(
     metadata as flat columns like :func:`parse_batch_columnar`'s.
     """
     p = _ParsedBatch(htmls)
-    langs, feats = block_features(
-        p.texts, p.link_chars, p.offsets, langs, langid
-    )
-    keep = label_mask(
-        p.offsets, p.pdf, feats["text_len"], feats["link_density"],
-        feats["stopword_density"],
+    langs, text_arrays = _extract_tail(
+        p.texts, p.link_chars, p.offsets, p.pdf, langs, langid
     )
     return (
-        langs, assemble_batch(p.texts, feats["text_len"], keep, p.offsets),
-        p.link_offsets, p.hrefs, p.anchors, p.meta_cols,
+        langs, text_arrays, p.link_offsets, p.hrefs, p.anchors, p.meta_cols,
+    )
+
+
+def extract_text_batch(
+    htmls: list[bytes | None], langs: list[str | None], langid: bool = False
+) -> tuple[list[str | None], list[pa.Array]]:
+    """:func:`extract_batch`'s ``(langs, text_arrays)`` alone, from the
+    text scan: an HTML page's blocks come from :func:`_text_blocks` over
+    its :func:`_fast_tokens`, or from :func:`parse_payload` where the
+    tokenizer bails; nothing else of the page is parsed."""
+    parser = None
+    texts: list[str] = []
+    link_chars: list[int] = []
+    offsets = [0]
+    pdf: list[bool] = []
+    for html in htmls:
+        kind, doc = _payload(html)
+        blocks = ()
+        if kind == "pdf":
+            blocks = [(b[2], b[3]) for b in doc]
+        elif kind == "html":
+            tokens = _fast_tokens(doc)
+            if tokens is not None:
+                blocks = _text_blocks(tokens)
+            else:
+                parser = parser or _BlockParser()
+                blocks = [
+                    (b[2], b[3])
+                    for b in parse_payload(html, None, parser, True)[1]
+                ]
+        if blocks:
+            cols = tuple(zip(*blocks))
+            texts += cols[0]
+            link_chars += cols[1]
+        offsets.append(len(texts))
+        pdf.append(kind == "pdf")
+    return _extract_tail(
+        pa.array(texts, type=pa.string()),
+        np.array(link_chars, dtype=np.int64),
+        np.array(offsets, dtype=np.int64),
+        np.array(pdf, dtype=bool),
+        langs, langid,
     )

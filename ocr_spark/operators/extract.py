@@ -4,15 +4,26 @@ Pipeline shape (design point: 100 TB / 10^12 docs on 1000 executors):
 
     pages ──mapInArrow(parse + tail)──► extracted rows ──Project──► product
 
-The single JVM→Python Arrow hop does the whole job
-(``html_blocks.extract_batch``): the per-document parse (SURVEY §2 op 11 /
-op 60), then one batch kernel over the batch's flat block columns for the
-block features, classification (op 13), jusText smoothing (op 14), span
-offsets (op 15), assembly and the text hash (op 17). It comes back with
-finished rows plus the outlinks and metadata, so every text, link and meta
-sink can be fed from one pass. The plan needs NO shuffle and makes the
-whole extraction embarrassingly parallel: scaling efficiency N→4N
-executors is bounded only by input-split balance, not by shuffle or skew.
+The single JVM→Python Arrow hop does the whole job: the per-document parse
+(SURVEY §2 op 11 / op 60), then one batch kernel over the batch's flat
+block columns for the block features, classification (op 13), jusText
+smoothing (op 14), span offsets (op 15), assembly and the text hash
+(op 17). The product the caller asks for picks one of two hops:
+
+- the text hop (:func:`extract_text_rows`, ``EXTRACT_TEXT_DDL``,
+  ``html_blocks.extract_text_batch``) parses only what the text product
+  reads, each block's text and linked characters, and returns the
+  finished rows alone. ``extract_pages`` (unless ``keep_meta``),
+  ``extract_pages_langid`` and the runner's text-only batches run it;
+- the full hop (:func:`extract_rows`, ``EXTRACT_DDL``,
+  ``html_blocks.extract_batch``) runs the parse handlers and also returns
+  the outlinks and metadata, so every text, link and meta sink can be fed
+  from one pass. ``keep_meta`` and the runner's links/meta sinks run it.
+
+Both give the same text rows, byte for byte. The plan needs NO shuffle
+and makes the whole extraction embarrassingly parallel: scaling
+efficiency N→4N executors is bounded only by input-split balance, not by
+shuffle or skew.
 
 The kernel is O(tokens) Arrow and numpy work per batch (the stopword
 predicate runs once per distinct token), so a MAX_BLOCKS link farm costs
@@ -35,6 +46,7 @@ from pyspark.sql import functions as F
 from ocr_spark.html_blocks import (
     assemble_batch,
     extract_batch,
+    extract_text_batch,
     label_mask,
     parse_batch_columnar,
 )
@@ -67,14 +79,16 @@ SPANS_DDL = (
     "array<struct<block_id: int, start: bigint, `end`: bigint, label: string>>"
 )
 
-# the fused hop's output: the EXTRACTED_SCHEMA columns plus the per-row
-# input size (lineage) and the §5/§6 side products; no blocks array
-EXTRACT_DDL = (
+# the text hop's output: the EXTRACTED_SCHEMA columns plus the per-row
+# input size (lineage); no blocks array
+EXTRACT_TEXT_DDL = (
     "url string, warc_ts timestamp, lang string, part_id int,"
     " bytes_in bigint, extracted_text string,"
     f" spans {SPANS_DDL}, text_sha256 string, n_blocks int,"
-    f" n_content_blocks int, links {_LINKS_DDL}, meta {_META_DDL}"
+    " n_content_blocks int"
 )
+# the full hop's output: the text hop's plus the §5/§6 side products
+EXTRACT_DDL = EXTRACT_TEXT_DDL + f", links {_LINKS_DDL}, meta {_META_DDL}"
 _EXTRACT_COLS = [
     "url", "warc_ts", "lang", "part_id", "bytes_in", "extracted_text",
     "spans", "text_sha256", "n_blocks", "n_content_blocks", "links", "meta",
@@ -175,31 +189,36 @@ def _links_meta_arrays(link_offsets, hrefs, anchors, meta_cols) -> list:
     ]
 
 
-def _extract_one_batch(batch: pa.RecordBatch, langid: bool) -> pa.RecordBatch:
-    """html bytes → finished extraction rows for one Arrow batch.
+def _extract_one_batch(
+    batch: pa.RecordBatch, langid: bool, text_only: bool = False
+) -> pa.RecordBatch:
+    """html bytes → finished extraction rows for one Arrow batch: the
+    ``EXTRACT_DDL`` columns, or the ``EXTRACT_TEXT_DDL`` ones from the
+    text scan when ``text_only``.
 
     Output arrays are built columnar (flat primitive columns → StructArray →
     ListArray) — pa.array over list-of-dicts walks Python objects per value
     and measured ~2x slower for the whole stage.
     """
-    langs, text_arrays, link_offsets, hrefs, anchors, meta_cols = (
-        extract_batch(
-            batch.column("html").to_pylist(),
-            batch.column("lang").to_pylist(),
-            langid,
-        )
-    )
+    htmls = batch.column("html").to_pylist()
+    langs = batch.column("lang").to_pylist()
+    if text_only:
+        langs, text_arrays = extract_text_batch(htmls, langs, langid)
+        side = []
+    else:
+        langs, text_arrays, *links_meta = extract_batch(htmls, langs, langid)
+        side = _links_meta_arrays(*links_meta)
+    arrays = [
+        batch.column("url"),
+        batch.column("warc_ts"),
+        pa.array(langs, type=pa.string()),
+        batch.column("part_id"),
+        _bytes_in(batch),
+        *text_arrays,
+        *side,
+    ]
     return pa.RecordBatch.from_arrays(
-        [
-            batch.column("url"),
-            batch.column("warc_ts"),
-            pa.array(langs, type=pa.string()),
-            batch.column("part_id"),
-            _bytes_in(batch),
-            *text_arrays,
-            *_links_meta_arrays(link_offsets, hrefs, anchors, meta_cols),
-        ],
-        names=_EXTRACT_COLS,
+        arrays, names=_EXTRACT_COLS[:len(arrays)]
     )
 
 
@@ -324,12 +343,28 @@ def extract_rows(
     )
 
 
+def extract_text_rows(
+    df: DataFrame,
+    num_parts: int = DEFAULT_NUM_PARTS,
+    input_counter=None,
+    langid: bool = False,
+) -> DataFrame:
+    """:func:`extract_rows` without ``links`` and ``meta``
+    (``EXTRACT_TEXT_DDL``): the text hop, whose Python pass runs the text
+    scan (``html_blocks.extract_text_batch``) and so never computes them."""
+    task = functools.partial(_extract_one_batch, langid=langid, text_only=True)
+    return _parse_input(df, num_parts).mapInArrow(
+        _arrow_task(task, input_counter), EXTRACT_TEXT_DDL
+    )
+
+
 def select_extracted(
     rows: DataFrame, stats: bool = False, keep_meta: bool = False
 ) -> DataFrame:
     """The extracted product (EXTRACTED_SCHEMA column order) from
-    :func:`extract_rows` output; ``stats`` keeps ``bytes_in`` and
-    ``keep_meta`` keeps the §6 ``meta`` struct."""
+    :func:`extract_text_rows` or :func:`extract_rows` output; ``stats``
+    keeps ``bytes_in`` and ``keep_meta`` keeps the §6 ``meta`` struct
+    (full hop only)."""
     return rows.select(
         "url",
         "warc_ts",
@@ -518,7 +553,7 @@ def extract_pages_langid(
     and tag. The output ``lang`` column is the recovered one. One
     mapInArrow hop, shuffle-free.
     """
-    return select_extracted(extract_rows(df, num_parts, langid=True))
+    return select_extracted(extract_text_rows(df, num_parts, langid=True))
 
 
 def extract_pages(
@@ -533,4 +568,5 @@ def extract_pages(
     streaming flagship — get metadata without a second parse or a second
     sink).
     """
-    return select_extracted(extract_rows(df, num_parts), keep_meta=keep_meta)
+    rows = (extract_rows if keep_meta else extract_text_rows)(df, num_parts)
+    return select_extracted(rows, keep_meta=keep_meta)

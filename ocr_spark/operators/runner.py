@@ -78,6 +78,7 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.extract import (
     DEFAULT_NUM_PARTS,
     extract_rows,
+    extract_text_rows,
     metadata_rows,
     outlink_rows,
     salted,
@@ -382,17 +383,19 @@ def run_extract(
                 # ONE exchange per batch clusters the rows by part_id, so
                 # each sink's write is narrow with one file per part (else
                 # every task writes into every part dir: tasks x parts
-                # files, measured 7x slower). Column pruning keeps unused
-                # columns (links, meta for the text sink alone) out of it.
-                rows = extract_rows(
+                # files, measured 7x slower). The text sink alone reads
+                # the text hop, which never computes links or meta.
+                sides = links_location is not None or meta_location is not None
+                rows = (extract_rows if sides else extract_text_rows)(
                     sub, num_parts=num_parts, input_counter=input_counts
                 ).repartition(len(batch), "part_id")
-                if links_location is not None or meta_location is not None:
+                if sides:
                     # all products from ONE parse: persist the finished rows
                     # for the batch (bounded by batch size) and feed the
                     # text sink and the side sinks from the cache
                     rows.persist()
-                sinks = [(data_dir, select_extracted(rows, stats=True))]
+                text = select_extracted(rows, stats=True)
+                sinks = [(data_dir, text)]
                 if links_location is not None:
                     sinks.append((links_location, outlink_rows(rows)))
                 if meta_location is not None:
@@ -416,9 +419,10 @@ def run_extract(
             finished = _utcnow()
 
             _ts = time.perf_counter()
-            # column-pruned read-back of the freshly written batch
+            # column-pruned read-back of the freshly written batch, with
+            # the schema the text sink wrote (no schema-inference job)
             stats_rows = (
-                read_table(spark, data_dir)
+                read_table(spark, data_dir, schema=text.schema)
                 .where(F.col("part_id").isin(batch))
                 .groupBy("part_id")
                 .agg(

@@ -117,15 +117,12 @@ def test_hypothesis_soup_agrees(chunks):
 
 def test_fast_path_actually_taken():
     """Guard against the fast path silently bailing on the mainline shape."""
-    from ocr_spark.html_blocks import _BlockParser, _fast_scan
+    from ocr_spark.html_blocks import _fast_tokens
 
-    p = _BlockParser()
-    assert _fast_scan(
+    assert _fast_tokens(
         '<html><body><nav><a href="/a">x</a></nav><p>the data of it</p>'
-        "</body></html>", p,
-    )
-    p2 = _BlockParser()
-    assert _fast_scan(
-        "<style>p{}</style><script>1 &lt; 2</script>".replace("&lt;", "x"),
-        p2,
-    )
+        "</body></html>"
+    ) is not None
+    assert _fast_tokens(
+        "<style>p{}</style><script>1 &lt; 2</script>".replace("&lt;", "x")
+    ) is not None

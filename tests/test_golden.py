@@ -278,3 +278,55 @@ def test_parse_pages_blocks_match_goldenref(spark, fixture_df):
         assert r.kind == g["kind"], r.url
         got = [b.asDict(recursive=True) for b in r.blocks]
         assert got == g["blocks"], r.url
+
+
+def _hop_columns(df) -> list[str]:
+    """The output columns of the ``mapInArrow`` hop in ``df``'s plan."""
+    found = []
+
+    def walk(node):
+        if node.nodeName() == "MapInArrow":
+            out = node.output()
+            found.append([out.apply(i).name() for i in range(out.size())])
+        for i in range(node.children().size()):
+            walk(node.children().apply(i))
+
+    walk(df._jdf.queryExecution().analyzed())
+    assert len(found) == 1, found
+    return found[0]
+
+
+def test_text_hop_equals_full_hop(spark, fixture_df):
+    """``extract_pages`` and ``extract_pages_langid`` read the text hop,
+    whose ``mapInArrow`` output has no ``links`` or ``meta`` column; row
+    for row they equal the full hop's rows taken through
+    ``select_extracted``. ``keep_meta`` keeps the full hop."""
+    from ocr_spark.operators.extract import (
+        extract_pages,
+        extract_pages_langid,
+        extract_rows,
+        extract_text_rows,
+        select_extracted,
+    )
+
+    def rows(df):
+        return {
+            (r.url, None if r.warc_ts is None else r.warc_ts.isoformat()):
+            r.asDict(recursive=True)
+            for r in df.collect()
+        }
+
+    text_cols = _hop_columns(extract_text_rows(fixture_df))
+    assert "links" not in text_cols and "meta" not in text_cols
+    assert _hop_columns(extract_rows(fixture_df))[-2:] == ["links", "meta"]
+    for text, full in (
+        (extract_pages(fixture_df), extract_rows(fixture_df)),
+        (extract_pages_langid(fixture_df),
+         extract_rows(fixture_df, langid=True)),
+    ):
+        assert _hop_columns(text) == text_cols
+        got, want = rows(text), rows(select_extracted(full))
+        assert len(got) == fixture_df.count()
+        assert got == want
+    full_cols = _hop_columns(extract_pages(fixture_df, keep_meta=True))
+    assert full_cols[-2:] == ["links", "meta"]

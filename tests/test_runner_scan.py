@@ -237,8 +237,10 @@ def test_batch_shuffles_rows_once(spark, fixture_df, tmp_path):
     """A batch repartitions its finished rows once, before the persist: the
     links and meta sinks add one narrow write job each (plus the one job
     that fills the batch's cache), not an exchange of their own, and no
-    ``_lineage`` directory exists. With the text sink alone, column pruning
-    keeps links and meta out of the exchange."""
+    ``_lineage`` directory exists. The text sink alone takes one write job
+    and the read-back two, with no schema-inference job. Column pruning
+    keeps links and meta out of a full hop's exchange (the text sink alone
+    reads the text hop, which has neither)."""
     from ocr_spark.operators.extract import extract_rows, select_extracted
     from ocr_spark.operators.runner import read_lineage, run_extract
 
@@ -250,6 +252,9 @@ def test_batch_shuffles_rows_once(spark, fixture_df, tmp_path):
 
     text = _jobs_of(spark, "runner-text", run(tmp_path / "t", False))
     three = _jobs_of(spark, "runner-three", run(tmp_path / "a", True))
+    # the text write, then the read-back's two jobs over the schema the
+    # sink wrote: no schema-inference job of its own
+    assert text == 4, text
     assert three - text == 3, (text, three)
     for out in (tmp_path / "t", tmp_path / "a"):
         assert not (out / "_lineage").exists()
