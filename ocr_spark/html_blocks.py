@@ -5,16 +5,20 @@ This is the hot Python path of the whole engine: it runs inside
 (SURVEY.md §2 ops 11, 57, 60). Two layers:
 
 - the parse, one document at a time. One fast tokenizer
-  (:func:`_fast_tokens`) turns simple markup into html.parser's event
-  stream, or bails to html.parser. Its tokens feed one of two consumers,
-  chosen by the product:
+  (:func:`_fast_tokens`) turns simple markup into the tags and text
+  html.parser would see, or bails to html.parser. Its tag grammar is one
+  attribute pattern, a strict subset of html.parser's, and a tag of any
+  other shape bails. Its tokens keep each tag's raw attribute text and
+  feed one of two consumers, chosen by the product:
   - the full product (blocks, outlinks, metadata, table cells) runs the
     ``_BlockParser`` handlers (:func:`_feed`, or html.parser on a bail),
     keeping ``(tag, depth, text, link_chars)`` per block (plus a bbox on
-    PDF payloads);
+    PDF payloads); :func:`_feed` parses the attributes of the tags the
+    handlers read them from (``a``, ``meta``, ``link``) and no others;
   - the text product runs the stackless text scan
     (:func:`_text_blocks`), keeping only ``(text, link_chars)`` per block
-    (on a bail, those two fields of :func:`parse_payload`'s blocks);
+    and parsing no attribute (on a bail, those two fields of the
+    handlers' blocks under html.parser);
 - one batch kernel does the rest over the batch's flat block-text array:
   the SPEC.md §2 features (:func:`block_features`: Arrow string kernels,
   the stopword predicate once per distinct token, language recovery of
@@ -468,79 +472,53 @@ def _pdf_blocks(obj: dict) -> list[tuple]:
 
 # --- fast-path tokenizer ----------------------------------------------------
 # A regex tokenizer for "simple" markup: no entities, no comments/doctype/PI,
-# every `<` opening a plain tag. It turns a document into the event stream
+# every `<` opening a plain tag. It turns a document into the tokens
 # html.parser would produce, or answers None (bail to html.parser) on
 # anything it cannot prove it tokenizes identically — the differential tests
 # (fast vs forced-slow over the adversarial corpus and hypothesis-generated
-# soup) hold the two tokenizations together. Its tokens feed two consumers:
-# the _BlockParser handlers (:func:`_feed`, the full product) and the
-# stackless text scan (:func:`_text_blocks`, the text product).
-
-# The name charset here is NARROWER than html.parser's tagfind_tolerant
+# soup and tags) hold the two tokenizations together. Its tokens feed two
+# consumers: the _BlockParser handlers (:func:`_feed`, the full product) and
+# the stackless text scan (:func:`_text_blocks`, the text product).
+#
+# The tag grammar is one attribute pattern, _ATTR, a strict SUBSET of
+# html.parser's attrfind_tolerant: a name starting with a letter, then
+# optionally a single `=` and a value, quoted without a `<` or bare without
+# whitespace, quotes, `=`, `<`, `>` or a backtick. The bare value is
+# possessive, never shortened to free a `/` for a self-closing mark: in
+# `<a href=x/>` the `/` stays in the value, as html.parser keeps it. Every
+# start tag (_SIMPLE_TAG, _CDATA_OPEN) and every attribute parse
+# (_FAST_ATTR) is built from it, so a tag of any other shape (`<p
+# class=x"y>`, `<a x="1"y>`, `<p/ x>`) fails the tag match. No tag match
+# holds a `<` but its first, so a segment whose `<` count exceeds its tag
+# count has a `<` the fast path cannot tokenize, and bails.
+#
+# The tag name is NARROWER than html.parser's tagfind_tolerant
 # (`[a-zA-Z][^\t\n\r\f />\x00]*`), so the lookahead is load-bearing: a name
 # that continues with a char outside [a-zA-Z0-9-] (e.g. `<o:p>`, `<div.cls>`
-# — namespaced tags are common in Word-exported HTML) must FAIL the match and
-# bail to html.parser, not be silently split into name + attrs (html.parser
-# would take `o:p` as the whole tag name, changing block boundaries). An end
-# tag matches only with nothing but whitespace before its `>`: `</p x>` and
-# `</p/>` are bogus comments to html.parser, so they must not match. No tag
-# match holds a `<` but its first, so a document whose `<` count exceeds its
-# tag count has a `<` the fast path cannot tokenize, and bails.
+# — namespaced tags are common in Word-exported HTML) must FAIL the match,
+# not be split into name + attrs. An end tag matches only with nothing but
+# whitespace before its `>`: `</p x>` and `</p/>` are bogus comments to
+# html.parser.
+_ATTR = (
+    r"\s+([a-zA-Z][a-zA-Z0-9_:.\-]*)"
+    r"(?:\s*=\s*(\"[^\"<]*\"|'[^'<]*'|[^\s\"'=<>`]++))?"
+)
+_FAST_ATTR = re.compile(_ATTR)
+# the tag patterns' copy of _ATTR, its groups made non-capturing
+_TAG_ATTRS = "(?:%s)*" % re.sub(r"\((?!\?)", "(?:", _ATTR)
 _SIMPLE_TAG = re.compile(
     r"<(/)?([a-zA-Z][a-zA-Z0-9-]*)(?=[\t\n\r\f />])"
-    r"((?(1)\s*|(?:[^<>\"']|\"[^\"<]*\"|'[^'<]*')*?))((?(1)|/?))>"
+    r"((?(1)|" + _TAG_ATTRS + r"))\s*((?(1)|/?))>"
 )
 
-# Strict attribute item for the fast path, parsed ONLY for a/meta/link tags
-# (the other tags' attributes are semantically ignored). Deliberately a
-# SUBSET of html.parser's attrfind_tolerant: names must start with a letter,
-# values must be cleanly quoted or quote/space/=-free. Anything the subset
-# can't fully consume bails the document to html.parser — the same
-# discipline the rest of the fast path uses for every ambiguity (fast and
-# slow must agree byte-for-byte, so the fast path only handles what it can
-# prove).
-_FAST_ATTR = re.compile(
-    r"\s+([a-zA-Z][a-zA-Z0-9_:.\-]*)"
-    r"(?:\s*=\s*(\"[^\"]*\"|'[^']*'|[^\s\"'=<>`]+))?"
-)
-
-
-# the overwhelmingly common anchor shape gets a single-regex fast path
-_ONLY_HREF = re.compile(r"\s+href\s*=\s*\"([^\"<]*)\"\s*$")
-
-
-def _fast_attrs(raw: str) -> list[tuple[str, str | None]] | None:
-    """Parse a fast-path attribute string; None = bail to html.parser.
-
-    The fast path guarantees `raw` contains no '&' (charrefs bail earlier),
-    so values need no unescaping — html.parser would produce the same text.
-    """
-    m = _ONLY_HREF.match(raw)
-    if m is not None:
-        return [("href", m.group(1))]
-    out: list[tuple[str, str | None]] = []
-    pos = 0
-    n = len(raw)
-    while pos < n:
-        m = _FAST_ATTR.match(raw, pos)
-        if m is None:
-            return None if raw[pos:].strip() else out
-        name, val = m.group(1), m.group(2)
-        if val is not None and val[:1] in ('"', "'"):
-            val = val[1:-1]
-        out.append((name.lower(), val))
-        pos = m.end()
-    return out
-# tags whose attributes carry frozen-SPEC state (§5 href, §6 metadata) —
-# the fast path must parse their attrs instead of dropping them
+# tags whose attributes carry frozen-SPEC state (§5 href, §6 metadata): the
+# only attributes :func:`_feed` parses
 _FAST_ATTR_TAGS = frozenset(("a", "meta", "link"))
 
 # html.parser gives only <script>/<style> CDATA treatment. A start tag of
-# either, matched exactly as _SIMPLE_TAG would match it there.
+# either, matched exactly as _SIMPLE_TAG matches it.
 _CDATA_OPEN = re.compile(
-    r"<(script|style)(?=[\t\n\r\f />])"
-    r"(?:[^<>\"']|\"[^\"<]*\"|'[^'<]*')*?(/?)>",
-    re.IGNORECASE,
+    r"<((?i:script|style))(?=[\t\n\r\f />])" + _TAG_ATTRS + r"\s*(/?)>"
 )
 _CDATA_CLOSE = {
     name: (
@@ -554,13 +532,16 @@ _CDATA_CLOSE = {
 # style closers). CPython 3.13+ tightened it to `</name(?=[\t\n\r\f />])`;
 # probe the running interpreter at import and, if the pattern ever differs,
 # disable the CDATA fast path entirely (always bail to html.parser) rather
-# than risk a silent fast/slow divergence after a Python upgrade.
+# than risk a silent fast/slow divergence after a Python upgrade. The probe
+# touches private html.parser API: a release that drops ``interesting`` or
+# changes ``set_cdata_mode``'s signature raises AttributeError/TypeError,
+# which also means "rules changed".
 def _cdata_fast_ok() -> bool:
     probe = HTMLParser()
     try:
         probe.set_cdata_mode("script")
         return probe.interesting.pattern == r"</\s*script\s*>"
-    except Exception:
+    except (AttributeError, TypeError):
         return False
 
 
@@ -583,13 +564,12 @@ def _fast_tokens(decoded: str) -> list | None:
 
     The tokens are one flat list, ``[data, (closing, name, attrs,
     selfclose, data)*]``: the document's leading text, then per tag its
-    end-tag mark (``"/"`` or None), lowercase name, attributes and
-    self-closing mark (``"/"`` or ``""``) and the text that follows it up
-    to the next tag. The attributes of an ``a``/``meta``/``link`` start
-    tag are parsed into ``(name, value)`` pairs, any other tag's are its
-    raw attribute text. A ``<script>``/``<style>`` element's content is the
-    data after its start tag, followed by its end tag. No handler event is
-    emitted here, so a bail leaves nothing to undo.
+    end-tag mark (``"/"`` or None), lowercase name, raw attribute text
+    (parsed only by :func:`_feed`) and self-closing mark (``"/"`` or
+    ``""``) and the text that follows it up to the next tag. A
+    ``<script>``/``<style>`` element's content is the data after its start
+    tag, followed by its end tag. No handler event is emitted here, so a
+    bail leaves nothing to undo.
     """
     if (
         "&" in decoded or "<!" in decoded or "<?" in decoded
@@ -626,41 +606,33 @@ def _fast_tokens(decoded: str) -> list | None:
     if parts is None:
         return None
     tokens += parts
-    names = [n.lower() for n in tokens[2::5]]
-    tokens[2::5] = names
-    if "/" in tokens[4::5]:
-        for k in range(3, len(tokens), 5):
-            # `<a href=x/>`: html.parser folds the `/` into the unquoted
-            # attribute value (NOT self-closing) — bail on that ambiguity
-            attrs = tokens[k]
-            if (
-                tokens[k + 1] and "=" in attrs
-                and attrs.rstrip()[-1:] not in ('"', "'")
-            ):
-                return None
-    for k, name in enumerate(names):
-        if name in _FAST_ATTR_TAGS and tokens[5 * k + 1] is None:
-            parsed = _fast_attrs(tokens[5 * k + 3])
-            if parsed is None:
-                return None
-            tokens[5 * k + 3] = parsed
+    tokens[2::5] = [n.lower() for n in tokens[2::5]]
     return tokens
 
 
 def _feed(tokens: list, h: _BlockParser) -> None:
-    """Run the _BlockParser handlers over :func:`_fast_tokens` output."""
+    """Run the _BlockParser handlers over :func:`_fast_tokens` output.
+
+    Only the attributes of _FAST_ATTR_TAGS are parsed (the handlers read no
+    others) into html.parser's ``(name, value)`` pairs: _SIMPLE_TAG matched
+    the raw text as _ATTR items, so one _FAST_ATTR ``findall`` reads all of
+    it, and it holds no `&` (charrefs bail), so values need no unescaping.
+    """
     h.handle_data(tokens[0])
     it = iter(tokens)
     next(it)
     for closing, name, attrs, selfclose, data in zip(it, it, it, it, it):
         if closing:
             h.handle_endtag(name)
-        elif selfclose:
-            h.handle_startendtag(
-                name, attrs if name in _FAST_ATTR_TAGS else ()
-            )
         else:
-            h.handle_starttag(name, attrs if name in _FAST_ATTR_TAGS else ())
+            attrs = [
+                (k.lower(), v[1:-1] if v[:1] in ('"', "'") else v or None)
+                for k, v in _FAST_ATTR.findall(attrs)
+            ] if name in _FAST_ATTR_TAGS else ()
+            if selfclose:
+                h.handle_startendtag(name, attrs)
+            else:
+                h.handle_starttag(name, attrs)
         if data:
             h.handle_data(data)
 
@@ -740,6 +712,29 @@ def _payload(html: bytes | None) -> tuple[str, object]:
     return "html", decoded
 
 
+def _run_handlers(
+    parser: _BlockParser, decoded: str, tokens: list | None
+) -> None:
+    """Run ``parser``'s handlers over one decoded HTML document: over its
+    :func:`_fast_tokens` output, or through html.parser where ``tokens``
+    is None. The results are left in ``parser``."""
+    parser.reset()  # HTMLParser internal state
+    parser._reset_doc()
+    if tokens is not None:
+        _feed(tokens, parser)
+    else:
+        try:
+            parser.feed(decoded)
+            parser.close()
+        except Exception:
+            # html.parser is tolerant, but guard the 100 TB run anyway:
+            # a pathological page yields whatever was flushed so far.
+            pass
+    parser._flush()
+    parser._finalize_link()
+    parser._finalize_meta()
+
+
 def parse_payload(
     html: bytes | None,
     lang: str | None,
@@ -763,22 +758,7 @@ def parse_payload(
         return "pdf", doc, [], _EMPTY_META, []
     if parser is None:
         parser = _BlockParser()
-    parser.reset()  # HTMLParser internal state
-    parser._reset_doc()
-    tokens = None if force_slow else _fast_tokens(doc)
-    if tokens is not None:
-        _feed(tokens, parser)
-    else:
-        try:
-            parser.feed(doc)
-            parser.close()
-        except Exception:
-            # html.parser is tolerant, but guard the 100 TB run anyway:
-            # a pathological page yields whatever was flushed so far.
-            pass
-    parser._flush()
-    parser._finalize_link()
-    parser._finalize_meta()
+    _run_handlers(parser, doc, None if force_slow else _fast_tokens(doc))
     return (
         "html", parser.blocks, parser.links, parser.meta_result(),
         parser.tables,
@@ -1088,8 +1068,9 @@ def extract_text_batch(
 ) -> tuple[list[str | None], list[pa.Array]]:
     """:func:`extract_batch`'s ``(langs, text_arrays)`` alone, from the
     text scan: an HTML page's blocks come from :func:`_text_blocks` over
-    its :func:`_fast_tokens`, or from :func:`parse_payload` where the
-    tokenizer bails; nothing else of the page is parsed."""
+    its :func:`_fast_tokens`, or from html.parser's run of the handlers
+    (:func:`_run_handlers`) where the tokenizer bails; nothing else of the
+    page is parsed, and nothing is decoded twice."""
     parser = None
     texts: list[str] = []
     link_chars: list[int] = []
@@ -1106,10 +1087,8 @@ def extract_text_batch(
                 blocks = _text_blocks(tokens)
             else:
                 parser = parser or _BlockParser()
-                blocks = [
-                    (b[2], b[3])
-                    for b in parse_payload(html, None, parser, True)[1]
-                ]
+                _run_handlers(parser, doc, None)
+                blocks = [(b[2], b[3]) for b in parser.blocks]
         if blocks:
             cols = tuple(zip(*blocks))
             texts += cols[0]

@@ -946,78 +946,6 @@ def scd2_intervals(spark: SparkSession, out_dir: str) -> DataFrame:
     return scd2_from_purchases(spark.read.parquet(f"{out_dir}/data"))
 
 
-# --- Spark 4 transformWithStateInPandas (typed-state API) ---------------------
-
-def protobuf_available() -> bool:
-    """transformWithStateInPandas speaks the typed-state protocol over
-    protobuf messages; the sandbox image lacks google.protobuf, so the
-    operator is ENV-BLOCKED here (verified: the TWS driver worker crashes
-    in StateMessage_pb2 on import). The operator below is complete and
-    its e2e test (tests/test_streaming.py) runs wherever protobuf
-    exists — the same gate discipline as the Iceberg/Avro jars."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_spend_tws(purchases: DataFrame) -> DataFrame:
-    """Per-user running purchase totals via the Spark 4 typed-state API
-    (transformWithStateInPandas): a StatefulProcessor holding ONE
-    ValueState row per user — the modern face of host_running_counts'
-    applyInPandasWithState, with named state variables, an init/close
-    lifecycle, and (unused here) timers. Each micro-batch emits the
-    running (n_purch, spend_c) for every user it touched; the LAST
-    emission per user equals the batch aggregate no matter how the
-    source split batches.
-
-    State is one 2-long row per user in the checkpointed store (RocksDB
-    provider required) — bounded by user cardinality, shuffled on the
-    same key the aggregation would need anyway. Input must be
-    pre-projected to (user_id, v_c) cents so the state math is exact
-    integers."""
-    import pandas as pd  # noqa: PLC0415 (executor-side import)
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    class SpendProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            st = StructType([
-                StructField("n", LongType()),
-                StructField("cents", LongType()),
-            ])
-            self._state = handle.getValueState("tot", st)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n, cents = self._state.get()
-            else:
-                n, cents = 0, 0
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["v_c"].sum())
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_purch": [n], "spend_c": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return purchases.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SpendProcessor(),
-        outputStructType="user_id long, n_purch long, spend_c long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 class _ReservoirCommitter(_BatchCommitter):
     """foreachBatch function: reduce the micro-batch to its ≤k-row A-ES
     candidate reservoir (queries_pipeline.reservoir_candidates) and

@@ -56,6 +56,20 @@ TRICKY = [
     b"<a:b href='x'>ns link</a:b><a href='/y'>real link</a>",
     b"<P=>odd</P=><p>the data of it</p>",
     b"<p_u>under</p_u><p>the data of it</p>",
+    # a quote inside a bare attribute value: html.parser's value runs to
+    # the next whitespace or `>`, so the tag ends at the first `>` and the
+    # rest is data; the fast path must bail, not end the tag at `">`
+    b'<p class=x"y>q">para</p>',
+    b"<div title=a'b>c'>text</div>",
+    b"<img alt=it's>q'>",
+    b"<p title='x>the data of it</p>",  # a bare value may not open a quote
+    # a bare value keeps a trailing `/`: no self-close, and a script start
+    # tag so written opens its CDATA element
+    b"<div>a <script src=a.js/><p>x</p></script> b</div>",
+    b"<a href=x/ >slash kept</a><a href=y />self-close</a>",
+    b"<p a=b=c>eq in value</p><p a==b>eq run</p><p a= >empty</p>",
+    b"<p a=`b`>backtick</p><p a=\"x\"b=y>glued</p><p/ a>slash sep</p>",
+    b"<style media=x\"y>p{}</style><p>the data of it</p>",
 ]
 
 
@@ -104,7 +118,56 @@ _CHUNK = st.sampled_from(
      '<meta name="description" content="d d">', "<meta content=c>",
      '<meta property="og:title" content="o">', "<link rel=canonical href=/c>",
      '<link rel="alternate canonical" href=" /c ">', "<link rel=canonical>",
-     "<meta name=description>", "<svg>", "</svg>"]
+     "<meta name=description>", "<svg>", "</svg>",
+     # quote, slash and `=` attribute shapes, on script/style tags too
+     '<p class=x"y>', "<div title=a'b>", "<img alt=it's>", "q'>", 'q">',
+     "<a href=/x/>", "<a href=x/ >", "<a href=x />", "<p a=b=c>",
+     "<p a==b>", "<p a= >", "<p a=`b`>", '<p a="x"b=y>', "<p/ a>",
+     '<meta name=description content=x"y>', "<script src=a.js/>",
+     "<script src='a.js'>", "<script type=text/js>", '<style media=x"y>',
+     "<style a=b/>", "<SCRIPT SRC=/s.js>"]
+)
+
+
+_TAG_NAME = st.sampled_from(
+    ["a", "A", "p", "div", "img", "br", "meta", "link", "script", "style",
+     "Script", "title"]
+)
+_ATTR_NAME = st.sampled_from(
+    ["href", "HREF", "class", "rel", "name", "content", "property", "x-y",
+     "d:n", "_u", "1n", "'q", "a\"b"]
+)
+# bare values from characters html.parser's bare value does and does not
+# share with the fast grammar's; quoted values with either quote inside
+_BARE = st.text(alphabet="ab/'\"=` ", max_size=4)
+_VALUE = st.one_of(
+    st.sampled_from(["x", "/x/", "a.js", "description", "canonical"]),
+    st.sampled_from(['x"y', "a'b", "it's", "x/", "b=c", "`b`", "a<b"]),
+    _BARE,
+    _BARE.map(lambda v: f'"{v}"'),
+    _BARE.map(lambda v: f"'{v}'"),
+)
+_ATTR_ITEM = st.builds(
+    lambda name, eqs, value, lead: lead + name + (eqs + value if eqs else ""),
+    _ATTR_NAME,
+    st.sampled_from(["", "=", "==", " = ", "= ", " ="]),
+    _VALUE,
+    st.sampled_from([" ", " ", "  ", "\t", "\n", "/", "", " /"]),
+)
+# a start tag from random names, `=` runs and quoted or bare values, and
+# the text after it, which may close a quote the tag left open
+TAG = st.builds(
+    lambda name, attrs, tail, text: "<" + name + "".join(attrs) + tail + text,
+    _TAG_NAME,
+    st.lists(_ATTR_ITEM, max_size=3),
+    st.sampled_from([">", ">", "/>", " />", " / >", " >", "", "\t>"]),
+    st.sampled_from(["", "the data of it", 'q">', "c'>", '" >', "' >"]),
+)
+TAG_SOUP = st.lists(
+    st.one_of(TAG, st.sampled_from(
+        ["</p>", "</a>", "</script>", "</style>", "</div>", ">", "/"]
+    )),
+    max_size=8,
 )
 
 
@@ -112,6 +175,13 @@ _CHUNK = st.sampled_from(
 @given(st.lists(_CHUNK, max_size=30))
 def test_hypothesis_soup_agrees(chunks):
     html = "".join(chunks).encode("utf-8")
+    assert _sig(html, "en") == _sig_slow(html, "en"), html
+
+
+@settings(max_examples=400, deadline=None)
+@given(TAG_SOUP)
+def test_hypothesis_tags_agree(parts):
+    html = "".join(parts).encode("utf-8")
     assert _sig(html, "en") == _sig_slow(html, "en"), html
 
 
@@ -125,4 +195,9 @@ def test_fast_path_actually_taken():
     ) is not None
     assert _fast_tokens(
         "<style>p{}</style><script>1 &lt; 2</script>".replace("&lt;", "x")
+    ) is not None
+    # a bare value ending in `/` is one html.parser keeps whole
+    assert _fast_tokens("<a href=x/>a link</a>") is not None
+    assert _fast_tokens(
+        "<div>a <script src=a.js/><p>x</p></script> b</div>"
     ) is not None

@@ -880,81 +880,6 @@ def test_incremental_scd2_matches_batch_and_replays(spark, tmp_path):
     assert spark.read.parquet(f"{out}/data").count() == rows_before
 
 
-def test_transform_with_state_user_spend(spark, tmp_path):
-    """Spark 4 typed-state API e2e: running per-user spend through
-    transformWithStateInPandas over a 3-batch availableNow drain; the
-    last emission per user equals the batch aggregate. ENV-GATED on
-    google.protobuf (the TWS state protocol) — the sandbox image lacks
-    it, so this skips there and runs anywhere protobuf exists."""
-    import pytest as _pytest
-
-    from ocr_spark.streaming.incremental import (
-        protobuf_available,
-        user_spend_tws,
-    )
-
-    if not protobuf_available():
-        _pytest.skip("google.protobuf absent: transformWithState env-blocked")
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src")
-    ev.repartition(3).write.parquet(src)
-    out = str(tmp_path / "out")
-
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.expr("CAST(round(value*100,0) AS BIGINT)").alias("v_c"),
-        )
-    )
-
-    def commit(bdf, bid):
-        bdf.write.mode("overwrite").parquet(f"{out}/batch_id={bid}")
-
-    q = (
-        user_spend_tws(sdf)
-        .writeStream.foreachBatch(commit)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    r = spark.read.parquet(out)
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
-    got = {
-        (x.user_id, x.n_purch, x.spend_c)
-        for x in r.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("user_id", "n_purch", "spend_c")
-        .collect()
-    }
-    exp = {
-        (e.user_id, e.n, e.c)
-        for e in ev.filter("event_type='purchase'")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.expr("CAST(round(value*100,0) AS BIGINT)")).alias("c"),
-        )
-        .collect()
-    }
-    assert got == exp
-    assert spark.read.parquet(out).select("batch_id").distinct().count() >= 2
-
-
 # --- streaming weighted reservoir ---------------------------------------------
 
 

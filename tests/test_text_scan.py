@@ -14,7 +14,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ocr_spark import spec
+from ocr_spark import goldenref, spec
 from ocr_spark.html_blocks import (
     _fast_tokens,
     _payload,
@@ -23,7 +23,7 @@ from ocr_spark.html_blocks import (
     extract_text_batch,
     parse_payload,
 )
-from tests.test_fast_tokenizer import _CHUNK, TRICKY
+from tests.test_fast_tokenizer import _CHUNK, TAG, TAG_SOUP, TRICKY
 
 
 def _scan(html: bytes | None) -> list[tuple[str, int]] | None:
@@ -90,6 +90,12 @@ def test_hypothesis_soup_agrees(chunks):
     _agrees("".join(chunks).encode("utf-8"))
 
 
+@settings(max_examples=400, deadline=None)
+@given(TAG_SOUP)
+def test_hypothesis_tags_agree(parts):
+    _agrees("".join(parts).encode("utf-8"))
+
+
 def test_mainline_shapes_take_the_scan():
     """Guard against the tokenizer silently bailing on the shapes the
     extraction mostly sees: ``gen.bench_pages``' template, a
@@ -143,3 +149,45 @@ def test_text_batch_equals_full_batch():
                 assert g.equals(w), (langid, lo)
     got = extract_text_batch([], [])
     assert got[0] == [] and all(len(a) == 0 for a in got[1])
+
+
+_PARA = "the data of the engine is on a table and the scan of it is here " * 3
+
+
+def _golden_agrees(pages: list[str]) -> list[str]:
+    """Both batch extractions give ``goldenref.extract_document``'s text
+    for every page; returns that text."""
+    htmls = [p.encode("utf-8") for p in pages]
+    langs = ["en"] * len(htmls)
+    want = [
+        goldenref.extract_document("u", h, "en")["extracted_text"]
+        for h in htmls
+    ]
+    assert extract_text_batch(htmls, langs)[1][0].to_pylist() == want
+    assert extract_batch(htmls, langs)[1][0].to_pylist() == want
+    return want
+
+
+def test_attribute_grammar_pages_match_goldenref():
+    """Tags whose attributes html.parser reads past a quote, `=` or `/`,
+    each followed by kept text, so a tag that ends in the wrong place
+    shows in the extracted text."""
+    texts = _golden_agrees([
+        f'<p class=x"y>q">{_PARA}</p>',
+        f"<div title=a'b>c'>{_PARA}</div>",
+        f"<p><img alt=it's>q'>{_PARA}</p>",
+        f"<p a=b=c>{_PARA}</p><p a=`b`>{_PARA}</p>",
+        f"<p><a href=x/>a link</a> {_PARA}</p>",
+        f"<div>{_PARA}<script src=a.js/><p>x</p></script> {_PARA}</div>",
+    ])
+    assert all(texts)
+    assert texts[0].startswith('q">') and texts[1].startswith("c'>")
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(
+    st.one_of(TAG, st.sampled_from([_PARA, "</p>", "</a>", "</script>"])),
+    max_size=10,
+))
+def test_hypothesis_tags_match_goldenref(parts):
+    _golden_agrees(["".join(parts)])
