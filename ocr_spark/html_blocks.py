@@ -4,21 +4,21 @@ This is the hot Python path of the whole engine: it runs inside
 ``mapInArrow`` / scalar-iter ``pandas_udf`` workers over Arrow batches
 (SURVEY.md §2 ops 11, 57, 60). Two layers:
 
-- the parse, one document at a time. One fast tokenizer
-  (:func:`_fast_tokens`) turns simple markup into the tags and text
-  html.parser would see, or bails to html.parser. Its tag grammar is one
-  attribute pattern, a strict subset of html.parser's, and a tag of any
-  other shape bails. Its tokens keep each tag's raw attribute text and
-  feed one of two consumers, chosen by the product:
+- the parse, one document at a time. :func:`_tokens` turns a decoded page
+  into one token stream, ``[data, (closing, name, attrs, selfclose,
+  data)*]``, from one of two tokenizers: the fast one
+  (:func:`_fast_tokens`) on simple markup, whose tag grammar is one
+  attribute pattern, a strict subset of html.parser's, and html.parser
+  (:class:`_TokenRecorder`) on any page the fast one bails on. Each
+  product has one consumer of the stream:
   - the full product (blocks, outlinks, metadata, table cells) runs the
-    ``_BlockParser`` handlers (:func:`_feed`, or html.parser on a bail),
-    keeping ``(tag, depth, text, link_chars)`` per block (plus a bbox on
-    PDF payloads); :func:`_feed` parses the attributes of the tags the
-    handlers read them from (``a``, ``meta``, ``link``) and no others;
-  - the text product runs the stackless text scan
-    (:func:`_text_blocks`), keeping only ``(text, link_chars)`` per block
-    and parsing no attribute (on a bail, those two fields of the
-    handlers' blocks under html.parser);
+    ``_BlockParser`` handlers (:func:`_run_handlers`), keeping ``(tag,
+    depth, text, link_chars)`` per block (plus a bbox on PDF payloads);
+    it parses the raw attribute text of the fast tokens only on the tags
+    the handlers read attributes from (``a``, ``meta``, ``link``);
+  - the text product runs the stackless text scan (:func:`_text_blocks`),
+    keeping only ``(text, link_chars)`` per block and parsing no
+    attribute;
 - one batch kernel does the rest over the batch's flat block-text array:
   the SPEC.md §2 features (:func:`block_features`: Arrow string kernels,
   the stopword predicate once per distinct token, language recovery of
@@ -40,8 +40,8 @@ together. Do not import goldenref here (and vice versa).
 
 Scale notes (100 TB design point): per-document parsing is inherently
 sequential Python, but it is embarrassingly parallel across documents and
-amortized per Arrow batch; parser instances are recycled via
-``HTMLParser.reset()`` to avoid per-doc allocation churn. MAX_BLOCKS caps
+amortized per Arrow batch. Each document gets its own tokenizer and
+handler state; no parser object outlives its page. MAX_BLOCKS caps
 pathological documents so a single page can never blow up a task.
 """
 
@@ -160,8 +160,9 @@ def _norm_meta_href(value: str | None) -> str | None:
     return v or None
 
 
-class _BlockParser(HTMLParser):
-    """HTMLParser subclass implementing the SPEC.md §1 event rules."""
+class _BlockParser:
+    """The SPEC.md §1, §5, §6 and §7 event rules over one document's
+    tokens (see :func:`_run_handlers`)."""
 
     __slots__ = (
         "stack",
@@ -187,10 +188,6 @@ class _BlockParser(HTMLParser):
     )
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self._reset_doc()
-
-    def _reset_doc(self) -> None:
         self.stack: list[str] = []
         self.skip_depth = 0
         self.anchor_depth = 0
@@ -470,15 +467,18 @@ def _pdf_blocks(obj: dict) -> list[tuple]:
     ]
 
 
-# --- fast-path tokenizer ----------------------------------------------------
-# A regex tokenizer for "simple" markup: no entities, no comments/doctype/PI,
+# --- tokenizers --------------------------------------------------------------
+# One token stream from two tokenizers (:func:`_tokens`). The fast one is a
+# regex tokenizer for "simple" markup: no entities, no comments/doctype/PI,
 # every `<` opening a plain tag. It turns a document into the tokens
-# html.parser would produce, or answers None (bail to html.parser) on
-# anything it cannot prove it tokenizes identically — the differential tests
-# (fast vs forced-slow over the adversarial corpus and hypothesis-generated
-# soup and tags) hold the two tokenizations together. Its tokens feed two
-# consumers: the _BlockParser handlers (:func:`_feed`, the full product) and
-# the stackless text scan (:func:`_text_blocks`, the text product).
+# html.parser would produce, or answers None on anything it cannot prove it
+# tokenizes identically, and html.parser's own events are recorded into the
+# same stream instead (:class:`_TokenRecorder`). The differential tests (fast
+# vs forced-slow over the adversarial corpus and hypothesis-generated soup
+# and tags) hold the two tokenizations together. The stream feeds two
+# consumers, neither of which knows which tokenizer made it: the
+# _BlockParser handlers (:func:`_run_handlers`, the full product) and the
+# stackless text scan (:func:`_text_blocks`, the text product).
 #
 # The tag grammar is one attribute pattern, _ATTR, a strict SUBSET of
 # html.parser's attrfind_tolerant: a name starting with a letter, then
@@ -512,7 +512,7 @@ _SIMPLE_TAG = re.compile(
 )
 
 # tags whose attributes carry frozen-SPEC state (§5 href, §6 metadata): the
-# only attributes :func:`_feed` parses
+# only fast-token attributes :func:`_run_handlers` parses
 _FAST_ATTR_TAGS = frozenset(("a", "meta", "link"))
 
 # html.parser gives only <script>/<style> CDATA treatment. A start tag of
@@ -565,7 +565,7 @@ def _fast_tokens(decoded: str) -> list | None:
     The tokens are one flat list, ``[data, (closing, name, attrs,
     selfclose, data)*]``: the document's leading text, then per tag its
     end-tag mark (``"/"`` or None), lowercase name, raw attribute text
-    (parsed only by :func:`_feed`) and self-closing mark (``"/"`` or
+    (parsed only by :func:`_run_handlers`) and self-closing mark (``"/"`` or
     ``""``) and the text that follows it up to the next tag. A
     ``<script>``/``<style>`` element's content is the data after its start
     tag, followed by its end tag. No handler event is emitted here, so a
@@ -610,36 +610,100 @@ def _fast_tokens(decoded: str) -> list | None:
     return tokens
 
 
-def _feed(tokens: list, h: _BlockParser) -> None:
-    """Run the _BlockParser handlers over :func:`_fast_tokens` output.
+class _TokenRecorder(HTMLParser):
+    """html.parser as the fallback tokenizer: its start, start-end, end
+    and data events recorded as :func:`_fast_tokens`' flat list, each
+    tag's attributes already parsed into ``(name, value)`` pairs.
 
-    Only the attributes of _FAST_ATTR_TAGS are parsed (the handlers read no
-    others) into html.parser's ``(name, value)`` pairs: _SIMPLE_TAG matched
-    the raw text as _ATTR items, so one _FAST_ATTR ``findall`` reads all of
-    it, and it holds no `&` (charrefs bail), so values need no unescaping.
+    html.parser may report two data events in a row (around a comment, a
+    PI, a CDATA section, a bogus `<` or `</>`). They stay two pieces,
+    because SPEC.md counts a piece's linked characters on its own: an end
+    tag with an empty name, which no consumer acts on, goes between them.
     """
+
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self.tokens: list = [""]
+
+    def handle_starttag(self, tag: str, attrs) -> None:
+        self.tokens += (None, tag, attrs, "", "")
+
+    def handle_startendtag(self, tag: str, attrs) -> None:
+        self.tokens += (None, tag, attrs, "/", "")
+
+    def handle_endtag(self, tag: str) -> None:
+        self.tokens += ("/", tag, "", "", "")
+
+    def handle_data(self, data: str) -> None:
+        if data:
+            if self.tokens[-1]:
+                self.tokens += ("/", "", "", "", data)
+            else:
+                self.tokens[-1] = data
+
+
+def _tokens(decoded: str, force_slow: bool = False) -> list:
+    """A decoded HTML document's token stream: :func:`_fast_tokens`', or
+    html.parser's (:class:`_TokenRecorder`) where the fast tokenizer bails
+    or ``force_slow`` is set (the differential tests' reference)."""
+    tokens = None if force_slow else _fast_tokens(decoded)
+    if tokens is not None:
+        return tokens
+    rec = _TokenRecorder()
+    try:
+        rec.feed(decoded)
+        rec.close()
+    except Exception:
+        # html.parser is tolerant, but some malformed markup still raises
+        # (an unknown marked-section keyword, for one). Guard the 100 TB
+        # run: a pathological page yields the tokens recorded so far
+        # rather than failing its task.
+        pass
+    return rec.tokens
+
+
+def _run_handlers(tokens: list) -> _BlockParser:
+    """Run the _BlockParser handlers over one document's :func:`_tokens`;
+    the results are left in the returned parser.
+
+    A fast token holds its raw attribute text (a ``str``): only that of
+    _FAST_ATTR_TAGS is parsed (the handlers read no others) into
+    html.parser's ``(name, value)`` pairs. _SIMPLE_TAG matched the raw text
+    as _ATTR items, so one _FAST_ATTR ``findall`` reads all of it, and it
+    holds no `&` (charrefs bail), so values need no unescaping.
+    """
+    h = _BlockParser()
     h.handle_data(tokens[0])
     it = iter(tokens)
     next(it)
     for closing, name, attrs, selfclose, data in zip(it, it, it, it, it):
         if closing:
-            h.handle_endtag(name)
+            # an empty name only parts two data pieces; handing it on would
+            # search the whole element stack for it, O(depth) per comment
+            if name:
+                h.handle_endtag(name)
         else:
-            attrs = [
-                (k.lower(), v[1:-1] if v[:1] in ('"', "'") else v or None)
-                for k, v in _FAST_ATTR.findall(attrs)
-            ] if name in _FAST_ATTR_TAGS else ()
+            if attrs.__class__ is str:
+                attrs = [
+                    (k.lower(),
+                     v[1:-1] if v[:1] in ('"', "'") else v or None)
+                    for k, v in _FAST_ATTR.findall(attrs)
+                ] if name in _FAST_ATTR_TAGS else ()
             if selfclose:
                 h.handle_startendtag(name, attrs)
             else:
                 h.handle_starttag(name, attrs)
         if data:
             h.handle_data(data)
+    h._flush()
+    h._finalize_link()
+    h._finalize_meta()
+    return h
 
 
 def _text_blocks(tokens: list) -> list[tuple[str, int]]:
     """The ``(text, link_chars)`` of every block of a document, from its
-    :func:`_fast_tokens` — what the _BlockParser handlers would give for
+    :func:`_tokens` — what the _BlockParser handlers would give for
     those two fields, without the element stack, block tags and depths,
     outlinks, title, meta or table cells.
 
@@ -712,34 +776,8 @@ def _payload(html: bytes | None) -> tuple[str, object]:
     return "html", decoded
 
 
-def _run_handlers(
-    parser: _BlockParser, decoded: str, tokens: list | None
-) -> None:
-    """Run ``parser``'s handlers over one decoded HTML document: over its
-    :func:`_fast_tokens` output, or through html.parser where ``tokens``
-    is None. The results are left in ``parser``."""
-    parser.reset()  # HTMLParser internal state
-    parser._reset_doc()
-    if tokens is not None:
-        _feed(tokens, parser)
-    else:
-        try:
-            parser.feed(decoded)
-            parser.close()
-        except Exception:
-            # html.parser is tolerant, but guard the 100 TB run anyway:
-            # a pathological page yields whatever was flushed so far.
-            pass
-    parser._flush()
-    parser._finalize_link()
-    parser._finalize_meta()
-
-
 def parse_payload(
-    html: bytes | None,
-    lang: str | None,
-    parser: _BlockParser | None = None,
-    force_slow: bool = False,
+    html: bytes | None, lang: str | None, force_slow: bool = False
 ) -> tuple[str, list[tuple], list[dict], dict, list[dict]]:
     """Parse one page payload → (kind, blocks, links, meta, tables).
     SPEC.md §0 dispatch; meta per §6, tables per §7 (all-empty for
@@ -748,21 +786,15 @@ def parse_payload(
     position. The parse does not depend on ``lang``: the language-keyed
     features are computed per batch by :func:`block_features`.
 
-    ``force_slow`` disables the fast-path tokenizer (used by the
-    differential tests that prove the two tokenizers agree).
+    ``force_slow`` tokenizes with html.parser alone (see :func:`_tokens`).
     """
     kind, doc = _payload(html)
     if kind == "empty":
         return "empty", [], [], _EMPTY_META, []
     if kind == "pdf":
         return "pdf", doc, [], _EMPTY_META, []
-    if parser is None:
-        parser = _BlockParser()
-    _run_handlers(parser, doc, None if force_slow else _fast_tokens(doc))
-    return (
-        "html", parser.blocks, parser.links, parser.meta_result(),
-        parser.tables,
-    )
+    h = _run_handlers(_tokens(doc, force_slow))
+    return "html", h.blocks, h.links, h.meta_result(), h.tables
 
 
 class _ParsedBatch:
@@ -777,7 +809,6 @@ class _ParsedBatch:
     """
 
     def __init__(self, htmls: list[bytes | None]) -> None:
-        parser = _BlockParser()
         self.kinds: list[str] = []
         offsets = [0]
         self.tags: list[str] = []
@@ -794,7 +825,7 @@ class _ParsedBatch:
             f: [] for f in ("table_id", "row_id", "cell_id", "header", "text")
         }
         for html in htmls:
-            kind, blocks, links, meta, tabs = parse_payload(html, None, parser)
+            kind, blocks, links, meta, tabs = parse_payload(html, None)
             self.kinds.append(kind)
             if blocks:
                 # tag, depth, text, link_chars[, bbox] columns
@@ -1068,10 +1099,8 @@ def extract_text_batch(
 ) -> tuple[list[str | None], list[pa.Array]]:
     """:func:`extract_batch`'s ``(langs, text_arrays)`` alone, from the
     text scan: an HTML page's blocks come from :func:`_text_blocks` over
-    its :func:`_fast_tokens`, or from html.parser's run of the handlers
-    (:func:`_run_handlers`) where the tokenizer bails; nothing else of the
-    page is parsed, and nothing is decoded twice."""
-    parser = None
+    its :func:`_tokens`; nothing else of the page is parsed, and nothing
+    is decoded twice."""
     texts: list[str] = []
     link_chars: list[int] = []
     offsets = [0]
@@ -1082,13 +1111,7 @@ def extract_text_batch(
         if kind == "pdf":
             blocks = [(b[2], b[3]) for b in doc]
         elif kind == "html":
-            tokens = _fast_tokens(doc)
-            if tokens is not None:
-                blocks = _text_blocks(tokens)
-            else:
-                parser = parser or _BlockParser()
-                _run_handlers(parser, doc, None)
-                blocks = [(b[2], b[3]) for b in parser.blocks]
+            blocks = _text_blocks(_tokens(doc))
         if blocks:
             cols = tuple(zip(*blocks))
             texts += cols[0]

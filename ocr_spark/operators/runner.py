@@ -156,13 +156,7 @@ class Manifest:
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Op 1: read a pages table — an ``iceberg:<catalog.db.tbl>`` location
-    when the runtime jar is present (ocr_spark.tables), else parquet with
-    the manifest layer above standing in (this sandbox: no jar)."""
-    from ocr_spark.tables import ICEBERG_PREFIX, read_table
-
-    if path.startswith(ICEBERG_PREFIX):
-        return read_table(spark, path)
+    """Op 1: read a parquet pages table with its spec'd schema."""
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
@@ -307,10 +301,9 @@ def run_extract(
     """Run (or resume) the extraction job over ``pages`` into ``out_dir``.
 
     ``data_location`` overrides where the extracted DATA rows go (default
-    ``<out_dir>/data``): pass an ``iceberg:<catalog.db.tbl>`` location to
-    write/read-back through the Iceberg runtime (ocr_spark.tables) while
-    manifests/lineage stay in ``out_dir`` — the layout the design point
-    uses the day a runtime jar is present.
+    ``<out_dir>/data``): pass a ``snapshot:<dir>`` location to
+    write/read-back through the snapshot tables (ocr_spark.tables) while
+    manifests/lineage stay in ``out_dir``.
 
     ``links_location`` (optional) ALSO writes the SPEC §5 outlink product
     (url, warc_ts, part_id, link_id, href, anchor) per batch, from the SAME
@@ -400,8 +393,8 @@ def run_extract(
                     sinks.append((links_location, outlink_rows(rows)))
                 if meta_location is not None:
                     sinks.append((meta_location, metadata_rows(rows)))
-                # dynamic overwrite (Iceberg overwritePartitions when the
-                # location is iceberg:): replaces exactly the part_id=N
+                # dynamic overwrite (overwrite_matching when the location
+                # is snapshot:): replaces exactly the part_id=N
                 # dirs in this batch — idempotent re-run after a crash, no
                 # duplicate rows
                 for loc, product in sinks:

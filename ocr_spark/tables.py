@@ -1,19 +1,14 @@
-"""Table-format layer: real Iceberg when the runtime jar is on the
-classpath, partitioned-parquet + JSON manifest (ocr_spark.operators.runner)
-otherwise (SURVEY.md §0 sandbox note, §2 ops 1/4).
+"""Table-format layer (SURVEY.md §0 sandbox note, §2 ops 1/4).
 
-Locations are strings: ``iceberg:<catalog>.<db>.<table>`` selects the
-Iceberg path (``spark.read.format("iceberg")`` / ``df.writeTo(...)``);
-anything else is a parquet directory handled by the fallback. The fallback
-is the only path exercisable in this sandbox (``/opt/spark/jars`` has no
-iceberg-spark-runtime — verified; ``iceberg_available`` returns False), so
-the Iceberg branch is covered by a unit test that skips cleanly when the
-runtime is absent and runs for real the moment the jar appears.
+Locations are strings: ``snapshot:<dir>`` selects the homegrown snapshot
+tables (ocr_spark.tables_snapshot: atomic commits, time travel, idempotent
+per-batch overwrite); anything else is a partitioned-parquet directory,
+committed per part by the JSON manifest of ocr_spark.operators.runner.
 
-At the design point the pages table is an Iceberg table partitioned by
-``bucket(N, url)``; part_id == the bucket transform, so the runner's
-per-batch part filter prunes natively and the staging pass in
-runner.stage_input becomes unnecessary (see its docstring).
+At the design point the pages table is partitioned by ``bucket(N, url)``;
+part_id == the bucket transform, so the runner's per-batch part filter
+prunes natively and the staging pass in runner.stage_input becomes
+unnecessary (see its docstring).
 """
 
 from __future__ import annotations
@@ -21,33 +16,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-ICEBERG_PREFIX = "iceberg:"
 # Homegrown snapshot tables (ocr_spark.tables_snapshot): the table-format
-# semantics — atomic commits, time travel, idempotent per-batch overwrite —
-# without the env-blocked Iceberg jar. location = "snapshot:<dir>".
+# semantics — atomic commits, time travel, idempotent per-batch overwrite.
+# location = "snapshot:<dir>".
 SNAPSHOT_PREFIX = "snapshot:"
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True iff the Iceberg Spark runtime is on the JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def read_table(
     spark: SparkSession, location: str, schema=None
 ) -> DataFrame:
-    """Op 1: load a table from an ``iceberg:`` / ``snapshot:`` location
-    or a parquet path."""
-    if location.startswith(ICEBERG_PREFIX):
-        return spark.read.format("iceberg").load(
-            location[len(ICEBERG_PREFIX):]
-        )
+    """Op 1: load a table from a ``snapshot:`` location or a parquet
+    path."""
     if location.startswith(SNAPSHOT_PREFIX):
         from ocr_spark import tables_snapshot
 
@@ -66,14 +45,12 @@ def write_table(
     mode: str = "append",
     partition_by: tuple[str, ...] | None = None,
 ) -> None:
-    """Op 4: write to an ``iceberg:`` / ``snapshot:`` table or a parquet
-    directory.
+    """Op 4: write to a ``snapshot:`` table or a parquet directory.
 
-    Modes: ``append``; ``overwrite_partitions`` (Iceberg
-    ``overwritePartitions()`` / parquet dynamic partition overwrite /
-    snapshot-table overwrite_matching on the first partition column — the
-    idempotent per-partition commit the runner relies on); ``create``
-    (``createOrReplace()`` / full overwrite).
+    Modes: ``append``; ``overwrite_partitions`` (parquet dynamic partition
+    overwrite / snapshot-table overwrite_matching on the first partition
+    column — the idempotent per-partition commit the runner relies on);
+    ``create`` (full overwrite).
     """
     if location.startswith(SNAPSHOT_PREFIX):
         from ocr_spark import tables_snapshot as snap
@@ -94,21 +71,6 @@ def write_table(
                     " partition_by"
                 )
             snap.overwrite_matching(spark, df, root, partition_by[0])
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
-        return
-    if location.startswith(ICEBERG_PREFIX):
-        writer = df.writeTo(location[len(ICEBERG_PREFIX):])
-        if mode == "append":
-            writer.append()
-        elif mode == "overwrite_partitions":
-            writer.overwritePartitions()
-        elif mode == "create":
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            writer.createOrReplace()
         else:
             raise ValueError(f"unknown mode {mode!r}")
         return
@@ -150,11 +112,10 @@ def write_bucketed(
     PLANS.md "bucketed co-located join"; regression-locked in
     tests/test_tables.py.
 
-    On the Iceberg branch the equivalent is a ``bucket(N, col)`` partition
-    transform at CREATE time (write_table(..., mode="create") with a
-    transformed partition column) plus storage-partitioned joins; this
-    helper covers the sandbox-exercisable parquet/metastore path, which is
-    also what `spark.table` resolves everywhere."""
+    A table format with partition transforms would get the same from a
+    ``bucket(N, col)`` transform at CREATE time plus storage-partitioned
+    joins; this helper covers the parquet/metastore path, which is also
+    what `spark.table` resolves everywhere."""
     # repartition onto the bucket key first: one file per bucket instead
     # of tasks × buckets small files (file-count hygiene at scale). With
     # the default spark.sql.legacy.bucketedTableScanOutputOrdering=false

@@ -1,12 +1,11 @@
 """Snapshot table layer: Iceberg-style versioned tables over parquet.
 
-The sandbox has no iceberg-spark-runtime jar (tables.py's ``iceberg:``
-branch stays env-blocked), but the SEMANTICS the north rule needs from a
-table format — atomic commits, snapshot-isolated readers, time travel,
-rollback, data-identical compaction, snapshot expiry — are format-level,
-not jar-level. This module implements them from scratch over immutable
-parquet data files + JSON snapshot manifests, the same recipe Iceberg
-uses (a table IS a pointer to a manifest listing immutable files):
+The SEMANTICS the north rule needs from a table format — atomic commits,
+snapshot-isolated readers, time travel, rollback, data-identical
+compaction, snapshot expiry — are format-level. This module implements
+them from scratch over immutable parquet data files + JSON snapshot
+manifests, the same recipe Iceberg uses (a table IS a pointer to a
+manifest listing immutable files):
 
     <root>/data/<version>-<seq>-part-*.parquet   immutable data files
     <root>/snapshots/v<NNNNNNNN>.json            {version, parent, op,

@@ -30,7 +30,7 @@ With no ``pages_location`` the job generates ``n_pages`` deterministic
 synthetic pages (ocr_spark.gen.corpus_pages — a diversity-controlled
 crawl with injected exact/near dups, quality rejects and benchmark
 contamination; no external data); otherwise it reads the given
-parquet/``iceberg:`` pages table. Documents are keyed by
+parquet pages table. Documents are keyed by
 ``xxhash64(url, warc_ts)`` and stage decisions are md5/integer-exact, so
 the kept set is identical on every rerun, partition count and cluster
 size. Prints one JSON line: per-stage funnel counts, wall/stage seconds,

@@ -7,12 +7,11 @@ Usage (the launch mode the north_rule mandates)::
         scripts/extract_job.py <pages_location> <out_dir> <run_id> \\
         [num_parts] [parts_per_batch] [data_location] [--links] [--meta]
 
-``pages_location`` is a parquet directory, an ``iceberg:<catalog.db.tbl>``
-location, or a ``snapshot:<dir>`` versioned table (ocr_spark.tables);
-``data_location`` (optional) sends the extracted DATA rows somewhere other
-than ``<out_dir>/data`` — e.g. an ``iceberg:`` table or a ``snapshot:``
-table (atomic per-batch commits, time travel, idempotent re-runs via
-overwrite_matching — ocr_spark.tables_snapshot) — while the manifest (one
+``pages_location`` is a parquet directory; ``data_location`` (optional)
+sends the extracted DATA rows somewhere other than ``<out_dir>/data`` —
+e.g. a ``snapshot:<dir>`` versioned table (ocr_spark.tables: atomic
+per-batch commits, time travel, idempotent re-runs via overwrite_matching
+— ocr_spark.tables_snapshot) — while the manifest (one
 commit record per part, which is also the part's lineage row) stays in
 out_dir. The job is idempotent per (out_dir): a killed run resumes at
 partition granularity from the checkpoint manifest, and a completed

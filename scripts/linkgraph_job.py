@@ -10,7 +10,7 @@ Usage (same launch mode as extract_job.py)::
 With no ``pages_location`` the job generates ``n_pages`` deterministic
 multi-host synthetic pages (ocr_spark.gen.web_pages — cross-host anchors,
 a hot host, discard-scheme noise; no external data); otherwise it reads
-the given parquet/``iceberg:`` pages table.
+the given parquet pages table.
 
 Products (all parquet under <out_dir>):
   links/  — (url, warc_ts, part_id, link_id, href, anchor), the WAT-style

@@ -18,9 +18,8 @@ With a ``warc_dir`` it ingests existing archives (plain ``.warc`` or
 member-framed ``.warc.gz``) and skips the round-trip check.
 
 Output: ``<out_dir>/pages`` in the engine's pages-table shape
-(url, warc_ts, html, text=NULL, lang=NULL) via tables.write_table — an
-``iceberg:`` location works the day a runtime jar exists. Prints one JSON
-line with stage seconds and row counts.
+(url, warc_ts, html, text=NULL, lang=NULL) via tables.write_table. Prints
+one JSON line with stage seconds and row counts.
 
 Scale: ingest is shuffle-free — binaryFile assigns whole archive files to
 tasks and the record splitter is one narrow mapInArrow hop (sources/warc).

@@ -70,6 +70,12 @@ TRICKY = [
     b"<p a=b=c>eq in value</p><p a==b>eq run</p><p a= >empty</p>",
     b"<p a=`b`>backtick</p><p a=\"x\"b=y>glued</p><p/ a>slash sep</p>",
     b"<style media=x\"y>p{}</style><p>the data of it</p>",
+    # anchor text split by a comment, a PI or a CDATA section: html.parser
+    # reports the text around it as two pieces, and SPEC counts each
+    # piece's linked characters on its own (6 here, not 7)
+    b"<p><a href=/x>foo <!-- c --> bar</a> the of it</p>",
+    b"<p><a href=/x>foo <?pi?> bar</a> the of it</p>",
+    b"<p><a href=/x>foo <![CDATA[q]]> bar</a> the of it</p>",
 ]
 
 

@@ -186,7 +186,7 @@ def test_unparseable_staging_marker_raises(spark, tmp_path):
 
 def test_data_location_override(spark, tmp_path):
     """run_extract(data_location=...) sends the DATA rows through the table
-    layer to a separate location (iceberg: the day a jar appears) while
+    layer to a separate location while
     manifests/lineage stay under out_dir; resume still works."""
     from ocr_spark.operators.extract import extract_pages
     from ocr_spark.operators.runner import Manifest, read_lineage, run_extract

@@ -1,12 +1,14 @@
-"""The text scan (``_text_blocks`` over ``_fast_tokens``) vs the full parse.
+"""The text scan (``_text_blocks``) vs the full parse.
 
 The text product reads two fields of each block, its text and its linked
-characters. Whenever the tokenizer answers, ``_text_blocks`` must give
-exactly those two fields of ``parse_payload``'s blocks (html.parser's),
-over every corpus the fast/slow tests use plus soup aimed at the scan's
-own state (anchors across block tags, skip elements holding blocks,
-upper-case tags, whitespace inside anchors). Spark-free: a tokenizer edit
-is checked here in seconds.
+characters. Whenever the fast tokenizer answers, ``_text_blocks`` over its
+tokens must give exactly those two fields of ``parse_payload``'s blocks
+(html.parser's), over every corpus the fast/slow tests use plus soup aimed
+at the scan's own state (anchors across block tags, skip elements holding
+blocks, upper-case tags, whitespace inside anchors). Over html.parser's
+tokens, both consumers (the scan and the handlers) must give
+``goldenref``'s blocks, which its own html.parser subclass builds from the
+events directly. Spark-free: a tokenizer edit is checked here in seconds.
 """
 
 from __future__ import annotations
@@ -16,9 +18,12 @@ from hypothesis import strategies as st
 
 from ocr_spark import goldenref, spec
 from ocr_spark.html_blocks import (
+    _BlockParser,
     _fast_tokens,
     _payload,
+    _run_handlers,
     _text_blocks,
+    _tokens,
     extract_batch,
     extract_text_batch,
     parse_payload,
@@ -81,6 +86,9 @@ _TEXT_CHUNK = st.one_of(_CHUNK, st.sampled_from([
     "<NOSCRIPT>", "</NOSCRIPT>", "<BR>",
     # whitespace-only and spaced data (inside anchors too)
     "  ", "\n", "\t \n", " a  b ", " ", "　",
+    # constructs html.parser reports no data for, so the text around them
+    # is two data pieces; an entity; a marked section html.parser raises on
+    "<!-- c -->", "<?pi?>", "<![CDATA[q]]>", "&amp;", "</>", "<![xyz[ q ]]>",
 ]))
 
 
@@ -94,6 +102,53 @@ def test_hypothesis_soup_agrees(chunks):
 @given(TAG_SOUP)
 def test_hypothesis_tags_agree(parts):
     _agrees("".join(parts).encode("utf-8"))
+
+
+def _slow_matches_goldenref(html: bytes | None) -> None:
+    """The text scan and the handlers over html.parser's tokens both give
+    ``goldenref``'s ``(text, n_link_chars)`` blocks: the token stream
+    keeps html.parser's data pieces as html.parser reports them."""
+    kind, doc = _payload(html)
+    if kind != "html":
+        return
+    want = [
+        (b["text"], b["n_link_chars"])
+        for b in goldenref.extract_document("u", html, None)["blocks"]
+    ]
+    tokens = _tokens(doc, force_slow=True)
+    assert _text_blocks(tokens) == want, html
+    assert [(b[2], b[3]) for b in _run_handlers(tokens).blocks] == want, html
+
+
+def test_slow_tokens_match_goldenref():
+    from tests.test_properties import _adversarial_corpus
+
+    for html in TRICKY:
+        _slow_matches_goldenref(html)
+    for _, html, _ in _adversarial_corpus():
+        _slow_matches_goldenref(html)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.one_of(st.lists(_TEXT_CHUNK, max_size=30), TAG_SOUP))
+def test_hypothesis_slow_tokens_match_goldenref(parts):
+    _slow_matches_goldenref("".join(parts).encode("utf-8"))
+
+
+def test_piece_separator_reaches_no_handler(monkeypatch):
+    """The empty-name end tag that parts two data pieces is not handed to
+    the handlers: an end tag searches the element stack, so on a deep page
+    every comment would cost O(depth)."""
+    seen = []
+    endtag = _BlockParser.handle_endtag
+    monkeypatch.setattr(
+        _BlockParser, "handle_endtag",
+        lambda h, tag: (seen.append(tag), endtag(h, tag))[1],
+    )
+    parse_payload(
+        b"<div>" * 50 + b"<p>" + b"a <!-- c --> b " * 50 + b"</p>", None
+    )
+    assert seen and "" not in seen
 
 
 def test_mainline_shapes_take_the_scan():
