@@ -41,8 +41,11 @@ together. Do not import goldenref here (and vice versa).
 Scale notes (100 TB design point): per-document parsing is inherently
 sequential Python, but it is embarrassingly parallel across documents and
 amortized per Arrow batch. Each document gets its own tokenizer and
-handler state; no parser object outlives its page. MAX_BLOCKS caps
-pathological documents so a single page can never blow up a task.
+handler state; no parser object outlives its page. A page's token list is
+held whole while its consumer runs, whichever tokenizer made it, so a
+page's parse memory grows with its tag count (tens of bytes per tag, a
+few times its payload size on tag-dense markup). MAX_BLOCKS, MAX_LINKS
+and MAX_TABLE_CELLS cap what a page emits, not its tokens.
 """
 
 from __future__ import annotations
@@ -476,9 +479,12 @@ def _pdf_blocks(obj: dict) -> list[tuple]:
 # same stream instead (:class:`_TokenRecorder`). The differential tests (fast
 # vs forced-slow over the adversarial corpus and hypothesis-generated soup
 # and tags) hold the two tokenizations together. The stream feeds two
-# consumers, neither of which knows which tokenizer made it: the
-# _BlockParser handlers (:func:`_run_handlers`, the full product) and the
-# stackless text scan (:func:`_text_blocks`, the text product).
+# consumers, the _BlockParser handlers (:func:`_run_handlers`, the full
+# product) and the stackless text scan (:func:`_text_blocks`, the text
+# product), with the same rules whichever tokenizer made it. Only a start
+# tag's attribute slot has two forms, the fast tokenizer's raw text (a str)
+# and html.parser's parsed pairs: the handler driver tells them apart by
+# type and parses the str; the text scan reads neither.
 #
 # The tag grammar is one attribute pattern, _ATTR, a strict SUBSET of
 # html.parser's attrfind_tolerant: a name starting with a letter, then
@@ -512,8 +518,9 @@ _SIMPLE_TAG = re.compile(
 )
 
 # tags whose attributes carry frozen-SPEC state (§5 href, §6 metadata): the
-# only fast-token attributes :func:`_run_handlers` parses
-_FAST_ATTR_TAGS = frozenset(("a", "meta", "link"))
+# only attributes :func:`_run_handlers` parses from a fast token and
+# :class:`_TokenRecorder` keeps from html.parser
+_ATTR_TAGS = frozenset(("a", "meta", "link"))
 
 # html.parser gives only <script>/<style> CDATA treatment. A start tag of
 # either, matched exactly as _SIMPLE_TAG matches it.
@@ -612,8 +619,14 @@ def _fast_tokens(decoded: str) -> list | None:
 
 class _TokenRecorder(HTMLParser):
     """html.parser as the fallback tokenizer: its start, start-end, end
-    and data events recorded as :func:`_fast_tokens`' flat list, each
-    tag's attributes already parsed into ``(name, value)`` pairs.
+    and data events recorded as :func:`_fast_tokens`' flat list.
+
+    A start tag's attribute slot holds html.parser's ``(name, value)``
+    list on _ATTR_TAGS and ``()`` on every other tag, never a str:
+    :func:`_run_handlers` parses a str slot as fast-token attribute text
+    (its ``attrs.__class__ is str`` check). The lists no handler reads are
+    dropped at once, so of a page's recorded tokens only those of
+    _ATTR_TAGS hold objects the garbage collector tracks.
 
     html.parser may report two data events in a row (around a comment, a
     PI, a CDATA section, a bogus `<` or `</>`). They stay two pieces,
@@ -625,11 +638,12 @@ class _TokenRecorder(HTMLParser):
         super().__init__(convert_charrefs=True)
         self.tokens: list = [""]
 
-    def handle_starttag(self, tag: str, attrs) -> None:
-        self.tokens += (None, tag, attrs, "", "")
+    def handle_starttag(self, tag: str, attrs, selfclose: str = "") -> None:
+        keep = attrs if tag in _ATTR_TAGS else ()
+        self.tokens += (None, tag, keep, selfclose, "")
 
     def handle_startendtag(self, tag: str, attrs) -> None:
-        self.tokens += (None, tag, attrs, "/", "")
+        self.handle_starttag(tag, attrs, "/")
 
     def handle_endtag(self, tag: str) -> None:
         self.tokens += ("/", tag, "", "", "")
@@ -667,10 +681,11 @@ def _run_handlers(tokens: list) -> _BlockParser:
     the results are left in the returned parser.
 
     A fast token holds its raw attribute text (a ``str``): only that of
-    _FAST_ATTR_TAGS is parsed (the handlers read no others) into
-    html.parser's ``(name, value)`` pairs. _SIMPLE_TAG matched the raw text
-    as _ATTR items, so one _FAST_ATTR ``findall`` reads all of it, and it
-    holds no `&` (charrefs bail), so values need no unescaping.
+    _ATTR_TAGS is parsed (the handlers read no others) into html.parser's
+    ``(name, value)`` pairs, the form a recorded token already holds.
+    _SIMPLE_TAG matched the raw text as _ATTR items, so one _FAST_ATTR
+    ``findall`` reads all of it, and it holds no `&` (charrefs bail), so
+    values need no unescaping.
     """
     h = _BlockParser()
     h.handle_data(tokens[0])
@@ -688,7 +703,7 @@ def _run_handlers(tokens: list) -> _BlockParser:
                     (k.lower(),
                      v[1:-1] if v[:1] in ('"', "'") else v or None)
                     for k, v in _FAST_ATTR.findall(attrs)
-                ] if name in _FAST_ATTR_TAGS else ()
+                ] if name in _ATTR_TAGS else ()
             if selfclose:
                 h.handle_startendtag(name, attrs)
             else:
@@ -710,7 +725,10 @@ def _text_blocks(tokens: list) -> list[tuple[str, int]]:
     State: the open block's text, its linked characters, the skip-element
     depth (SPEC §1 SKIP_TAGS) and the anchor depth. A block tag's start or
     end flushes the open block; the scan stops once MAX_BLOCKS blocks are
-    kept, since none after them can be.
+    kept, since none after them can be. An end tag with an empty name is
+    :class:`_TokenRecorder`'s piece separator: no block, skip or anchor
+    tag, so it only parts two data pieces, and a rule added here for every
+    end tag must skip it.
     """
     block_tags = spec.BLOCK_TAGS
     skip_tags = spec.SKIP_TAGS

@@ -151,6 +151,29 @@ def test_piece_separator_reaches_no_handler(monkeypatch):
     assert seen and "" not in seen
 
 
+def test_recorded_attributes_only_where_read():
+    """html.parser's attribute lists are kept on the tags the handlers
+    read attributes from and dropped elsewhere, so a bailed page's tokens
+    hold no per-tag container; none is a str, which the handler driver
+    would parse as fast-token attribute text."""
+    tokens = _tokens(
+        '<!doctype html><div class="c" id=x><p title=t>a <a href="/y">b</a>'
+        '<meta name=description content="d"/><link rel=canonical href=/c>'
+        "<br clear=all/><img src=i.png></p></div>",
+        force_slow=True,
+    )
+    attrs = {}
+    for closing, name, a, _, _ in zip(*[iter(tokens[1:])] * 5):
+        if not closing:
+            attrs[name] = a
+    assert attrs == {
+        "div": (), "p": (), "br": (), "img": (),
+        "a": [("href", "/y")],
+        "meta": [("name", "description"), ("content", "d")],
+        "link": [("rel", "canonical"), ("href", "/c")],
+    }
+
+
 def test_mainline_shapes_take_the_scan():
     """Guard against the tokenizer silently bailing on the shapes the
     extraction mostly sees: ``gen.bench_pages``' template, a
